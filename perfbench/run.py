@@ -1,6 +1,6 @@
 """Benchmark launcher: one workload, one seed, one fresh engine process.
 
-    python3 perfbench/run.py --workload relational --seed 1 --seconds 2 --trace 0
+    python3 perfbench/run.py --workload relational --seed 1 --seconds 5 --trace 0
 
 Run from the repository root. It generates the seeded input tables under
 ``perfbench/.work/``, starts ``worker.py`` in a session of its own with a

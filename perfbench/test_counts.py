@@ -1,12 +1,12 @@
 """The benchmark's own check that its host-independent counts repeat.
 
 Two traced runs of the same workload and seed must report identical job,
-stage, transferred-row and micro-batch counts; the iterative workload
+stage, transferred-row and micro-batch counts; the operators workload
 must also reproduce the per-query job counts of k-means (18) and k-hop
 BFS (21). Each case starts two engine processes (about a minute)::
 
     python3 -m pytest perfbench/test_counts.py -q
-    python3 -m pytest perfbench/test_counts.py -q -k iterative
+    python3 -m pytest perfbench/test_counts.py -q -k operators
 """
 
 from __future__ import annotations
@@ -45,6 +45,6 @@ def test_counts_repeat(workload):
     for key in REPEATING:
         assert first[key] == second[key], (key, first[key], second[key])
     assert first["spark.jobs"] > 0
-    if workload == "iterative":
+    if workload == "operators":
         for key, jobs in EXPECTED_JOBS.items():
             assert first[key] == jobs, (key, first[key])

@@ -57,6 +57,7 @@ class Run:
         self.rng = random.Random(args.seed)
         self.attempted = 0
         self.failures: list[str] = []
+        self.query_walls: dict[str, list[float]] = {}
         self.tracer = None
 
     # -- set-up ------------------------------------------------------------
@@ -108,7 +109,12 @@ class Run:
 
     def one_pass(self) -> float:
         order = self.rng.sample(self.queries, len(self.queries))
-        return sum(self.run_query(q)[0] for q in order)
+        total = 0.0
+        for q in order:
+            wall = self.run_query(q)[0]
+            self.query_walls.setdefault(q, []).append(wall)
+            total += wall
+        return total
 
     def traced_pass(self) -> tuple[float, dict]:
         tr, probe = self.tracer, self.probe
@@ -169,6 +175,7 @@ class Run:
 
         _log("oracle done")
         self.one_pass()  # warm + verify, untimed
+        self.query_walls.clear()
         _log("warm pass done")
         walls, traced, layers = [], [], []
         if self.a.trace:
@@ -181,7 +188,8 @@ class Run:
                 w, pm = self.traced_pass()
                 traced.append(w)
                 layers.append(pm)
-        out = {"pass_walls": walls, "setups": self.setups, "cold": self.cold}
+        out = {"pass_walls": walls, "query_walls": self.query_walls,
+               "setups": self.setups, "cold": self.cold}
         if self.a.trace:
             keys = sorted({k for pm in layers for k in pm})
             out["traced_walls"] = traced

@@ -5,8 +5,10 @@ process. README.md in this directory says why each list was chosen.
 """
 
 WORKLOADS: dict[str, tuple[str, ...]] = {
-    # BASELINE q2/q3/q5/q7/q8/q10: scans, joins, windows and text
-    # aggregates; no eager loops, small results.
+    # BASELINE q2/q3/q5/q7/q8/q10 (scans, joins, windows, text
+    # aggregates; small results) and the streaming replay of the same
+    # sessionization q_sessionize computes in batch: file writes,
+    # checkpoints and state.
     "relational": (
         "q_groupagg_pricing",
         "q_join_orders_customer",
@@ -14,22 +16,15 @@ WORKLOADS: dict[str, tuple[str, ...]] = {
         "q_window_rank",
         "q_wordcount",
         "q_sessionize",
+        "q_stream_session_window",
     ),
-    # Eager iterative operators: k-means (operators.clustering) and
-    # frontier BFS (operators.graph); the per-job floor dominates.
-    "iterative": (
+    # The engine's own operators: eager k-means (operators.clustering)
+    # and frontier BFS (operators.graph) loops, where the per-job floor
+    # dominates, and the pandas-UDF cosine top-k (operators.similarity).
+    "operators": (
         "q_kmeans",
         "q_khop_reach",
-    ),
-    # pandas-UDF cosine top-k and the LSH near-dup join, whose large
-    # result exercises the transfer layer.
-    "similarity": (
         "q_similarity_topk",
-        "q_near_dup_lsh",
-    ),
-    # File-replay micro-batch queries with checkpoints and state.
-    "streaming": (
-        "q_stream_session_window",
     ),
 }
 
