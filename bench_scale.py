@@ -260,7 +260,7 @@ def run_graphs(spark: SparkSession, edge_counts: list[int]) -> dict:
     by the fixtures) runs at its intended scale; PageRank/CC run in
     their broadcast-ranks / star regimes."""
     from mapreduce_hw05_spark.operators.graph import (
-        connected_components,
+        connected_components_star,
         kcore_rounds,
         label_propagation,
         link_prediction_common_neighbors,
@@ -305,7 +305,7 @@ def run_graphs(spark: SparkSession, edge_counts: list[int]) -> dict:
         row: dict = {"edges": n_edges}
         for name, fn in (
             ("triangle_count", lambda e: triangle_count(e)),
-            ("connected_components", lambda e: connected_components(e)),
+            ("connected_components", lambda e: connected_components_star(e)),
             ("pagerank", lambda e: pagerank(e, iterations=10)),
             ("label_propagation", lambda e: label_propagation(undirected(e), rounds=4)),
             ("sssp", _sssp),
@@ -354,7 +354,7 @@ def run_copurchase(spark: SparkSession, scales: list[int]) -> dict:
     path-2 volume is single-node infeasible (triangle/link-pred past
     x10; a cluster spreads the salted tasks, one machine's disk can't)."""
     from mapreduce_hw05_spark.operators.graph import (
-        connected_components,
+        connected_components_star,
         cooccurrence_edges_min_support,
         copurchase_edges,
         kcore_rounds,
@@ -419,7 +419,7 @@ def run_copurchase(spark: SparkSession, scales: list[int]) -> dict:
 
         for name, fn in (
             ("triangle_count", lambda e: triangle_count(e)),
-            ("connected_components", lambda e: connected_components(e)),
+            ("connected_components", lambda e: connected_components_star(e)),
             ("pagerank", lambda e: pagerank(e, iterations=10)),
             ("label_propagation", lambda e: label_propagation(undirected(e), rounds=4)),
             ("sssp", _sssp),

@@ -261,26 +261,38 @@ def kmeans(
         # sum(inertia) are that CLUSTER's totals — read them off pos 0.
         rows = (
             partials.select(
-                "cluster", "cnt", "inertia", F.posexplode("sumvec")
+                "cluster",
+                "cnt",
+                "inertia",
+                F.size("sumvec").alias("n"),
+                F.posexplode("sumvec"),
             )
             .groupBy("cluster", "pos")
             .agg(
                 F.sum("cnt").alias("cnt"),
                 F.sum("col").alias("s"),
                 F.sum("inertia").alias("inertia"),
+                F.min("n").alias("n_min"),
+                F.max("n").alias("n_max"),
             )
             # model-sized: exactly k × dim rows by construction
             .collect()
         )
         # Fail loudly on a malformed partial (the logreg-guard analog):
         # every batch emits all k clusters × dim positions, so the reduce
-        # must return exactly k×dim groups whenever any batch ran.
-        if rows and len(rows) != centroids.shape[0] * dim:
+        # must return exactly k×dim groups whenever any batch ran, and
+        # every partial feeding a group must carry exactly dim elements
+        # — one ragged batch among full ones leaves the group count
+        # intact and would otherwise skew those positions' sums.
+        if rows and (
+            len(rows) != centroids.shape[0] * dim
+            or any(r["n_min"] != dim or r["n_max"] != dim for r in rows)
+        ):
             raise ValueError(
                 f"kmeans: centroid reduce returned {len(rows)} "
                 f"(cluster, pos) groups, expected k*dim="
-                f"{centroids.shape[0] * dim} — a batch partial emitted a "
-                "malformed sumvec array"
+                f"{centroids.shape[0] * dim} of {dim}-element partials — "
+                "a batch partial emitted a malformed sumvec array"
             )
         if inertia_out is not None:
             inertia_out.append(

@@ -12,6 +12,12 @@ Scale: each PageRank iteration is one shuffle on dst (plus the rank join
 on src). ``links`` is partitioned once on src and reused every iteration;
 ranks are the only moving state. Skewed hub nodes are handled by AQE
 skew-join splitting.
+
+Every iterative operator ends a round with :func:`_observed_checkpoint`:
+the round's convergence metrics ride the checkpoint job as an
+Observation, so a round costs one job whatever it measures. Each loop
+keeps its own control flow — the loops carry different state (BFS keeps
+per-hop frames, PageRank carries dangling mass).
 """
 
 from __future__ import annotations
@@ -23,6 +29,34 @@ from pyspark.sql import functions as F
 # (~2 M × 16 B ≈ 32 MB serialized — comfortably inside executor memory);
 # larger graphs use the shuffled-join path.
 _PAGERANK_BROADCAST_NODE_LIMIT = 2_000_000
+
+
+def _observed_checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """``localCheckpoint()`` ``df`` with ``metrics`` (aggregate Columns)
+    riding the same job as an Observation → (checkpointed frame, metric
+    values). With no metrics it only checkpoints: ``observe`` needs at
+    least one expression."""
+    if not metrics:
+        return df.localCheckpoint(), {}
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint()
+    return df, obs.get
+
+
+def _checksum(*cols: str) -> tuple:
+    """The (count, Σ xxhash64) fixpoint checksum pair over ``cols``.
+
+    Two consecutive rounds with equal pairs are taken as equal tables. A
+    changed table keeps its count and hash-sum only by a 64-bit hash
+    collision — about 2⁻⁶⁴ per round — so an early exit on this pair
+    matches running every round except with that probability. The sum
+    accumulates in ``decimal(38,0)``: a sum of int64 hashes overflows
+    BIGINT.
+    """
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
+    )
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -68,6 +102,7 @@ def pagerank(
     damping: float = 0.85,
     tol: float | None = None,
     iterations_out: list | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list (src, dst) → (node, rank).
 
@@ -78,8 +113,15 @@ def pagerank(
     then acts as the cap). The delta rides the same per-iteration
     Observation as the dangling mass — one extra node-sized join, zero
     extra jobs. Pass ``iterations_out=[]`` to receive the executed
-    iteration count. Dangling-node mass is redistributed uniformly each
-    iteration via a one-row aggregate (the genre's global Counter).
+    iteration count.
+
+    Every iteration computes rank = (1−d)·p + d·(in + D·p), where D is
+    the dangling-node mass (a one-row aggregate — the genre's global
+    Counter) and p the restart distribution: uniform 1/n by default, or
+    1/|S| on the nodes of ``seeds`` (a one-column ``node`` frame) and 0
+    elsewhere — personalized PageRank, the random walk with restart.
+    Seeds outside the graph are ignored; a seed set with no node in the
+    graph raises ``ValueError``.
     """
     # The edge list is usually an unmaterialized DAG (e.g. the co-purchase
     # self-join): persist it first so the setup aggregates and the loop
@@ -107,8 +149,17 @@ def pagerank(
         )
         .groupBy(F.col("_n.node").alias("node"))
         .agg((~F.max("_n.o")).alias("__dangling"))
-        .localCheckpoint()
     )
+    if seeds is None:
+        is_seed = F.lit(True)
+    else:
+        is_seed = F.col("__seed")
+        nodes_flagged = nodes_flagged.join(
+            seeds.select("node").distinct().withColumn("__seed", F.lit(True)),
+            "node",
+            "left",
+        ).withColumn("__seed", F.coalesce("__seed", F.lit(False)))
+    nodes_flagged = nodes_flagged.localCheckpoint()
     # Graph-size scalars for the whole loop, from ONE cache-local agg on
     # the checkpointed node table (r11: this replaces three separate
     # edge-DAG passes — nodes.count(), a dangling anti-join count, and
@@ -116,9 +167,14 @@ def pagerank(
     row = nodes_flagged.agg(
         F.count("*").alias("n"),
         F.sum(F.col("__dangling").cast("long")).alias("d"),
+        F.sum(is_seed.cast("long")).alias("s"),
+        F.sum((is_seed & F.col("__dangling")).cast("long")).alias("sd"),
     ).first()
-    n_nodes, n_dangling = row["n"], row["d"]
-    has_dangling = n_dangling > 0
+    n_nodes, n_seeds = row["n"], row["s"]
+    if not n_seeds:
+        raise ValueError("pagerank: no seed node in the graph")
+    has_dangling = row["d"] > 0
+    p = F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
 
     # The moving state is NODE-sized; links are EDGE-sized. When the rank
     # table fits an executor, broadcast it every iteration and partition
@@ -135,10 +191,11 @@ def pagerank(
     )
     links.count()  # materialize once; reused every iteration
 
-    # Initial uniform ranks read the checkpointed node table (cache-local)
-    # — no separate checkpoint job for a column of constants.
-    ranks = nodes_flagged.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    dangling = n_dangling / n_nodes if has_dangling else 0.0
+    # Initial ranks are p, read off the checkpointed node table
+    # (cache-local) — no separate checkpoint job for a column of
+    # constants; their dangling mass is an exact count × p.
+    ranks = nodes_flagged.select("node", p.alias("rank"))
+    dangling = row["sd"] / n_seeds
     n_iters = 0
     for _ in range(iterations):
         moving = F.broadcast(ranks) if bcast_ranks else ranks
@@ -160,9 +217,9 @@ def pagerank(
             "node",
             "__dangling",
             (
-                F.lit((1.0 - damping) / n_nodes)
+                F.lit(1.0 - damping) * p
                 + F.lit(damping)
-                * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.lit(dangling / n_nodes))
+                * (F.coalesce(F.col("in_mass"), F.lit(0.0)) + F.lit(dangling) * p)
             ).alias("rank"),
         ]
         if tol is not None:
@@ -171,7 +228,6 @@ def pagerank(
                 F.broadcast(prev) if bcast_ranks else prev, "node"
             )
             cols.append(F.col("__prev"))
-        new_ranks = base.select(*cols)
         metrics = []
         if has_dangling:
             metrics.append(
@@ -183,13 +239,9 @@ def pagerank(
             metrics.append(
                 F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("l1_delta")
             )
-        obs = None
-        if metrics:
-            obs = Observation()
-            new_ranks = new_ranks.observe(obs, *metrics)
-        ranks = new_ranks.drop("__dangling", "__prev").localCheckpoint()
+        ranks, got = _observed_checkpoint(base.select(*cols), *metrics)
+        ranks = ranks.select("node", "rank")
         n_iters += 1
-        got = obs.get if obs is not None else {}
         if has_dangling:
             dangling = got["dangling_mass"]  # mass for the NEXT iteration
         if tol is not None and got["l1_delta"] < tol:
@@ -334,13 +386,13 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> DataFrame
     node-sized (never edge-sized), so the only big shuffle per round is
     the edges⋈frontier join on ``src``.
 
-    r12 (guide §2.4, the CC Observation pattern): ONE job per hop — the
-    frontier-emptiness probe rides the fresh-frontier checkpoint as an
-    Observation row count (was a separate ``first()`` job), and the
-    visited set is kept as the plain union of the per-hop CHECKPOINTED
-    frontiers instead of being re-materialized through its own
-    checkpoint every hop (each hop previously re-wrote the entire
-    visited set: 3 jobs and O(|visited|) checkpoint bytes per hop).
+    r12 (guide §2.4): ONE job per hop — the frontier-emptiness probe
+    rides the fresh-frontier checkpoint as an Observation row count (was
+    a separate ``first()`` job), and the visited set is kept as the
+    plain union of the per-hop CHECKPOINTED frontiers instead of being
+    re-materialized through its own checkpoint every hop (each hop
+    previously re-wrote the entire visited set: 3 jobs and O(|visited|)
+    checkpoint bytes per hop).
     The edge list — usually an unmaterialized self-join DAG — is
     persisted up front like pagerank's, so the per-hop expansion scans
     a cache instead of re-running the upstream join every hop (the
@@ -359,14 +411,13 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> DataFrame
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        obs = Observation()
-        fresh = (
-            neighbors.join(seen, "node", "left_anti")
-            .withColumn("hop", F.lit(hop).cast("int"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        fresh, got = _observed_checkpoint(
+            neighbors.join(seen, "node", "left_anti").withColumn(
+                "hop", F.lit(hop).cast("int")
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        if obs.get["n"] == 0:
+        if got["n"] == 0:
             break
         frames.append(fresh)
         frontier = fresh.select("node")
@@ -400,8 +451,8 @@ def connected_components_star(
     two emissions ((v→m) and (u→m)) come from a single ``explode``
     instead of a self-union, which previously recomputed the whole
     large-star subtree once per union branch (Spark does not share
-    subplans across union arms). Convergence check is a one-row
-    (count, hash-sum) aggregate.
+    subplans across union arms). Convergence check is the shared
+    :func:`_checksum` pair over the round's edge set.
 
     Pass ``rounds_out=[]`` to receive the number of rounds executed.
     """
@@ -423,20 +474,9 @@ def connected_components_star(
     )
     e = e0.filter(F.col("u") != F.col("v"))
 
-    _checksum_cols = (
-        F.count("*").alias("n"),
-        # decimal accumulator: a sum of int64 hashes overflows BIGINT
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    )
-
-    def checksum(df: DataFrame):
-        row = df.agg(*_checksum_cols).first()
-        return row["n"], row["h"]
-
-    from pyspark.sql import Observation
     from pyspark.sql import Window as W
 
-    prev = checksum(e)
+    prev = e.agg(*_checksum("u", "v")).first().asDict()
     rounds = 0
     per_node = W.partitionBy("u")
     for _ in range(max_iterations):
@@ -473,29 +513,23 @@ def connected_components_star(
         # so filtering u != v afterwards drops exactly the (v→m) rows
         # where v IS the minimum (self-loops), never a (u→m) row.
         # The convergence checksum rides the checkpoint materialization
-        # as an Observation (r11) — the identical (count, hash-sum) pair
-        # the standalone agg computed, at zero extra jobs per round (the
-        # pagerank dangling-mass pattern); CC rounds are scheduler-bound
-        # at small scale, so halving the jobs per round halves the wall.
-        obs = Observation()
-        small = (
+        # as an Observation (r11) — zero extra jobs per round; CC rounds
+        # are scheduler-bound at small scale, so halving the jobs per
+        # round halves the wall.
+        e, got = _observed_checkpoint(
             large.withColumn("m", F.min("v").over(per_node))
             .select(
                 F.explode(F.array(F.col("v"), F.col("u"))).alias("u"),
                 F.col("m").alias("v"),
             )
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .observe(obs, *_checksum_cols)
-            .localCheckpoint()
+            .distinct(),
+            *_checksum("u", "v"),
         )
-        e = small
         rounds += 1
-        got = obs.get
-        cur = (got["n"], got["h"])
-        if cur == prev:
+        if got == prev:
             break
-        prev = cur
+        prev = got
     if rounds_out is not None:
         rounds_out.append(rounds)
     nodes = e0.select(F.explode(F.array("u", "v")).alias("node")).distinct()
@@ -504,56 +538,6 @@ def connected_components_star(
         "node",
         "left",
     ).select("node", F.coalesce("comp", "node").alias("comp"))
-
-
-def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
-    """Connected components by min-label propagation → (node, comp).
-
-    Each node starts labeled with its own id; every iteration each node
-    takes the min of its label and its neighbors' labels. Converges in
-    O(graph diameter) iterations; the fixpoint is unique, so results are
-    deterministic and hash-checkable against a transitive-closure SQL
-    oracle.
-
-    Convergence detection: labels only ever decrease, so the fixpoint is
-    reached exactly when Σ comp stops changing — a one-row aggregate per
-    iteration (the genre's convergence Counter), strictly cheaper than
-    re-joining old vs new labels to count diffs.
-
-    Scale: one keyed join + one min-aggregate per iteration, lineage
-    truncated with localCheckpoint. For web-scale high-diameter graphs
-    swap in large-star/small-star (Kiveris et al., "Connected Components
-    in MapReduce and Beyond") — same DataFrame machinery, O(log n) rounds.
-    """
-    # Static side partitioned on the join key once (see pagerank); the
-    # per-iteration Σcomp convergence counter rides the checkpoint job as
-    # an Observation metric instead of a second action per iteration.
-    sym = undirected(edges).repartition("src").persist()
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    prev_sum = labels.agg(F.sum("comp")).first()[0]
-    for _ in range(max_iterations):
-        neighbor_labels = sym.join(
-            labels, sym.src == labels.node
-        ).select(F.col("dst").alias("node"), "comp")
-        obs = Observation()
-        labels = (
-            labels.union(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, F.sum("comp").alias("comp_sum"))
-            .localCheckpoint()
-        )
-        new_sum = obs.get["comp_sum"]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    sym.unpersist()
-    return labels
 
 
 def cooccurrence_edges_support(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
@@ -594,10 +578,12 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     subplan — two cache scans), and the loop exits early at the label
     fixpoint: synchronous LPA is a deterministic function of the
     previous label table, so once a round reproduces its input exactly,
-    every remaining round reproduces it too — the result is identical
-    to running all ``rounds`` rounds. Fixpoint detection is the CC
-    (count, Σ xxhash64) checksum pair riding the per-round checkpoint
-    as an Observation — zero extra jobs.
+    every remaining round reproduces it too. Labels are not monotone,
+    so unlike :func:`sssp` the fixpoint test is probabilistic: the
+    shared :func:`_checksum` pair riding the per-round checkpoint (zero
+    extra jobs) can match a changed table only by a hash collision, and
+    the early exit equals running all ``rounds`` rounds except with
+    that ~2⁻⁶⁴-per-round probability.
     """
     edges = edges.persist()
     nodes = edges.select(
@@ -605,11 +591,6 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     ).distinct()
     bcast = nodes.count() <= _PAGERANK_BROADCAST_NODE_LIMIT
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
-    _checksum = (
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a sum of int64 hashes overflows BIGINT
-        F.sum(F.xxhash64("node", "label").cast("decimal(38,0)")).alias("h"),
-    )
     prev = None
     for _ in range(rounds):
         moving = F.broadcast(labels) if bcast else labels
@@ -625,19 +606,15 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             )
             .select(F.col("dst").alias("node"), (-F.col("m.nl")).alias("label"))
         )
-        obs = Observation()
-        labels = (
+        labels, got = _observed_checkpoint(
             labels.select("node", F.col("label").alias("__old"))
             .join(F.broadcast(best) if bcast else best, "node", "left")
-            .select("node", F.coalesce("label", "__old").alias("label"))
-            .observe(obs, *_checksum)
-            .localCheckpoint()
+            .select("node", F.coalesce("label", "__old").alias("label")),
+            *_checksum("node", "label"),
         )
-        got = obs.get
-        cur = (got["n"], got["h"])
-        if cur == prev:
+        if got == prev:
             break
-        prev = cur
+        prev = got
     edges.unpersist()
     return labels
 
@@ -684,26 +661,17 @@ def sssp(edges: DataFrame, seeds: DataFrame, rounds: int = 6) -> DataFrame:
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        obs = Observation()
-        dist = (
-            dist.union(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                # decimal accumulator (the CC-checksum convention): an
-                # int64 sum could wrap at extreme scale and mask a
-                # decrease of exactly 2^64
-                F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
-            )
-            .localCheckpoint()
+        dist, got = _observed_checkpoint(
+            dist.union(relaxed).groupBy("node").agg(F.min("dist").alias("dist")),
+            F.count(F.lit(1)).alias("n"),
+            # decimal accumulator (the _checksum convention): an int64
+            # sum could wrap at extreme scale and mask a decrease of
+            # exactly 2^64
+            F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
         )
-        got = obs.get
-        cur = (got["n"], got["s"])
-        if cur == prev:
+        if got == prev:
             break
-        prev = cur
+        prev = got
     edges.unpersist()
     return dist
 
@@ -750,122 +718,6 @@ def link_prediction_common_neighbors(edges: DataFrame) -> DataFrame:
         "cn",
         jaccard.alias("jaccard"),
     )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 8,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Personalized PageRank: teleport (and dangling) mass returns to a
-    uniform distribution over ``seeds`` (one-column ``node``) instead of
-    all nodes → ``(node, rank)``. The random-walk-with-restart relevance
-    measure for recommendation/local community detection.
-
-    Same regime split as :func:`pagerank` (broadcast the node-sized rank
-    state under the limit, pre-partition edge links once); the loop body
-    differs only in the restart vector: rank = (1−d)·p + d·(in + D·p)
-    with p = 1/|S| on seeds, 0 elsewhere.
-    """
-    edges = edges.persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n_nodes = nodes.count()
-    seeds = seeds.select("node").distinct().persist()
-    n_seeds = seeds.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: empty seed set")
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    bcast_ranks = n_nodes <= _PAGERANK_BROADCAST_NODE_LIMIT
-    links = (
-        edges.join(out_deg, "src")
-        .repartition("dst" if bcast_ranks else "src")
-        .persist()
-    )
-    links.count()
-    dangling_nodes = nodes.join(
-        out_deg, nodes.node == out_deg.src, "left_anti"
-    ).persist()
-    has_dangling = dangling_nodes.count() > 0
-    p_seed = 1.0 / n_seeds
-    flagged = (
-        nodes.join(
-            seeds.withColumn("__seed", F.lit(True)), "node", "left"
-        )
-        .join(
-            out_deg.select(
-                F.col("src").alias("node"), F.lit(True).alias("__has_out")
-            ),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce(F.col("__seed"), F.lit(False)).alias("__seed"),
-            F.col("__has_out").isNull().alias("__dangling"),
-        )
-        .localCheckpoint()
-    )
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("__seed"), F.lit(p_seed)).otherwise(F.lit(0.0)).alias(
-            "rank"
-        ),
-    ).localCheckpoint()
-    dangling = 0.0
-    if has_dangling:
-        dangling = (
-            ranks.join(dangling_nodes, ranks.node == dangling_nodes.node)
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
-        )
-    for _ in range(iterations):
-        moving = F.broadcast(ranks) if bcast_ranks else ranks
-        contribs = (
-            links.join(moving, links.src == moving["node"])
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-            .withColumnRenamed("dst", "node")
-        )
-        base = flagged.join(
-            F.broadcast(contribs) if bcast_ranks else contribs, "node", "left"
-        )
-        p_v = F.when(F.col("__seed"), F.lit(p_seed)).otherwise(F.lit(0.0))
-        new_ranks = base.select(
-            "node",
-            "__dangling",
-            (
-                F.lit(1.0 - damping) * p_v
-                + F.lit(damping)
-                * (
-                    F.coalesce(F.col("in_mass"), F.lit(0.0))
-                    + F.lit(dangling) * p_v
-                )
-            ).alias("rank"),
-        )
-        obs = None
-        if has_dangling:
-            obs = Observation()
-            new_ranks = new_ranks.observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.when(F.col("__dangling"), F.col("rank"))),
-                    F.lit(0.0),
-                ).alias("dangling_mass"),
-            )
-        ranks = new_ranks.drop("__dangling").localCheckpoint()
-        if obs is not None:
-            dangling = obs.get["dangling_mass"]
-    links.unpersist()
-    dangling_nodes.unpersist()
-    seeds.unpersist()
-    edges.unpersist()
-    return ranks
 
 
 def hits(

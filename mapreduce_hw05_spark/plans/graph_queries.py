@@ -164,7 +164,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# g-4 — connected components (min-label propagation; SQL-checkable via
+# g-4 — connected components (large-star/small-star; SQL-checkable via
 # DuckDB recursive-CTE transitive closure on the thresholded graph)
 # --------------------------------------------------------------------------
 
@@ -199,9 +199,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     al.) — O(log n) rounds regardless of diameter, the 100-TB-safe CC
     algorithm; the oracle materializes the transitive closure recursively
     — different algorithms, identical answer, which is the point of the
-    check. (Min-label propagation remains available as
-    ``operators.graph.connected_components`` and is differential-tested
-    against this variant.)
+    check.
     """
     from mapreduce_hw05_spark.operators.graph import (
         connected_components_star,
@@ -862,17 +860,13 @@ def q_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendations and local community detection.
 
     8 fixed iterations, d = 0.85, restart (and dangling) mass returned
-    to the uniform seed distribution (operators.graph
-    personalized_pagerank — broadcast-rank regime with the same
-    edge-partitioned iteration body as PageRank). Ranks round to 9
-    decimals before the cut, node id tiebreaks, zero-mass nodes drop on
-    both sides; the oracle unrolls the identical recurrence as chained
-    CTEs.
+    to the uniform seed distribution (``operators.graph.pagerank`` with
+    ``seeds`` — the PageRank iteration body with the seed restart
+    vector). Ranks round to 9 decimals before the cut, node id
+    tiebreaks, zero-mass nodes drop on both sides; the oracle unrolls
+    the identical recurrence as chained CTEs.
     """
-    from mapreduce_hw05_spark.operators.graph import (
-        cooccurrence_edges_min_support,
-        personalized_pagerank,
-    )
+    from mapreduce_hw05_spark.operators.graph import cooccurrence_edges_min_support
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = undirected(cooccurrence_edges_min_support(li, 2))
@@ -881,7 +875,7 @@ def q_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("node") % 97 == 0)
         .distinct()
     )
-    ranks = personalized_pagerank(edges, seeds, iterations=8, damping=0.85)
+    ranks = pagerank(edges, iterations=8, damping=0.85, seeds=seeds)
     r9 = F.round(F.col("rank"), 9)
     return (
         ranks.select(lng(F.col("node")).alias("node"), r9.alias("rank"))

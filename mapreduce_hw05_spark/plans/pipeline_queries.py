@@ -5,7 +5,8 @@ canonicalization, and an inverted-index build.
 These complete the pipeline story beyond per-op contracts: score → filter,
 overlap → drop, pair → cluster → keep-one-representative, token → postings.
 All stay Catalyst-side; the only iteration (cluster closure) reuses the
-checkpointed min-label propagation from operators.graph.
+checkpointed large-star/small-star connected components from
+operators.graph.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_hw05_spark.operators.graph import connected_components
+from mapreduce_hw05_spark.operators.graph import connected_components_star
 from mapreduce_hw05_spark.operators.text import tokenize, word_shingles
 from mapreduce_hw05_spark.plans.common import (
     lng,
@@ -250,16 +251,16 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the step pair-listing queries stop short of: A≈B and B≈C must
     drop {B, C} even when A≉C directly. Scale: pair generation is the LSH
-    path (never all-pairs), components run min-label propagation with
-    per-iteration checkpointing (O(cluster-diameter) rounds — near-dup
-    clusters are shallow), and the final agg is one shuffle on comp.
+    path (never all-pairs), components run large-star/small-star rounds
+    with per-round checkpointing (O(log n) rounds whatever the cluster
+    diameter), and the final agg is one shuffle on comp.
     """
     docs = load_table(spark, sf_dir, "documents")
     # ADVICE r11: no pre-spread — lsh_jaccard_pairs applies the
     # spread_small gate internally since r11.
     pairs = lsh_jaccard_pairs(docs, 0.8)
     edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    comps = connected_components(edges)
+    comps = connected_components_star(edges)
     return comps.groupBy(F.col("comp").alias("keep_doc_id")).agg(
         F.count("*").alias("cluster_size"),
         lng(F.count("*") - 1).alias("n_dropped"),
@@ -869,7 +870,7 @@ def q_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ADVICE r11: no pre-spread — lsh_jaccard_pairs spreads internally.
     pairs = lsh_jaccard_pairs(docs, 0.8)
     edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    comps = connected_components(edges)
+    comps = connected_components_star(edges)
     members = comps.join(
         docs.select("doc_id", "n_chars", "lang"),
         comps.node == F.col("doc_id"),

@@ -738,25 +738,33 @@ def test_available_now_trigger_drains_and_stops(spark, tmp_path):
 
 
 def test_star_cc_matches_min_label_on_fixture(spark):
-    """Two independent CC algorithms (large/small-star vs min-label
-    propagation) must produce identical component labelings on the
-    co-purchase graph."""
+    """Large/small-star CC must produce the labeling of a pure-Python
+    min-label propagation over the same co-purchase edges — two
+    independent algorithms, one answer."""
     from mapreduce_hw05_spark.operators.graph import (
-        connected_components,
         connected_components_star,
         cooccurrence_edges_min_support,
     )
 
     li = load_table(spark, SF_DIR_MED, "lineitem")
     edges = cooccurrence_edges_min_support(li, 2).persist()
+    pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     star = {
         r["node"]: r["comp"] for r in connected_components_star(edges).collect()
     }
-    label = {
-        r["node"]: r["comp"] for r in connected_components(edges).collect()
-    }
     edges.unpersist()
-    assert star == label
+    # min-label reference: every node takes the min label of its
+    # neighborhood until no label changes
+    label = {v: v for e in pairs for v in e}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in pairs:
+            m = min(label[a], label[b])
+            if label[a] != m or label[b] != m:
+                label[a] = label[b] = m
+                changed = True
+    assert pairs and star == label
 
 
 def test_star_cc_keeps_self_loop_only_nodes(spark):
@@ -1238,6 +1246,42 @@ def test_kmeans_combiner_malformed_partial_raises(spark):
     init = np.stack([[0.0, 0.0], [10.0, 1.0]])
     try:
         clustering._centroid_update_partials = ragged
+        with pytest.raises(ValueError, match="malformed sumvec"):
+            clustering.kmeans(emb, k=2, iterations=1, init=init)
+    finally:
+        clustering._centroid_update_partials = real
+
+
+def test_kmeans_combiner_one_ragged_batch_raises(spark):
+    """Only ONE batch partial is ragged: the other batches still fill
+    every (cluster, pos) group, so the reduce returns k×dim groups and
+    only the per-partial sumvec size check can catch it."""
+    import numpy as np
+    import pytest
+    from pyspark.sql import functions as F
+
+    from mapreduce_hw05_spark.operators import clustering
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    ).repartition(4)
+    real = clustering._centroid_update_partials
+
+    def one_ragged(df, centroids, vec_col):
+        out = real(df, centroids, vec_col)
+        # cluster 0's partial from partition 0's batch only
+        return out.withColumn(
+            "sumvec",
+            F.when(
+                (F.col("cluster") == 0) & (F.spark_partition_id() == 0),
+                F.slice("sumvec", 1, centroids.shape[1] - 1),
+            ).otherwise(F.col("sumvec")),
+        )
+
+    init = np.stack([[0.0, 0.0], [10.0, 1.0]])
+    try:
+        clustering._centroid_update_partials = one_ragged
         with pytest.raises(ValueError, match="malformed sumvec"):
             clustering.kmeans(emb, k=2, iterations=1, init=init)
     finally:

@@ -62,6 +62,73 @@ def test_pagerank_dangling_mass_redistributed(spark):
     assert by_node[2] > by_node[4]
 
 
+#: directed graph with a dangling node (5 has no out-edges)
+_PPR_EDGES = [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (2, 5)]
+
+
+def _python_ppr(edges, seeds, iterations, d=0.85):
+    """Power iteration of rank = (1−d)·p + d·(in + D·p), with p uniform
+    over ``seeds`` and D the mass on nodes without out-edges."""
+    nodes = {v for e in edges for v in e}
+    out = {v: [t for s, t in edges if s == v] for v in nodes}
+    p = {v: (1.0 / len(seeds) if v in seeds else 0.0) for v in nodes}
+    r = dict(p)
+    for _ in range(iterations):
+        dangling = sum(r[v] for v in nodes if not out[v])
+        in_mass = {v: 0.0 for v in nodes}
+        for s in nodes:
+            for t in out[s]:
+                in_mass[t] += r[s] / len(out[s])
+        r = {
+            v: (1 - d) * p[v] + d * (in_mass[v] + dangling * p[v])
+            for v in nodes
+        }
+    return r
+
+
+@pytest.mark.parametrize("seeds", [(1,), (2, 5)])
+def test_seeded_pagerank_matches_python_power_iteration(spark, seeds):
+    """Seeded (personalized) PageRank on a graph with a dangling node —
+    the dangling mass returns to the seeds, not to every node. (2, 5)
+    includes the dangling node itself, so the initial dangling mass is
+    non-zero."""
+    edges = spark.createDataFrame(_PPR_EDGES, "src long, dst long")
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "node long")
+    got = {
+        r["node"]: r["rank"]
+        for r in pagerank(edges, iterations=6, seeds=seed_df).collect()
+    }
+    want = _python_ppr(_PPR_EDGES, set(seeds), 6)
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], rel=0, abs=1e-12), v
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_seeded_pagerank_all_seeds_equals_uniform(spark):
+    """Every node a seed makes the restart vector uniform 1/n."""
+    edges = spark.createDataFrame(_PPR_EDGES, "src long, dst long")
+    all_nodes = spark.createDataFrame(
+        [(v,) for v in range(1, 6)], "node long"
+    )
+    seeded = {
+        r["node"]: r["rank"]
+        for r in pagerank(edges, iterations=6, seeds=all_nodes).collect()
+    }
+    uniform = {
+        r["node"]: r["rank"] for r in pagerank(edges, iterations=6).collect()
+    }
+    assert seeded.keys() == uniform.keys()
+    for v in uniform:
+        assert abs(seeded[v] - uniform[v]) <= 1e-12, v
+
+
+def test_seeded_pagerank_empty_seed_set_raises(spark):
+    edges = spark.createDataFrame(_PPR_EDGES, "src long, dst long")
+    with pytest.raises(ValueError, match="no seed node"):
+        pagerank(edges, seeds=spark.createDataFrame([], "node long"))
+
+
 def test_kmeans_inertia_monotone_decreasing(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     inertias = []

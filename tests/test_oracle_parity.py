@@ -37,7 +37,15 @@ _SWEEP_WORKERS = 4
 
 
 @pytest.fixture(scope="session")
-def parity_results(spark, oracle):
+def parity_results(request, spark, oracle):
+    # Sweep only the contracts this session collected, so
+    # ``pytest -k q_ppr_seeds`` runs one contract; a full run collects
+    # (and sweeps) every one.
+    collected = {
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "originalname", None) == "test_oracle_parity"
+    }
     local = threading.local()
 
     def run(name: str):
@@ -74,10 +82,11 @@ def parity_results(spark, oracle):
         except Exception as ex:
             return [f"EXCEPTION {type(ex).__name__}: {ex}"]
 
-    seq = [n for n in sorted(ORACLES)
+    names = sorted(collected)
+    seq = [n for n in names
            if QUERIES[n].__module__.endswith("streaming_queries")
            or n in _DATA_SOURCE_CONTRACTS]
-    pooled = [n for n in sorted(ORACLES) if n not in set(seq)]
+    pooled = [n for n in names if n not in set(seq)]
     results = {n: run_on_root(n) for n in seq}
     with ThreadPoolExecutor(max_workers=_SWEEP_WORKERS) as pool:
         results.update(dict(pool.map(run, pooled)))
