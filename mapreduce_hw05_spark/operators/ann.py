@@ -1,5 +1,5 @@
 """IVF-style approximate nearest neighbor search (the 100-TB scale path
-for similarity search, complementing the broadcast brute-force kernel in
+for similarity search, complementing the exact search in
 ``operators.similarity``).
 
 Index structure = coarse quantization: train k centroids (k-means),
@@ -11,12 +11,11 @@ exact search).
 Physical plan: reference bucketing and probe routing are narrow
 mapInPandas kernels against a broadcast (k × dim) centroid matrix —
 genuinely scalar state. The per-bucket search is a ``cogroup``
-(probe-routes ⋈ inverted-list, both hash-partitioned on bucket id) +
-``applyInPandas`` BLAS kernel: the only shuffle is on bucket id, and no
-executor ever holds more than one inverted list — this is what replaces
-the driver-side reference collect when the corpus outgrows executor
-memory. Final global/per-probe top-k is a window over the (tiny)
-candidate union.
+(probe-routes ⋈ inverted-list, both hash-partitioned on bucket id) that
+runs the exact search's shared tile kernel
+(``similarity._cogroup_search``): the only shuffle is on bucket id, and
+no executor ever holds more than one inverted list. Final
+global/per-probe top-k is a window over the (tiny) candidate union.
 """
 
 from __future__ import annotations
@@ -28,6 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_hw05_spark.operators.clustering import assign_clusters
+from mapreduce_hw05_spark.operators.similarity import (
+    _PAIR_SCHEMA,
+    _cogroup_search,
+    _empty_pairs,
+    _l2_normalize,
+)
 
 _ROUTE_SCHEMA = T.StructType(
     [
@@ -36,21 +41,6 @@ _ROUTE_SCHEMA = T.StructType(
         T.StructField("probe_vec", T.ArrayType(T.FloatType())),
     ]
 )
-
-_CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("id1", T.LongType()),
-        T.StructField("id2", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ]
-)
-
-
-def _l2n(mat: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return mat / norms
-
 
 def route_probes(
     probe: DataFrame,
@@ -63,14 +53,14 @@ def route_probes(
     (bucket, probe). Centroid ranking uses cosine (normalized dot) so
     routing agrees with the search metric."""
     spark = probe.sparkSession
-    bc = spark.sparkContext.broadcast(_l2n(centroids.astype(np.float64)))
+    bc = spark.sparkContext.broadcast(_l2_normalize(centroids.astype(np.float64)))
 
     def kernel(batches):
         C = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = _l2n(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            V = _l2_normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
             sims = V @ C.T  # (batch, k)
             # top-nprobe buckets per row, deterministic tiebreak on bucket id
             order = np.lexsort(
@@ -113,43 +103,10 @@ def ivf_knn_candidates(
         F.col(id_col).alias("ref_id"),
         F.col(vec_col).alias("ref_vec"),
     )
-
-    def search(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
-                {"id1": np.int64, "id2": np.int64, "sim": np.float64}
-            )
-        P = _l2n(np.stack(left["probe_vec"].to_numpy()).astype(np.float64))
-        R = _l2n(np.stack(right["ref_vec"].to_numpy()).astype(np.float64))
-        pids = left["probe_id"].to_numpy(dtype=np.int64)
-        rids = right["ref_id"].to_numpy(dtype=np.int64)
-        sims = P @ R.T
-        out_id1, out_id2, out_sim = [], [], []
-        for row, pid in enumerate(pids):
-            mask = rids > pid if mode == "pairs" else rids != pid
-            cand_ids, cand_sims = rids[mask], sims[row, mask]
-            if cand_ids.size == 0:
-                continue
-            order = np.lexsort((cand_ids, -np.round(cand_sims, 6)))[:k]
-            out_id1.append(np.full(order.size, pid, dtype=np.int64))
-            out_id2.append(cand_ids[order])
-            out_sim.append(cand_sims[order])
-        if not out_id1:
-            return pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
-                {"id1": np.int64, "id2": np.int64, "sim": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "id1": np.concatenate(out_id1),
-                "id2": np.concatenate(out_id2),
-                "sim": np.concatenate(out_sim),
-            }
-        )
-
     return (
         routed.groupby("bucket")
         .cogroup(ref_bucketed.groupby("bucket"))
-        .applyInPandas(search, schema=_CAND_SCHEMA)
+        .applyInPandas(_cogroup_search(k=k, mode=mode), schema=_PAIR_SCHEMA)
     )
 
 
@@ -236,10 +193,8 @@ def sign_lsh_pairs(
 
     def search(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
-            return pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
-                {"id1": np.int64, "id2": np.int64, "sim": np.float64}
-            )
-        V = _l2n(np.stack(pdf["vec"].to_numpy()).astype(np.float64))
+            return _empty_pairs()
+        V = _l2_normalize(np.stack(pdf["vec"].to_numpy()).astype(np.float64))
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         order = np.argsort(ids)
         V, ids = V[order], ids[order]
@@ -252,6 +207,6 @@ def sign_lsh_pairs(
         )
 
     cands = buckets.groupBy("table", "bucket").applyInPandas(
-        lambda key, pdf: search(pdf), schema=_CAND_SCHEMA
+        lambda key, pdf: search(pdf), schema=_PAIR_SCHEMA
     )
     return cands.groupBy("id1", "id2").agg(F.max("sim").alias("sim"))

@@ -32,11 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _l2n(mat: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return mat / norms
+from mapreduce_hw05_spark.operators.similarity import (
+    _PAIR_SCHEMA,
+    _l2_normalize,
+    _reference_matrix,
+)
 
 
 def train_pq_codebooks(
@@ -52,7 +52,7 @@ def train_pq_codebooks(
     clusters keep their previous centroid (the standard fallback)."""
     X = np.asarray(sample, dtype=np.float64)
     if normalize:
-        X = _l2n(X)
+        X = _l2_normalize(X)
     n, d = X.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
@@ -104,7 +104,7 @@ def pq_encode(
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             if normalize:
-                V = _l2n(V)
+                V = _l2_normalize(V)
             codes = np.empty((len(V), m), dtype=np.int32)
             for j in range(m):
                 Vj = V[:, j * dsub : (j + 1) * dsub]
@@ -202,20 +202,10 @@ def exact_rerank_pairs(
     The id→vector map broadcasts under the same row gate as the
     brute-force kernel (`_reference_matrix`); the shortlist streams
     through mapInPandas with one gather + einsum per Arrow batch."""
-    from mapreduce_hw05_spark.operators.similarity import _reference_matrix
-
     spark = pairs.sparkSession
     ref_ids, ref_mat = _reference_matrix(reference, id_col, vec_col, True)
     lookup = {int(i): n for n, i in enumerate(ref_ids)}
     bc = spark.sparkContext.broadcast((lookup, ref_mat))
-    out_schema = T.StructType(
-        [
-            T.StructField("id1", T.LongType()),
-            T.StructField("id2", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
     def kernel(batches):
         lut, mat = bc.value
         for pdf in batches:
@@ -232,4 +222,4 @@ def exact_rerank_pairs(
                 }
             )
 
-    return pairs.select("id1", "id2").mapInPandas(kernel, schema=out_schema)
+    return pairs.select("id1", "id2").mapInPandas(kernel, schema=_PAIR_SCHEMA)

@@ -1,14 +1,14 @@
 """Semantic deduplication: cluster-then-prune over an embedding column
 (SemDeDup, Abbas et al. 2023 — the scale path for embedding-space dedup).
 
-The all-pairs cosine kernel (``similarity.cosine_pairs_above``) is
-O(n²/batch) against a broadcast reference matrix — exact, but the
-reference side must fit executor memory. SemDeDup bounds the quadratic
-term by k-means clustering first: pairwise work happens only WITHIN a
-cluster, so the cost is Σ|cluster|² and the only shuffle is the cluster
-id. At 100 TB: centroids are a broadcast (k×dim) matrix, assignment is a
-map-only NumPy pass, and no executor ever holds more than one cluster's
-members — the same inverted-list discipline as IVF ANN (operators.ann).
+The exact all-pairs cosine search (``similarity.cosine_pairs_above``:
+one tile kernel on a broadcast or a blocked route) does O(n²) work on
+either route. SemDeDup bounds the quadratic term by k-means clustering
+first: pairwise work happens only WITHIN a cluster, so the cost is
+Σ|cluster|² and the only shuffle is the cluster id. At 100 TB:
+centroids are a broadcast (k×dim) matrix, assignment is a map-only
+NumPy pass, and no executor ever holds more than one cluster's members
+— the same inverted-list discipline as IVF ANN (operators.ann).
 
 Cross-cluster near-duplicates survive by design (SemDeDup's documented
 recall trade for tractability); raise k to shrink clusters, or chain

@@ -1,26 +1,29 @@
-"""Vector-similarity operators: brute-force cosine top-k (broadcast kernel),
+"""Vector-similarity operators: exact cosine top-k / threshold search,
 kNN, and MinHash-LSH near-dedup support (SURVEY §2.11 llm-2/3/7, §4 item 2).
 
 Physical strategy
 -----------------
 Per-row vector math must NOT go through Catalyst higher-order functions
 (``zip_with``+``aggregate`` measured ~40× slower than a NumPy kernel at
-2000×64, BASELINE.md q11). Instead:
+2000×64, BASELINE.md q11). Every exact cosine search instead runs ONE
+tile kernel, :func:`_tile_search` (chunked float64 ``P @ R.T`` BLAS
+calls, then a threshold filter or a vectorized per-row top-k), on one of
+two routes:
 
-- The *reference* side (the vectors being searched against) is collected
-  once and broadcast — the same contract as a broadcast hash join's build
-  side. This is the brute-force baseline, valid while the reference side
-  fits in executor memory (≈ millions of 64-dim vectors).
-- The *probe* side streams through ``mapInPandas`` in Arrow batches; each
-  batch does one ``V @ M.T`` BLAS call in float64.
-- At 100-TB scale the reference side no longer fits one executor: the
-  exact kernels COUNT the reference and route past
-  MAX_BROADCAST_REFERENCE_ROWS to ``_blocked_exact_search`` — the same
-  BLAS kernel per hash-partitioned reference block via cogroup,
-  result-identical, still O(n_probe × n_ref) work. To CUT the quadratic
-  work itself (approximate), use LSH banding (``minhash_signatures`` +
-  ``lsh_candidate_pairs`` below) or IVF coarse quantization
-  (operators.ann).
+- *broadcast*: the reference side is collected once, sorted by id and
+  broadcast — the contract of a broadcast hash join's build side — and
+  the probe side streams through ``mapInPandas`` in Arrow batches;
+- *blocked* (:func:`_blocked_exact_search`): the probe × reference
+  cross product is hash-tiled into (block, slice) cogroups, each tile
+  searched by :func:`_cogroup_search` — result-identical, still
+  O(n_probe × n_ref) work, but no executor holds the whole reference.
+  IVF's inverted lists (operators.ann) run the same cogroup function.
+
+One counted router, :func:`_exact_search`, COUNTs the reference and
+routes past MAX_BROADCAST_REFERENCE_ROWS to the blocked route. To CUT
+the quadratic work itself (approximate), use LSH banding
+(``minhash_signatures`` + ``lsh_candidate_pairs`` below) or IVF coarse
+quantization (operators.ann).
 
 All similarities are computed in float64 so results agree with a
 double-precision SQL oracle to ~1e-15 (round-to-6 is then hash-stable).
@@ -297,6 +300,84 @@ def _reference_matrix(
     return ids, _l2_normalize(mat) if normalize else mat
 
 
+def _empty_pairs() -> pd.DataFrame:
+    return pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
+        {"id1": np.int64, "id2": np.int64, "sim": np.float64}
+    )
+
+
+def _tile_search(
+    pids: np.ndarray,
+    P: np.ndarray,
+    rids: np.ndarray,
+    R: np.ndarray,
+    *,
+    k: int | None,
+    threshold: float | None,
+    mode: str,
+    budget: int,
+):
+    """The exact cosine tile kernel behind the broadcast, blocked and
+    IVF searches. ``P`` / ``R`` are float64 (already normalized);
+    ``rids`` MUST be id-ascending so the top-k pick breaks
+    (round(sim,6) DESC) ties by id2 ASC. Probe rows are chunked under
+    ``budget`` bytes of sims (SIMS_CHUNK_BYTES), one ``Pc @ R.T`` each.
+    Threshold mode keeps ``sim >= threshold`` (raw sim) with id2 > id1;
+    top-k mode keeps :func:`_topk_per_row` under the ``pairs``
+    (id2 > id1) or ``knn`` (id2 != id1) mask. Yields (id1, id2, sim)
+    frames."""
+    for s, Pc in _iter_probe_chunks(P, rids.size, budget):
+        sims = Pc @ R.T
+        pc_ids = pids[s : s + Pc.shape[0]]
+        if threshold is not None:
+            hit = (sims >= threshold) & (rids[None, :] > pc_ids[:, None])
+            rows, cols = np.nonzero(hit)
+        else:
+            keep = (
+                rids[None, :] > pc_ids[:, None]
+                if mode == "pairs"
+                else rids[None, :] != pc_ids[:, None]
+            )
+            rows, cols = _topk_per_row(sims, keep, rids, k)
+        if rows.size:
+            yield pd.DataFrame(
+                {"id1": pc_ids[rows], "id2": rids[cols], "sim": sims[rows, cols]}
+            )
+
+
+def _cogroup_search(
+    *,
+    k: int | None = None,
+    threshold: float | None = None,
+    mode: str = "pairs",
+    normalize: bool = True,
+):
+    """The cogroup ``applyInPandas`` function running :func:`_tile_search`
+    on a (``probe_id, probe_vec``) ⋈ (``ref_id, ref_vec``) group pair in
+    any row order — the blocked route's (block, slice) tiles and IVF's
+    inverted lists (``operators.ann.ivf_knn_candidates``)."""
+    budget = SIMS_CHUNK_BYTES  # driver-captured (testable)
+
+    def search(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty or right.empty:
+            return _empty_pairs()
+        rids = right["ref_id"].to_numpy(dtype=np.int64)
+        order = np.argsort(rids, kind="stable")
+        P = np.stack(left["probe_vec"].to_numpy()).astype(np.float64)
+        R = np.stack(right["ref_vec"].to_numpy()[order]).astype(np.float64)
+        if normalize:
+            P, R = _l2_normalize(P), _l2_normalize(R)
+        out = list(
+            _tile_search(
+                left["probe_id"].to_numpy(dtype=np.int64), P, rids[order], R,
+                k=k, threshold=threshold, mode=mode, budget=budget,
+            )
+        )
+        return pd.concat(out, ignore_index=True) if out else _empty_pairs()
+
+    return search
+
+
 def _blocked_exact_search(
     probe: DataFrame,
     reference: DataFrame,
@@ -311,7 +392,7 @@ def _blocked_exact_search(
     n_probe: int | None = None,
 ) -> DataFrame:
     """EXACT distributed brute-force cosine search — the physical
-    strategy the counted routers pick when the reference side exceeds
+    strategy :func:`_exact_search` picks when the reference side exceeds
     :data:`MAX_BROADCAST_REFERENCE_ROWS`.
 
     Shape: a 2-D TILING of the (probe × reference) cross product.
@@ -321,34 +402,26 @@ def _blocked_exact_search(
     row to every block and every reference row to every slice
     (``explode`` over a literal range — a generator in codegen, no
     join; the replication factor IS the algorithm's cost), cogroup both
-    sides on (block, slice), and run the same float64 BLAS kernel per
-    tile with ``applyInPandas``. Until r9 only the reference was tiled,
-    so every cogroup task materialized the ENTIRE probe table as one
-    pandas frame — invisible at fixture scale, an executor OOM at
-    corpus scale; the slice dimension bounds it.
+    sides on (block, slice), and run :func:`_tile_search` per tile
+    (:func:`_cogroup_search`). The slice dimension (r9) bounds each
+    task's probe frame, which was otherwise the whole probe table.
 
-    Result-identical (in IDs) to the broadcast kernel: the (block,
-    slice) tiles PARTITION the cross product, so per-tile threshold
-    filtering distributes trivially (each (id1, id2) pair lands in
-    exactly one tile) and the union of per-tile top-k is a superset of
-    the true per-probe top-k — the caller reduces it with the SAME
-    half-even ``rint(sim*1e6)`` composite key the per-tile pick uses
-    (see :func:`cosine_pairs_topk_per_row`), so a tile-dropped
-    candidate can never outrank a kept one (ADVICE r9). Sims are
-    float64 dot products of the same normalized vectors; GEMM tile
-    shape can drift them one ulp vs the broadcast path, which the
-    rounded top-k key absorbs and which threshold mode documents as a
-    boundary caveat (see SIMS_CHUNK_BYTES). Forced-route identity
-    tests in tests/test_near_dup.py cover self-join AND asymmetric
+    Result-identical (in IDs) to the broadcast route: the (block,
+    slice) tiles PARTITION the cross product, so each threshold pair
+    lands in exactly one tile, and the union of per-tile top-k is a
+    superset of the true per-probe top-k, which :func:`_exact_search`
+    reduces with the per-tile pick's half-even ``rint(sim*1e6)`` key
+    (ADVICE r9). GEMM tile shape can drift sims one ulp vs the
+    broadcast path, which the rounded top-k key absorbs and which
+    threshold mode documents as a boundary caveat (see
+    SIMS_CHUNK_BYTES). Forced-route identity tests in
+    tests/test_near_dup.py cover self-join AND asymmetric
     probe≠reference shapes.
 
     Scale: no executor ever holds more than one reference block plus
     one probe slice (~270 MB + ~134 MB at 64-dim float64, sims matrix
-    chunked separately); the only shuffle is on (block, slice). ``k``
-    xor ``threshold`` selects top-k vs threshold semantics.
+    chunked separately); the only shuffle is on (block, slice).
     """
-    if (k is None) == (threshold is None):
-        raise ValueError("exactly one of k / threshold required")
     if n_probe is None:
         # self-joins (the common case) already counted this side
         n_probe = n_ref if probe is reference else probe.count()
@@ -370,74 +443,86 @@ def _blocked_exact_search(
         F.col(id_col).alias("probe_id"),
         F.col(vec_col).alias("probe_vec"),
     )
-
-    chunk_budget = SIMS_CHUNK_BYTES  # driver-captured (testable)
-
-    def search(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
-            {"id1": np.int64, "id2": np.int64, "sim": np.float64}
-        )
-        if left.empty or right.empty:
-            return empty
-        pids = left["probe_id"].to_numpy(dtype=np.int64)
-        rids = right["ref_id"].to_numpy(dtype=np.int64)
-        P = np.stack(left["probe_vec"].to_numpy()).astype(np.float64)
-        R = np.stack(right["ref_vec"].to_numpy()).astype(np.float64)
-        # id-ascending column order up front: the top-k branch's stable
-        # argsort then yields (round(sim,6) DESC, id2 ASC) for free
-        order = np.argsort(rids, kind="stable")
-        rids, R = rids[order], R[order]
-        if normalize:
-            P, R = _l2_normalize(P), _l2_normalize(R)
-        # probe-row chunking bounds the (chunk × n_block) sims matrix —
-        # see SIMS_CHUNK_BYTES; per-row results make it result-identical
-        out = []
-        for s, Pc in _iter_probe_chunks(P, rids.size, chunk_budget):
-            sims = Pc @ R.T
-            pc_ids = pids[s : s + Pc.shape[0]]
-            if threshold is not None:
-                hit = (sims >= threshold) & (rids[None, :] > pc_ids[:, None])
-                rows, cols = np.nonzero(hit)
-                if rows.size:
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "id1": pc_ids[rows],
-                                "id2": rids[cols],
-                                "sim": sims[rows, cols],
-                            }
-                        )
-                    )
-                continue
-            # Vectorized per-row top-k (r7 item 5 closed the per-probe
-            # loop; r9 swapped the full-row stable argsort for
-            # _topk_per_row's argpartition fast path — PERF.md r9 A/B).
-            # Columns are already id-ascending (see `order` above),
-            # reproducing the exact (round(sim,6) DESC, id2 ASC)
-            # tie-break of the broadcast kernel.
-            keep = (
-                rids[None, :] > pc_ids[:, None]
-                if mode == "pairs"
-                else rids[None, :] != pc_ids[:, None]
-            )
-            rows, picked = _topk_per_row(sims, keep, rids, k)
-            if rows.size:
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "id1": pc_ids[rows],
-                            "id2": rids[picked],
-                            "sim": sims[rows, picked],
-                        }
-                    )
-                )
-        return pd.concat(out, ignore_index=True) if out else empty
-
+    search = _cogroup_search(
+        k=k, threshold=threshold, mode=mode, normalize=normalize
+    )
     return (
         routed.groupby("block", "slice")
         .cogroup(ref_blocked.groupby("block", "slice"))
         .applyInPandas(search, schema=_PAIR_SCHEMA)
     )
+
+
+def _exact_search(
+    probe: DataFrame,
+    reference: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    k: int | None = None,
+    threshold: float | None = None,
+    mode: str = "pairs",
+    normalize: bool = True,
+    n_probe: int | None = None,
+) -> DataFrame:
+    """The exact cosine family's one counted router (``k`` xor
+    ``threshold``): the broadcast route up to
+    MAX_BROADCAST_REFERENCE_ROWS reference rows, the blocked route past
+    it (top-k candidates then get a per-probe window reduce; threshold
+    tiles are already disjoint)."""
+    if (k is None) == (threshold is None):
+        raise ValueError("exactly one of k / threshold required")
+    n_ref = reference.count()  # counted gate: picks the physical strategy
+    if n_ref > MAX_BROADCAST_REFERENCE_ROWS:
+        cands = _blocked_exact_search(
+            probe, reference, n_ref, id_col, vec_col,
+            k=k, threshold=threshold, mode=mode, normalize=normalize,
+            n_probe=n_probe,
+        )
+        if threshold is not None:
+            return cands
+        from pyspark.sql import Window
+
+        # Reduce with the SAME half-even key the per-tile pick packs:
+        # Math.rint and np.rint are both IEEE half-even on the same
+        # float64 product. F.round (HALF_UP) could let a tile-dropped
+        # candidate outrank a kept one at an exact half-integer sim*1e6
+        # (ADVICE r9); rint(sim*1e6) orders like round(sim,6) while
+        # |sim*1e6| < 2**53.
+        w = Window.partitionBy("id1").orderBy(
+            F.rint(F.col("sim") * F.lit(1e6)).desc(), F.col("id2")
+        )
+        return (
+            cands.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .drop("__rn")
+        )
+    # broadcast route: the reference is collected once, sorted
+    # id-ascending and broadcast; every probe Arrow batch runs the tile
+    # kernel in mapInPandas — no shuffle
+    ref_ids, ref_mat = _reference_matrix(
+        reference, id_col, vec_col, normalize, n_ref=n_ref
+    )
+    order = np.argsort(ref_ids, kind="stable")
+    bc = probe.sparkSession.sparkContext.broadcast(
+        (ref_ids[order], ref_mat[order])
+    )
+    budget = SIMS_CHUNK_BYTES  # driver-captured (testable)
+
+    def kernel(batches):
+        rids, R = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            P = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            yield from _tile_search(
+                pdf[id_col].to_numpy(dtype=np.int64),
+                _l2_normalize(P) if normalize else P,
+                rids, R,
+                k=k, threshold=threshold, mode=mode, budget=budget,
+            )
+
+    return probe.mapInPandas(kernel, schema=_PAIR_SCHEMA)
 
 
 def cosine_pairs_topk_per_row(
@@ -475,87 +560,10 @@ def cosine_pairs_topk_per_row(
     window reduction with the identical tie-break) — result-identical,
     forced-route identity tests in tests/test_near_dup.py.
     """
-    spark = probe.sparkSession
-    n_ref = reference.count()  # counted gate: picks the physical strategy
-    if n_ref > MAX_BROADCAST_REFERENCE_ROWS:
-        from pyspark.sql import Window
-
-        cands = _blocked_exact_search(
-            probe,
-            reference,
-            n_ref,
-            id_col,
-            vec_col,
-            k=k,
-            mode=mode,
-            normalize=normalize,
-            n_probe=n_probe,
-        )
-        # Reduce with the SAME half-even key the per-tile pick packs
-        # (np.rint(sim*1e6) — Math.rint is IEEE half-even on the same
-        # float64 product, so keys match bit-for-bit). F.round would be
-        # HALF_UP: at an exact half-integer sim*1e6 a tile-dropped
-        # candidate could outrank a kept one under the other rounding
-        # mode (ADVICE r9). rint(sim*1e6) orders identically to
-        # round(sim,6) while |sim*1e6| < 2**53 (there /1e6 is
-        # injective, hence order-preserving); past that only the rint
-        # key is used anywhere — per-tile fast path, per-tile
-        # fallback, and this reduce all pack the same key (r10
-        # review).
-        w = Window.partitionBy("id1").orderBy(
-            F.rint(F.col("sim") * F.lit(1e6)).desc(), F.col("id2")
-        )
-        return (
-            cands.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-    ref_ids, ref_mat = _reference_matrix(
-        reference, id_col, vec_col, normalize, n_ref=n_ref
+    return _exact_search(
+        probe, reference, id_col, vec_col,
+        k=k, mode=mode, normalize=normalize, n_probe=n_probe,
     )
-    # id-ascending column order up front (same trick as
-    # _blocked_exact_search): the batch-level stable argsort below then
-    # yields (round(sim,6) DESC, id2 ASC) for free
-    order = np.argsort(ref_ids, kind="stable")
-    bc = spark.sparkContext.broadcast((ref_ids[order], ref_mat[order]))
-    chunk_budget = SIMS_CHUNK_BYTES  # driver-captured (testable)
-
-    def kernel(batches):
-        ids_all, mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            probe_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if normalize:
-                vecs = _l2_normalize(vecs)
-            # Chunked batch-level vectorized top-k (VERDICT r8 item 5:
-            # the old per-probe lexsort loop paid ~µs/row of interpreter
-            # overhead). Chunking bounds the (chunk × N) sims matrix —
-            # an unchunked Arrow batch × a cap-sized reference would
-            # materialize hundreds of GB. Columns are id-ascending (see
-            # `order` above), so _topk_per_row reproduces the exact
-            # (round(sim,6) DESC, id2 ASC) tie-break.
-            for s, Vc in _iter_probe_chunks(vecs, ids_all.size, chunk_budget):
-                sims = Vc @ mat.T  # one BLAS call per chunk
-                pc_ids = probe_ids[s : s + Vc.shape[0]]
-                keep = (
-                    ids_all[None, :] > pc_ids[:, None]
-                    if mode == "pairs"
-                    else ids_all[None, :] != pc_ids[:, None]
-                )
-                rows, picked = _topk_per_row(sims, keep, ids_all, k)
-                if not rows.size:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "id1": pc_ids[rows],
-                        "id2": ids_all[picked],
-                        "sim": sims[rows, picked],
-                    }
-                )
-
-    return probe.mapInPandas(kernel, schema=_PAIR_SCHEMA)
 
 
 def global_topk_pairs(pairs: DataFrame, k: int = 20) -> DataFrame:
@@ -815,10 +823,10 @@ def cosine_pairs_above(
     """All unordered pairs (id1 < id2) with cosine ≥ threshold — the
     embedding-space analog of near-dup detection.
 
-    Same broadcast+mapInPandas shape as the top-k kernel; the threshold
+    Same routes and tile kernel as the top-k search; the threshold
     filter happens inside the NumPy batch so only qualifying pairs ever
-    materialize as rows. Counted physical routing: past
-    MAX_BROADCAST_REFERENCE_ROWS the SAME search runs
+    materialize as rows. Counted physical routing: past the cap
+    (MAX_BROADCAST_REFERENCE_ROWS) the SAME search runs
     blocked-and-distributed (``_blocked_exact_search`` with threshold
     semantics — blocks partition id2, so no reduction is needed and each
     qualifying pair is emitted exactly once). Result-identical;
@@ -826,41 +834,7 @@ def cosine_pairs_above(
     APPROXIMATE sub-quadratic search prefer operators.ann (IVF /
     sign-LSH) — this kernel is the exact path.
     """
-    spark = df.sparkSession
-    n_ref = df.count()  # counted gate: picks the physical strategy
-    if n_ref > MAX_BROADCAST_REFERENCE_ROWS:
-        return _blocked_exact_search(
-            df, df, n_ref, id_col, vec_col, threshold=threshold
-        )
-    ref_ids, ref_mat = _reference_matrix(
-        df, id_col, vec_col, normalize=True, n_ref=n_ref
-    )
-    bc = spark.sparkContext.broadcast((ref_ids, ref_mat))
-    chunk_budget = SIMS_CHUNK_BYTES  # driver-captured (testable)
-
-    def kernel(batches):
-        ids_all, mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            probe_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = _l2_normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            # chunked: bounds the (chunk × N) sims matrix (SIMS_CHUNK_BYTES)
-            for s, Vc in _iter_probe_chunks(vecs, ids_all.size, chunk_budget):
-                sims = Vc @ mat.T
-                pc_ids = probe_ids[s : s + Vc.shape[0]]
-                hit = (sims >= threshold) & (ids_all[None, :] > pc_ids[:, None])
-                rows, cols = np.nonzero(hit)
-                if rows.size:
-                    yield pd.DataFrame(
-                        {
-                            "id1": pc_ids[rows],
-                            "id2": ids_all[cols],
-                            "sim": sims[rows, cols],
-                        }
-                    )
-
-    return df.mapInPandas(kernel, schema=_PAIR_SCHEMA)
+    return _exact_search(df, df, id_col, vec_col, threshold=threshold)
 
 
 def l2_normalize_arrow(df: DataFrame, vec_col: str = "embedding") -> DataFrame:

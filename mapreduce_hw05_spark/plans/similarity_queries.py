@@ -643,15 +643,16 @@ def _ann_recall_summary(
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 similar pairs via IVF coarse quantization — the scale path
-    that replaces the broadcast brute-force kernel when the reference
-    side outgrows executor memory. Label-seeded centroids (k=10),
+    that replaces exact brute-force search when the reference side
+    outgrows executor memory. Label-seeded centroids (k=10),
     nprobe=4; candidate generation shuffles only on bucket id; no
     executor holds more than one inverted list.
 
     Hashable shape: recall vs the exact kernel is deterministic at fixed
     seeding, so the contract emits (pair count, recall ≥ 50% at
     nprobe=4/10, sims bounded) and the oracle asserts the constants;
-    the per-pair detail stays covered by the engine recall tests.
+    the per-pair detail stays covered by the engine recall tests and
+    the per-bucket search by tests/test_exact_search_kernel.py.
     """
     from mapreduce_hw05_spark.operators.ann import ivf_knn_candidates
     from mapreduce_hw05_spark.operators.clustering import label_seeded_centroids
@@ -1128,6 +1129,11 @@ def q_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched NumPy kernel scoring the same weights — which must agree on
     every row's predicted class. A drifting literal, a wrong dot
     product, or a mis-batched kernel flips it.
+
+    NULLs follow the oracle: a NULL label is class 0 (``CASE … ELSE 0``)
+    and every row counts in ``n_rows``; a NULL-embedding row has no
+    prediction on either path, so it is left out of training and of
+    the agreement check.
     """
     import numpy as np
     import pandas as pd
@@ -1135,10 +1141,15 @@ def q_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_hw05_spark.operators.logreg import fit_logreg
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", (F.col("label") >= 5).cast("double").alias("y")
+        "vec_id",
+        "embedding",
+        F.when(F.col("label") >= 5, 1.0).otherwise(0.0).alias("y"),
     ).persist()
     try:
-        model = fit_logreg(emb, "embedding", "y", n_iters=20, lr=1.0)
+        model = fit_logreg(
+            emb.filter(F.col("embedding").isNotNull()),
+            "embedding", "y", n_iters=20, lr=1.0,
+        )
         w = [float(v) for v in model["weights"]]
         bias = float(model["bias"])
         margin = F.aggregate(
@@ -1170,13 +1181,19 @@ def q_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                m = x @ w_arr[:-1] + w_arr[-1]
+                has = pdf["embedding"].notna().to_numpy()
+                pred_np = pd.Series(pd.NA, index=pdf.index, dtype="Int64")
+                if has.any():
+                    vecs = pdf["embedding"].to_numpy()[has]
+                    x = np.stack(vecs).astype(np.float64)
+                    pred_np[has] = (x @ w_arr[:-1] + w_arr[-1] > 0).astype(
+                        np.int64
+                    )
                 yield pd.DataFrame(
                     {
                         "actual": pdf["actual"].to_numpy(dtype=np.int64),
-                        "pred_sql": pdf["pred_sql"].to_numpy(dtype=np.int64),
-                        "pred_np": (m > 0).astype(np.int64),
+                        "pred_sql": pdf["pred_sql"].astype("Int64"),
+                        "pred_np": pred_np,
                     }
                 )
 
@@ -1187,7 +1204,11 @@ def q_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             both.groupBy("actual")
             .agg(
                 F.count("*").alias("n_rows"),
-                F.min(F.col("pred_sql") == F.col("pred_np")).alias("__ok"),
+                # null-safe: a NULL-embedding row (both NULL) agrees, a
+                # prediction on one path only does not
+                F.min(F.col("pred_sql").eqNullSafe(F.col("pred_np"))).alias(
+                    "__ok"
+                ),
             )
             .collect()  # driver-sized: one row per class (≤ 2)
         )

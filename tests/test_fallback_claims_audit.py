@@ -111,6 +111,11 @@ REGISTRY: dict[tuple[str, str], str | None] = {
     ("operators/similarity.py", "cosine_pairs_above"): (
         "MAX_BROADCAST_REFERENCE_ROWS"
     ),
+    # the one counted router both public exact kernels call: broadcast
+    # under the cap, blocked past it
+    ("operators/similarity.py", "_exact_search"): (
+        "MAX_BROADCAST_REFERENCE_ROWS"
+    ),
     ("plans/similarity_queries.py", "q_similarity_topk"): (
         "cosine_pairs_topk_per_row"
     ),

@@ -301,6 +301,42 @@ def test_logreg_matches_reference_and_learns(spark):
     assert (diffs <= 1e-12).all(), got["losses"]
 
 
+def test_logreg_score_null_label_and_embedding_match_oracle(spark, tmp_path):
+    """q_logreg_score on the sf0.001 embeddings plus one NULL-label row
+    and one NULL-embedding row must equal its oracle SQL: the NULL label
+    is class 0, both rows count in n_rows, and the NULL-embedding row is
+    left out of the agreement check (paths_agree stays TRUE)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_hw05_spark.plans import ORACLES, QUERIES
+    from tests.conftest import compare_frames
+
+    base = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    top = max(base.column("vec_id").to_pylist())
+    extra = pa.table(
+        {
+            "vec_id": [top + 1, top + 2],
+            "embedding": [[0.5] * len(base.column("embedding")[0]), None],
+            "label": [None, 7],
+        },
+        schema=base.schema,
+    )
+    pq.write_table(pa.concat_tables([base, extra]), tmp_path / "embeddings.parquet")
+
+    got = QUERIES["q_logreg_score"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    want = con.execute(ORACLES["q_logreg_score"]).df()
+    con.close()
+    assert not compare_frames(got, want)
+    assert got["n_rows"].sum() == base.num_rows + 2
+
+
 def test_quantize_error_bounded_by_step(spark):
     """Int8 scalar quantization invariant: every element's reconstruction
     error is ≤ step/2, so per-vector MSE ≤ step²/4 — checked against the
