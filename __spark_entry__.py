@@ -36,5 +36,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted keys → rows-only check."""
+    """DuckDB-equivalent SQL per query; same keys as :func:`queries`."""
     return dict(ORACLES)

@@ -738,27 +738,25 @@ def hits(
 
     Scale: the moving state is node-sized (broadcast under the shared
     PageRank node limit); each half-step is one keyed edge join plus a
-    partial-agg-friendly groupBy, and the normalizing max is a scalar
-    broadcast — two edge-sized shuffles per round, lineage truncated
-    with localCheckpoint.
+    partial-agg-friendly groupBy, and the normalizing max rides each
+    half-step's localCheckpoint as an Observation — two edge-sized
+    shuffles per round, lineage truncated at every half-step.
     """
     edges = edges.persist()
     n_src = edges.select("src").distinct().count()
     bcast = n_src <= _PAGERANK_BROADCAST_NODE_LIMIT
 
     def _normalize(raw: DataFrame, out: str) -> DataFrame:
-        m = raw.agg(F.max("raw").cast("double").alias("m"))
-        return (
-            # one-row: global max
-            raw.crossJoin(F.broadcast(m))
-            .select(
-                "node",
-                F.floor(
-                    F.col("raw").cast("double") / F.col("m")
-                    * F.lit(float(scale))
-                ).cast("long").alias(out),
-            )
-            .localCheckpoint()
+        # The global max rides the checkpoint job, so ``raw`` runs once.
+        raw, got = _observed_checkpoint(
+            raw, F.max("raw").cast("double").alias("m")
+        )
+        return raw.select(
+            "node",
+            F.floor(
+                F.col("raw").cast("double") / F.lit(got["m"])
+                * F.lit(float(scale))
+            ).cast("long").alias(out),
         )
 
     hub = (

@@ -2,7 +2,8 @@
 
 Importing this package populates the registry. Each module binds reusable
 operators to the fixture tables and registers ``(name, fn, oracle_sql)``
-via :mod:`mapreduce_hw05_spark.plans.registry`.
+via :mod:`mapreduce_hw05_spark.plans.registry`; ``QUERIES`` and
+``ORACLES`` keep registration order, i.e. the module import order below.
 """
 
 from mapreduce_hw05_spark.plans import (  # noqa: F401  (import = register)
@@ -28,653 +29,4 @@ from mapreduce_hw05_spark.plans import (  # noqa: F401  (import = register)
 )
 from mapreduce_hw05_spark.plans.registry import ORACLES, QUERIES
 
-#: Frozen round-3 window (what CORRECTNESS_r03.json verified — 50/50
-#: green) — kept for the rotation-coverage test.
-DRIVER_WINDOW_R3 = [
-    # streaming-executed + connectors (the expensive, highest-risk set)
-    "q_stream_stream_join", "q_stream_stream_outer", "q_stream_stream_full",
-    "q_stream_stream_right", "q_stream_session_window", "q_stream_file_sink",
-    "q_stream_exactly_once_cdc", "q_stream_compacted_sink",
-    "q_custom_stream_source", "q_custom_sink_roundtrip",
-    # late-r2 streaming promotions (VERDICT r2 item 2; st-4 flagship first)
-    "q_stream_late_data", "q_stream_sliding", "q_stream_sketch_rollup",
-    # connectors
-    "q_json_roundtrip", "q_orc_roundtrip", "q_xml_roundtrip",
-    "q_permissive_csv", "q_bucketed_join_contract",
-    # iterative / sketch / ML contracts converted in r2
-    "q_near_dup_lsh", "q_ann_ivf_topk", "q_ann_lsh_topk",
-    "q_logreg_train", "q_logreg_score", "q_bpe_merges", "q_bpe_encode",
-    "q_kll_rollup", "q_theta_sketch_ops", "q_pretrain_pipeline",
-    "q_khop_reach", "q_embedding_quantize",
-    # table maintenance
-    "q_compact_small_files", "q_zorder_rewrite", "q_incremental_rollup",
-    "q_profile_events", "q_pit_join",
-    # TPC-H remainder (half)
-    "q_tpch_q5", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9_profit",
-    "q_tpch_q10", "q_tpch_q13",
-    # analytics (half; histogram/iqr/regression demoted to R4 for the
-    # streaming promotions — they are single-agg shapes with local parity)
-    "q_funnel_steps", "q_cohort_retention", "q_event_transitions",
-    # governance (half)
-    "q_redact_pii", "q_k_anonymity", "q_dq_expectations",
-    # time series
-    "q_gapfill_hourly", "q_ohlc_hourly",
-]
-
-
-#: Frozen round-2 window (what CORRECTNESS_r02.json verified) — kept for
-#: the rotation-coverage test.
-DRIVER_WINDOW_R2 = [
-    "q_decimal_exact", "q_approx_distinct",
-    "q_asof_join",
-    "q_dedup_exact", "q_near_dup_jaccard", "q_near_dup_embedding",
-    "q_simhash_near_dup", "q_near_dup_ngram",
-    "q_wordcount", "q_text_stats_by_lang", "q_tfidf_top_terms",
-    "q_language_id", "q_quality_score",
-    "q_similarity_topk", "q_knn_accuracy",
-    "q_array_ops",
-    "q_udf_python", "q_pandas_udf_cosine", "q_grouped_map_zscore",
-    "q_udaf_geomean", "q_udtf_tokens",
-    "q_triangle_count", "q_connected_components", "q_pagerank",
-    "q_kmeans", "q_degree_distribution",
-    "q_csv_roundtrip", "q_partitioned_pruning", "q_custom_datasource",
-    "q_multimodal_features",
-    "q_stream_batch_equiv", "q_stream_static_join", "q_stream_dedup",
-    "q_stream_stateful_counts", "q_stream_upsert_cdc",
-    "q_exists_shiplag", "q_correlated_avg_qty",
-    "q_recursive_cte", "q_lateral_topn",
-    "q_grouping_sets", "q_median_exact", "q_approx_quantile",
-    "q_hll_rollup",
-    "q_pca_variance",
-    "q_stratified_sample", "q_pack_sequences", "q_decontaminate",
-    "q_cdc_merge", "q_scd2_history",
-    "q_tpch_q3",
-]
-
-#: Round-4 rotation (THE ACTIVE WINDOW is ``DRIVER_WINDOW_R4[:50]``):
-#: the 58 contracts that had never been driver-verified after r1+r2+r3
-#: (48 original + 3 demoted from the r3 window + 7 added after the r3
-#: window froze). Highest-risk first — streaming sink, custom-operator
-#: machinery, null-semantics, sketches, TPC-H remainder. The 8 tail
-#: entries (single-aggregate shapes and two TPC-H queries with
-#: long-green local parity) rolled to the pending pool (drained through
-#: ``DRIVER_WINDOW_R6`` and ``DRIVER_WINDOW_R7_PENDING``).
-#: Every window name MUST have a SQL oracle — the driver records
-#: ``err: no_oracle`` for rows-only contracts instead of rows-checking.
-DRIVER_WINDOW_R4 = [
-    # round-3 continuation additions (new operators — verify first)
-    "q_stream_heavy_hitters", "q_heavy_hitters", "q_semantic_dedup",
-    "q_not_in_null_semantics", "q_tpch_q18", "q_weighted_sample",
-    "q_stream_weighted_reservoir",
-    # contract-machinery / physical-strategy contracts
-    "q_salted_join_contract", "q_two_phase_agg_contract",
-    "q_bloom_join_contract", "q_join_hints_contract",
-    "q_union_by_name", "q_schema_evolution", "q_null_safe_join",
-    # text/similarity remainder
-    "q_simhash", "q_fingerprint_groups", "q_fuzzy_name_match",
-    "q_chunk_documents", "q_repetition_score", "q_token_entropy",
-    "q_token_stats", "q_bigram_pmi", "q_lm_score",
-    "q_decontaminate_ngram", "q_dedup_clusters", "q_inverted_index",
-    # governance + sampling
-    "q_pseudonymize_users", "q_domain_mix", "q_sample_hash",
-    # analytics remainder
-    "q_variant_json", "q_time_weighted_avg", "q_event_sequences",
-    "q_rfm_segments", "q_rolling_dau", "q_skyline_pareto",
-    "q_cumulative_users", "q_rank_distribution", "q_conditional_distinct",
-    "q_stats_moments", "q_conditional_agg", "q_string_agg", "q_min_max_by",
-    # subquery remainder
-    "q_having_in_big_orders", "q_max_price_in_brand",
-    "q_multi_supplier_late",
-    # TPC-H remainder
-    "q_tpch_q14", "q_tpch_q19", "q_tpch_q15", "q_tpch_q22",
-    "q_tpch_q16_suppliers", "q_tpch_q2_mincost", "q_tpch_q20_semi_chain",
-    # ---- r5 tail (single-agg shapes, long-green local parity) ----
-    "q_histogram_totalprice", "q_iqr_outliers", "q_regression_stats",
-    "q_winsorized_mean", "q_percent_of_total", "q_mom_growth",
-]
-
-#: Frozen round-5 window (CORRECTNESS_r05.json verified — 50/50 green;
-#: pinned against the driver record by the rotation test like R2–R4).
-DRIVER_WINDOW_R5 = [
-    "q_stream_near_dup_filter", "q_stream_count_min", "q_stream_band_join",
-    "q_stream_ewma", "q_stream_anomaly", "q_stream_cusum",
-    "q_stream_jackknife", "q_stream_chi_square", "q_stream_acf",
-    "q_stream_fano", "q_stream_psi", "q_stream_moments",
-    "q_stream_bootstrap", "q_frame_sample", "q_resize_images",
-    "q_resample_audio", "q_audio_vad", "q_scene_cuts",
-    "q_label_propagation", "q_sssp_cheapest", "q_link_prediction",
-    "q_ppr_seeds", "q_assortativity", "q_modularity", "q_hits_scores",
-    "q_kcore_rounds", "q_link_prediction_eval", "q_clustering_coefficient",
-    "q_square_count", "q_nb_classify", "q_item_item_cosine",
-    "q_decision_stump", "q_tree_depth2", "q_nb_auc", "q_nb_confusion",
-    "q_als_user_step", "q_ranking_eval", "q_kfold_nb_accuracy",
-    "q_lift_deciles", "q_ewma_hourly", "q_ab_test_stats",
-    "q_anomaly_hours", "q_drift_psi", "q_ks_test", "q_acf_lags",
-    "q_holt_linear", "q_cusum_changepoint", "q_jackknife_mean",
-    "q_chi_square", "q_fano_factor",
-]
-
-#: Round-6 window (VERDICT r5 item 1): the head of the r5 pending pool —
-#: the 64 never-driver-verified contracts, exactness-delicate stats and
-#: pair-emitting near-dup first, with the two two-pass-histogram quantile
-#: contracts promoted into the head per VERDICT r5 item 8 (the most
-#: scale-load-bearing of the pending set). FROZEN — pinned against
-#: CORRECTNESS_r06.json (50/50 green) like R2–R5.
-DRIVER_WINDOW_R6 = [
-    "q_benford_digits", "q_theil_deciles", "q_dp_noisy_counts",
-    "q_spearman_corr", "q_mutual_information", "q_welch_ttest",
-    "q_skew_kurtosis", "q_poisson_bootstrap", "q_containment_near_dup",
-    "q_count_min", "q_near_dup_shingle_lsh", "q_ann_pq_topk",
-    "q_weighted_median_hist", "q_weighted_percentiles_hist",
-    "q_paragraph_dedup", "q_bm25_topk", "q_hard_negatives",
-    "q_phrase_search", "q_bigram_lm_score", "q_rrf_fusion",
-    "q_keyword_tagging", "q_feature_hashing", "q_contamination_fraction",
-    "q_prefix_filter_pairs", "q_target_encoding", "q_tpch_q2_mincost",
-    "q_tpch_q20_semi_chain", "q_histogram_totalprice", "q_iqr_outliers",
-    "q_regression_stats", "q_winsorized_mean", "q_percent_of_total",
-    "q_mom_growth", "q_shard_manifest", "q_token_budget_mix",
-    "q_quality_filter_per_lang", "q_tpch_q11_important",
-    "q_tpch_q12_priority", "q_band_join_balances",
-    "q_interval_overlap_join", "q_gini_concentration",
-    "q_association_rules", "q_mad_outliers", "q_attribution_last_touch",
-    "q_survival_km", "q_resource_allocation", "q_top_paths",
-    "q_centroid_similarity", "q_l_diversity", "q_epoch_mixture_plan",
-]
-
-#: ---------------------------------------------------------------------
-#: ROTATION SCHEDULE r7 → r9 (VERDICT r6 items 1, 3). Every registered
-#: contract gets a driver-green CORRECTNESS row; the coverage test
-#: (`tests/test_registry_window.py`) enforces no-contract-left-behind.
-#:
-#:   r7 (frozen — CORRECTNESS_r07.json 50/50 green): ``DRIVER_WINDOW_R7``
-#:       = the last 14 never-driver-verified
-#:       contracts (``DRIVER_WINDOW_R7_PENDING``) + the head of the
-#:       r1-core re-verification set (``DRIVER_WINDOW_R7_REVERIFY[:36]``,
-#:       joins first — the highest-churn plan surface). Clears the
-#:       never-verified pool to ZERO.
-#:   r8 (ACTIVE): ``DRIVER_WINDOW_R7_REVERIFY[36:]`` (6) + the churn-first head
-#:       ``DRIVER_WINDOW_R8_CHURN`` (r3-verified contracts whose
-#:       plans/oracles changed in r5–r7 — r6 ADVICE) +
-#:       ``DRIVER_WINDOW_R8_REVERIFY[: 50 - 6 - len(churn)]`` — the r2
-#:       similarity/UDF core; the displaced R8_REVERIFY tail joins r9.
-#:   r9+: R8_REVERIFY remainder, R2's 6 low-churn exclusions, the r3
-#:       streaming/connector core on the same pattern.
-#: ---------------------------------------------------------------------
-
-#: The last never-driver-verified contracts (cleared by the r7 window).
-#: Append ANY new contract to ``DRIVER_WINDOW_R8_PENDING`` below or the
-#: rotation-coverage test fails.
-DRIVER_WINDOW_R7_PENDING = [
-    "q_span_corruption", "q_dedup_survivorship", "q_array_hof",
-    "q_referential_integrity", "q_forward_fill", "q_weighted_median",
-    "q_seasonal_index", "q_growth_accounting", "q_quantile_normalize",
-    "q_asof_nearest", "q_equi_depth_histogram", "q_join_skew_report",
-    "q_bitmap_activity", "q_funnel_windowed",
-]
-
-#: r1-core re-verification set (r7/r8 windows): the r1-green
-#: relational/window/set core has not been driver-checked since round 1
-#: while the engine under it kept being rewritten. Joins first — the
-#: highest-churn plan surface.
-DRIVER_WINDOW_R7_REVERIFY = [
-    # relational core (joins first — the highest-churn plan surface)
-    "q_join_orders_customer", "q_join_lineitem_part_bcast",
-    "q_join_dim_chain", "q_join_left_outer",
-    "q_semi_customers_with_orders", "q_anti_customers_without_orders",
-    "q_cross_region_pairs", "q_range_join", "q_theta_join",
-    "q_filter_project", "q_predicates", "q_groupagg_pricing",
-    "q_rollup_nation_segment", "q_cube_year_status", "q_group_by_all",
-    "q_global_sort", "q_topk_customers",
-    "q_union_users", "q_intersect_users", "q_except_users",
-    "q_pivot_status_by_year", "q_unpivot_metrics", "q_scalar_subquery",
-    "q_percentiles",
-    # window functions
-    "q_window_rank", "q_window_running", "q_window_moving_avg",
-    "q_window_navigation", "q_window_time_range", "q_ntile_quartiles",
-    "q_activity_streaks",
-    # events / semi-structured
-    "q_avg_value_by_type", "q_distinct_users", "q_json_extract",
-    "q_tumbling_counts", "q_sliding_counts", "q_sessionize",
-    # expression semantics (null handling is the riskiest battery)
-    "q_null_semantics", "q_regexp_all", "q_explode_outer",
-    "q_date_funcs", "q_map_funcs",
-]
-
-#: FROZEN round-7 window: pending remainder first (cleared the
-#: never-driver-verified pool to zero), then the r1 relational-core
-#: re-verification head. Pinned against CORRECTNESS_r07.json
-#: (50/50 green) like R2–R6.
-DRIVER_WINDOW_R7 = list(DRIVER_WINDOW_R7_PENDING) + DRIVER_WINDOW_R7_REVERIFY[:36]
-
-#: The correctness driver verifies the FIRST 50 registered queries only
-#: NEW contracts registered in r7 (never driver-verified). None were —
-#: r7 was a pure re-verification round (VERDICT r6 item 3's ≤6 cap held
-#: at zero).
-DRIVER_WINDOW_R8_PENDING: list[str] = []
-
-#: Churn-first re-verification head for r8 (r6 ADVICE): contracts whose
-#: plan or oracle changed AFTER their last driver-green round and that
-#: are not already in the r7/r8 windows. q_logreg_train: r3-verified,
-#: output schema + oracle gained ``n_fit`` in r6. q_hard_negatives:
-#: r6-verified, brute-force→IVF counted routing added in r7.
-#: q_kcore_rounds: r5-verified, per-round survivor joins counted-
-#: broadcast-gated in r7 (x100 probe finding; result-identity-tested).
-DRIVER_WINDOW_R8_CHURN = [
-    "q_logreg_train", "q_hard_negatives", "q_kcore_rounds",
-]
-
-#: r2-core re-verification tranche (r8 window, pre-staged in r6): the
-#: r8 window is ``DRIVER_WINDOW_R7_REVERIFY[36:]`` (the 6 displaced by
-#: the r7 pending head) + ``DRIVER_WINDOW_R8_PENDING`` +
-#: ``DRIVER_WINDOW_R8_CHURN`` + the head of these 44 — the r2-verified
-#: similarity / UDF /
-#: near-dup / streaming-batch-twin core, none driver-checked since r2.
-#: Curated churn-first: several of these had plan-level changes in
-#: r5/r6 (near-dup size-table gates, dim_broadcast on q_tpch_q3,
-#: q_pack_sequences doc-meta gate, q_stream_static_join dim count
-#: gate), so they re-verify before the low-churn scalar batteries.
-#: Excluded 6 of R2's 50 (lowest-churn single-agg/scalar shapes, all
-#: still in the local parity suite): q_decimal_exact,
-#: q_approx_distinct, q_language_id, q_quality_score,
-#: q_text_stats_by_lang, q_degree_distribution.
-DRIVER_WINDOW_R8_REVERIFY = [
-    # plans changed since their r2 driver check — re-verify first
-    "q_near_dup_jaccard", "q_near_dup_ngram", "q_pack_sequences",
-    "q_stream_static_join", "q_tpch_q3",
-    # similarity / ANN / ML core
-    "q_similarity_topk", "q_knn_accuracy", "q_near_dup_embedding",
-    "q_simhash_near_dup", "q_kmeans", "q_pca_variance",
-    # UDF surface (u-1..u-5)
-    "q_udf_python", "q_pandas_udf_cosine", "q_grouped_map_zscore",
-    "q_udaf_geomean", "q_udtf_tokens",
-    # graph capstones
-    "q_triangle_count", "q_connected_components", "q_pagerank",
-    # streaming batch-twins + CDC
-    "q_stream_batch_equiv", "q_stream_dedup", "q_stream_stateful_counts",
-    "q_stream_upsert_cdc", "q_cdc_merge", "q_scd2_history",
-    # text / dedup pipeline
-    "q_dedup_exact", "q_wordcount", "q_tfidf_top_terms",
-    "q_stratified_sample", "q_decontaminate",
-    # subquery semantics
-    "q_exists_shiplag", "q_correlated_avg_qty", "q_recursive_cte",
-    "q_lateral_topn",
-    # sketches / quantiles / sets
-    "q_grouping_sets", "q_median_exact", "q_approx_quantile",
-    "q_hll_rollup", "q_asof_join", "q_array_ops",
-    # sources / multimodal
-    "q_csv_roundtrip", "q_partitioned_pruning", "q_custom_datasource",
-    "q_multimodal_features",
-]
-
-#: The ACTIVE r8 window (VERDICT r7 item 2): the 6 R7_REVERIFY entries
-#: displaced by the r7 pending head, then new-contract debt (zero),
-#: then the churn-first head, then the r2-core tranche head. Re-verifies
-#: the entire r2 similarity/UDF/graph-capstone core on current engine
-#: code. Frozen once CORRECTNESS_r08.json lands.
-DRIVER_WINDOW_R8 = (
-    list(DRIVER_WINDOW_R7_REVERIFY[36:])
-    + list(DRIVER_WINDOW_R8_PENDING)
-    + list(DRIVER_WINDOW_R8_CHURN)
-    + DRIVER_WINDOW_R8_REVERIFY[:41]
-)
-
-#: The correctness driver verifies the FIRST 50 registered queries only
-#: (registration-order prefix of ``queries()``).
-#:
-#: r8 is FROZEN (CORRECTNESS_r08.json 50/50 green — pinned in
-#: tests/test_registry_window.py). ``DRIVER_WINDOW`` is assigned to
-#: ``DRIVER_WINDOW_R9`` below: the rotation VERDICT r8 item 1
-#: prescribed, executed verbatim — the never-verified q_global_rank,
-#: the five r8 ranks-rewrite churn entries, then the head of the
-#: 60-entry R9_REVERIFY tranche.
-
-#: ---------------------------------------------------------------------
-#: r9 PRE-STAGE (VERDICT r7 item 3 — stage the next window before this
-#: round closes, the proven de-risking pattern).
-#: ---------------------------------------------------------------------
-
-#: NEW contracts registered in r8 (never driver-verified). Append any
-#: new contract here — they take the head of the r9 window. Keep ≤ 6
-#: (VERDICT r6 item 3 cap, renewed by r7 item 4).
-DRIVER_WINDOW_R9_PENDING: list[str] = [
-    "q_global_rank",  # s-4: exact global row number via operators.ranks
-]
-
-#: Churn-first head for r9 (VERDICT r7 item 4): any contract whose plan
-#: or oracle changes during r8 AND whose latest driver-green record
-#: predates the change goes here AT CHANGE TIME — the r7 discipline
-#: that caught q_kcore_rounds. All five below were rewritten in r8 off
-#: unpartitioned-window (single-partition-sort) plans onto
-#: ``operators.ranks`` (global_cumsum / distributed_ntile) or a
-#: domain-bounded pre-aggregate; each is oracle-parity-green locally
-#: and identity-tested against its old window formulation
-#: (tests/test_ranks.py, test_global_window_audit.py).
-DRIVER_WINDOW_R9_CHURN: list[str] = [
-    "q_nb_auc",            # r5 green; distributed midrank AUC
-    "q_lift_deciles",      # r5 green; distributed_ntile(10)
-    "q_rfm_segments",      # r4 green; 3× distributed_ntile(4)
-    "q_equi_depth_histogram",  # r7 green; distributed_ntile(16)
-    "q_skyline_pareto",    # r4 green; per-size domain pre-aggregate
-]
-
-#: r9 re-verification tranche (VERDICT r7 item 3): the R8_REVERIFY
-#: remainder (3, displaced by the r8 head), R2's 6 excluded low-churn
-#: scalar/single-agg contracts, the two r1 leftovers that were in NO
-#: staged tranche (VERDICT r7 "What's missing" #2: q_string_funcs,
-#: q_math_funcs), then the r3 streaming/connector core in its original
-#: risk-first order (q_logreg_train excluded — it re-verifies in the r8
-#: churn head). The r9 window = R9_PENDING + R9_CHURN + the head of
-#: this list to fill 50; the tail rolls to r10.
-DRIVER_WINDOW_R9_REVERIFY = (
-    DRIVER_WINDOW_R8_REVERIFY[41:]
-    + [
-        # R2's 6 exclusions (lowest-churn, local-parity-green since r2)
-        "q_decimal_exact", "q_approx_distinct", "q_language_id",
-        "q_quality_score", "q_text_stats_by_lang", "q_degree_distribution",
-        # r1 leftovers never staged anywhere (VERDICT r7 missing #2)
-        "q_string_funcs", "q_math_funcs",
-    ]
-    + [n for n in DRIVER_WINDOW_R3 if n != "q_logreg_train"]
-)
-
-#: r9 ACTIVE window (VERDICT r8 item 1, executed verbatim): the one
-#: never-driver-verified contract, the five r8 ranks-rewrite churn
-#: entries, then the tranche head to fill 50. The 16-entry tranche tail
-#: rolls to r10 (``DRIVER_WINDOW_R10_REVERIFY`` head).
-DRIVER_WINDOW_R9 = (
-    list(DRIVER_WINDOW_R9_PENDING)
-    + list(DRIVER_WINDOW_R9_CHURN)
-    + DRIVER_WINDOW_R9_REVERIFY[:44]
-)
-
-#: ---------------------------------------------------------------------
-#: r10 window (VERDICT r9 item 1 — executes the r9 pre-stage verbatim).
-#: ---------------------------------------------------------------------
-
-#: NEW contracts registered in r10 (never driver-verified). Keep ≤ 6
-#: (VERDICT r6 item 3 cap, renewed every round since). Both r10
-#: additions pin this round's engine work through the driver oracle:
-#: the asymmetric probe≠reference exact-kernel path (VERDICT r9 item 6)
-#: and global_cumsum's null-as-0 running-total contract (ADVICE r9).
-DRIVER_WINDOW_R10_PENDING: list[str] = [
-    "q_cross_table_knn",
-    "q_running_total_nulls",
-]
-
-#: Churn-first head for r10: any contract whose plan or oracle changes
-#: during r9 AND whose latest driver-green record predates the change
-#: goes here AT CHANGE TIME (the discipline that caught q_kcore_rounds
-#: in r7 and carried the five ranks rewrites into r9).
-#:
-#: r9 churn so far: the broadcast cosine kernel's per-probe lexsort loop
-#: was vectorized (VERDICT r8 item 5, operators/similarity.py
-#: exact_topk_broadcast) — the r8-green contracts that route through it
-#: re-verify first in r10. q_semantic_dedup / q_dedup_clusters route
-#: through the BLOCKED kernel (re-verified r8 / staged below) and are
-#: covered by the forced-route identity suite.
-DRIVER_WINDOW_R10_CHURN: list[str] = [
-    "q_similarity_topk",   # r8 green; broadcast cosine route at sf0.01
-    "q_knn_accuracy",      # r8 green; same kernel via knn_join
-    "q_hard_negatives",    # r8 green; same kernel via knn_join
-    "q_near_dup_embedding",  # r8 green; cosine threshold off same kernel
-]
-
-#: r10 re-verification tranche (VERDICT r8 item 3): the R9_REVERIFY
-#: remainder (16), then the r4-window core — the 48 contracts whose only
-#: driver-green record is r4 while near-dup gates, quantile engines and
-#: the ranks rewrites churned under them in r5–r8 — ordered churn-first:
-#: sketch/quantile + similarity/fingerprint + text-analysis families
-#: (the engines that churned) ahead of pure-Catalyst relational/TPC-H
-#: plans that no engine change touched.
-DRIVER_WINDOW_R10_REVERIFY = DRIVER_WINDOW_R9_REVERIFY[44:] + [
-    # sketch / quantile / sampling engines (churned r5–r8)
-    "q_heavy_hitters", "q_stream_heavy_hitters", "q_weighted_sample",
-    "q_stream_weighted_reservoir", "q_sample_hash", "q_rank_distribution",
-    # similarity / fingerprint / dedup (gates + kernels churned r5–r8)
-    "q_semantic_dedup", "q_dedup_clusters", "q_simhash",
-    "q_fingerprint_groups", "q_fuzzy_name_match", "q_decontaminate_ngram",
-    # text-analysis family (tokenizer/marginal-broadcast churn)
-    "q_chunk_documents", "q_repetition_score", "q_token_entropy",
-    "q_token_stats", "q_bigram_pmi", "q_lm_score", "q_inverted_index",
-    "q_pseudonymize_users", "q_domain_mix",
-    # join-strategy contracts (AQE/gate configs churned)
-    "q_salted_join_contract", "q_two_phase_agg_contract",
-    "q_bloom_join_contract", "q_join_hints_contract",
-    "q_null_safe_join", "q_union_by_name", "q_schema_evolution",
-    # events / time-series analytics
-    "q_variant_json", "q_time_weighted_avg", "q_event_sequences",
-    "q_rolling_dau", "q_cumulative_users",
-    # pure-Catalyst relational / TPC-H tail (lowest churn risk)
-    "q_not_in_null_semantics", "q_conditional_distinct", "q_stats_moments",
-    "q_conditional_agg", "q_string_agg", "q_min_max_by",
-    "q_having_in_big_orders", "q_max_price_in_brand",
-    "q_multi_supplier_late", "q_tpch_q18", "q_tpch_q14", "q_tpch_q19",
-    "q_tpch_q15", "q_tpch_q22", "q_tpch_q16_suppliers",
-]
-
-#: r10 ACTIVE window (VERDICT r9 item 1, executed verbatim): the two
-#: new r10 contracts, the four broadcast-cosine consumers churned by
-#: the r9 kernel work (judge pre-cleared all four green), then the
-#: tranche head to fill 50 — the R9_REVERIFY remainder (16) and the
-#: r4-stale core churn-first. The 20-entry tranche tail rolls to r11
-#: (``DRIVER_WINDOW_R11_REVERIFY`` head).
-DRIVER_WINDOW_R10 = (
-    list(DRIVER_WINDOW_R10_PENDING)
-    + list(DRIVER_WINDOW_R10_CHURN)
-    + DRIVER_WINDOW_R10_REVERIFY[:44]
-)
-
-#: r12: the active window rotates to DRIVER_WINDOW_R12 (defined below,
-#: after the churn lists it is composed from).
-
-#: ---------------------------------------------------------------------
-#: r11 PRE-STAGE (VERDICT r9 item 2 — the stale-pool ENDGAME: after the
-#: r11 window executes, EVERY contract's latest driver-green record is
-#: ≥ r5, i.e. newer than the near-dup-gate/quantile/ranks engine churn
-#: of r5–r9. test_registry_window.py asserts that set-cover claim
-#: statically against the committed CORRECTNESS_r*.json history.)
-#: ---------------------------------------------------------------------
-
-#: NEW contracts registered in r11 (never driver-verified). Append any
-#: new contract here — they take the head of the r11 window. Keep ≤ 6.
-DRIVER_WINDOW_R11_PENDING: list[str] = []
-
-#: Churn-first head for r11: any contract whose plan or oracle changes
-#: during r10 AND whose latest driver-green record predates the change
-#: goes here AT CHANGE TIME.
-#:
-#: r10 churn so far: operators.ranks null semantics (ADVICE r9 — both
-#: routes now treat null sum_col values as 0; the coalesce happens
-#: ONCE, JVM-side, into typed temp columns BEFORE the routes split — a
-#: worker-side fillna would conflate NULL with NaN; see the ranks.py
-#: docstring). Every ranks consumer NOT in the r10 window re-verifies
-#: first in r11 (q_rank_distribution is in the r10 window and
-#: re-verifies there).
-DRIVER_WINDOW_R11_CHURN: list[str] = [
-    "q_global_rank",           # r9 green; global_cumsum rank formulation
-    "q_lift_deciles",          # r9 green; distributed_ntile(10)
-    "q_rfm_segments",          # r9 green; 3× distributed_ntile(4)
-    "q_equi_depth_histogram",  # r9 green; distributed_ntile(16)
-    "q_nb_auc",                # r9 green; global_cumsum midranks
-]
-
-#: r11 re-verification tranche: the R10_REVERIFY remainder (20), the
-#: four r1-latest scalar-function batteries that were never staged in
-#: any tranche (the last pre-r5 records anywhere once the r10 window
-#: lands), then the r5-latest pool ordered churn-first — streaming
-#: state consumers (state-store/chunking work churned r8–r9), the
-#: multimodal kernels (operators.multimodal churned through r9), the
-#: analytics battery, and the graph/ML family (pure-Catalyst plans no
-#: engine change touched) last.
-DRIVER_WINDOW_R11_REVERIFY = DRIVER_WINDOW_R10_REVERIFY[44:] + [
-    # r1-latest, never staged (stale-pool endgame closers)
-    "q_calendar_funcs", "q_bitwise_funcs", "q_encoding_funcs",
-    "q_format_funcs",
-    # r5-latest: streaming state/sketch consumers (ops churned r8–r9)
-    "q_stream_near_dup_filter", "q_stream_count_min", "q_stream_band_join",
-    "q_stream_ewma", "q_stream_anomaly", "q_stream_cusum",
-    "q_stream_jackknife", "q_stream_chi_square", "q_stream_acf",
-    "q_stream_fano", "q_stream_psi", "q_stream_moments",
-    "q_stream_bootstrap",
-    # r5-latest: multimodal Arrow kernels
-    "q_frame_sample", "q_resize_images", "q_resample_audio",
-    "q_audio_vad", "q_scene_cuts",
-    # r5-latest: analytics battery
-    "q_ab_test_stats", "q_anomaly_hours", "q_decision_stump",
-    "q_drift_psi", "q_tree_depth2", "q_ks_test", "q_acf_lags",
-    "q_holt_linear", "q_cusum_changepoint", "q_chi_square",
-    "q_fano_factor", "q_ewma_hourly", "q_jackknife_mean",
-    # r5-latest: graph/ML tail (lowest churn risk)
-    "q_nb_classify", "q_nb_confusion", "q_ranking_eval",
-    "q_kfold_nb_accuracy", "q_label_propagation", "q_sssp_cheapest",
-    "q_item_item_cosine", "q_link_prediction", "q_als_user_step",
-    "q_ppr_seeds", "q_assortativity", "q_modularity", "q_hits_scores",
-    "q_link_prediction_eval", "q_clustering_coefficient",
-    "q_square_count",
-]
-
-#: Churn-first head for the NEXT window after r11 (the standing
-#: discipline: any contract whose PLAN changes on a green contract goes
-#: here AT CHANGE TIME). r11 optimization-round churn — all proven
-#: oracle-green at change time by the full 315-contract dress rehearsal
-#: (PERF.md r11), but their physical plans changed, so they re-verify
-#: driver-side ahead of the steady-state rotation:
-#:
-#: - ``operators.graph.undirected`` symmetrizes via one explode pass
-#:   instead of union arms (same row multiset; union never shares the
-#:   upstream subplan, so every materialization recomputed the edge DAG
-#:   twice) → every undirected-graph consumer below.
-#: - ``operators.graph.pagerank`` setup: node set + dangling flag from
-#:   ONE explode+aggregate pass; graph-size scalars from one agg on the
-#:   checkpointed node table → q_pagerank.
-#: - ``operators.graph.connected_components_star``: canonical edges
-#:   checkpointed pre-self-loop-filter (node table derives from the
-#:   checkpoint, not a second edge-DAG pass); convergence checksum rides
-#:   the per-round checkpoint as an Observation → q_connected_components,
-#:   q_pretrain_pipeline.
-#: - ``plans.similarity_queries.lsh_jaccard_pairs`` spreads a
-#:   single-split corpus before the signature kernel (spread_small gate)
-#:   → q_near_dup_lsh, q_pretrain_pipeline.
-#:
-#: Entries already in DRIVER_WINDOW_R11_REVERIFY re-verify in r11 first;
-#: they are listed here anyway so the churn record is complete at change
-#: time (dedupe when composing the R12 window).
-DRIVER_WINDOW_R12_CHURN: list[str] = [
-    "q_pagerank",
-    "q_connected_components",
-    "q_triangle_count",
-    "q_near_dup_lsh",
-    "q_pretrain_pipeline",
-    "q_khop_reach",
-    "q_label_propagation",
-    "q_resource_allocation",
-    "q_ppr_seeds",
-    "q_assortativity",
-    "q_modularity",
-    "q_square_count",
-    "q_link_prediction",
-    "q_kcore_rounds",
-]
-
-#: r12-round churn (plan-changed DURING r12, at change time — the same
-#: discipline; all proven oracle-green through the driver surface before
-#: landing, see OPTIMIZATION_r12.md):
-#:
-#: - ``operators.clustering.kmeans`` centroid update: in-kernel
-#:   (cluster, cnt, sumvec) combiner partials instead of the N×d
-#:   assignment⋈emb posexplode shuffle → q_kmeans.
-#: - ``plans.similarity_queries.q_logreg_score``: both inference paths
-#:   ride ONE pass (the Catalyst prediction flows through the NumPy
-#:   kernel as a column — the vec_id join of the two score frames is
-#:   gone); ``operators.logreg.fit_logreg`` gains the dim+1 reduce-shape
-#:   guard (ADVICE r11) → q_logreg_score, q_logreg_train.
-#: - ``operators.graph.bfs_hops``: 1 job/hop (frontier-emptiness rides
-#:   the checkpoint as an Observation; visited = union of checkpointed
-#:   frontiers) → q_khop_reach (already staged above).
-#: - ``operators.graph.sssp`` / ``label_propagation``: integer-exact
-#:   fixpoint early-exit riding the per-round checkpoint Observation;
-#:   LPA node set from one explode pass → q_sssp_cheapest,
-#:   q_label_propagation (staged above).
-#: - ``lsh_jaccard_pairs``: per-doc arrays dictionary-encoded to int64
-#:   under the counted vocab gate; per-doc sizes from the distinct-pair
-#:   count aggregate → q_near_dup_lsh (staged above), q_dedup_clusters,
-#:   q_dedup_survivorship, q_pretrain_pipeline (staged above);
-#:   ``shingle_lsh_jaccard_pairs`` takes the size aggregate only →
-#:   q_near_dup_shingle_lsh.
-DRIVER_WINDOW_R12_CHURN_B: list[str] = [
-    "q_kmeans",
-    "q_logreg_score",
-    "q_logreg_train",
-    "q_sssp_cheapest",
-    "q_near_dup_shingle_lsh",
-    "q_dedup_clusters",
-    "q_dedup_survivorship",
-]
-
-#: r12 ACTIVE window (VERDICT r11 item 7, executed): the pre-staged
-#: R12_CHURN head (deduped — its entries already include four of this
-#: round's plan-changed contracts), the r12-round churn additions, the
-#: five r11 ranks-churn entries (still never driver-re-verified — the
-#: r11 optimization round deliberately did not rotate the window), then
-#: the R11_REVERIFY tranche head to fill 50. The tranche's 20-entry
-#: r4-stale core and the four r1-latest scalar batteries all land
-#: inside the fill, so the ≤r4 stale pool drains this round
-#: (test_stale_pool_drained_by_r12).
-_R12_HEAD = list(
-    dict.fromkeys(
-        DRIVER_WINDOW_R12_CHURN
-        + DRIVER_WINDOW_R12_CHURN_B
-        + DRIVER_WINDOW_R11_CHURN
-    )
-)
-DRIVER_WINDOW_R12 = _R12_HEAD + [
-    n for n in DRIVER_WINDOW_R11_REVERIFY if n not in _R12_HEAD
-][: 50 - len(_R12_HEAD)]
-
-DRIVER_WINDOW = DRIVER_WINDOW_R12
-
-
-def _reorder_registry() -> None:
-    missing = [n for n in DRIVER_WINDOW if n not in QUERIES]
-    unoracled = [n for n in DRIVER_WINDOW if n in QUERIES and n not in ORACLES]
-    if missing or unoracled:
-        raise RuntimeError(
-            f"DRIVER_WINDOW broken: missing={missing} unoracled={unoracled}"
-        )
-    for d in (QUERIES, ORACLES):
-        head = {n: d[n] for n in DRIVER_WINDOW if n in d}
-        tail = {n: v for n, v in d.items() if n not in head}
-        d.clear()
-        d.update(head)
-        d.update(tail)
-
-
-_reorder_registry()
-
-__all__ = [
-    "QUERIES",
-    "ORACLES",
-    "DRIVER_WINDOW",
-    "DRIVER_WINDOW_R2",
-    "DRIVER_WINDOW_R3",
-    "DRIVER_WINDOW_R4",
-    "DRIVER_WINDOW_R5",
-    "DRIVER_WINDOW_R6",
-    "DRIVER_WINDOW_R7",
-    "DRIVER_WINDOW_R7_PENDING",
-    "DRIVER_WINDOW_R7_REVERIFY",
-    "DRIVER_WINDOW_R8_PENDING",
-    "DRIVER_WINDOW_R8_CHURN",
-    "DRIVER_WINDOW_R8_REVERIFY",
-    "DRIVER_WINDOW_R9",
-    "DRIVER_WINDOW_R9_PENDING",
-    "DRIVER_WINDOW_R9_CHURN",
-    "DRIVER_WINDOW_R9_REVERIFY",
-    "DRIVER_WINDOW_R10",
-    "DRIVER_WINDOW_R10_PENDING",
-    "DRIVER_WINDOW_R10_CHURN",
-    "DRIVER_WINDOW_R10_REVERIFY",
-    "DRIVER_WINDOW_R11_PENDING",
-    "DRIVER_WINDOW_R11_CHURN",
-    "DRIVER_WINDOW_R11_REVERIFY",
-]
+__all__ = ["QUERIES", "ORACLES"]

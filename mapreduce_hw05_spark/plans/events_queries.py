@@ -67,7 +67,7 @@ def q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# agg-4 — approximate count-distinct (HLL++); rows-only check
+# agg-4 — approximate count-distinct (HLL++)
 # --------------------------------------------------------------------------
 
 

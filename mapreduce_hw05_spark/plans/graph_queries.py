@@ -1,9 +1,8 @@
 """Iterative / graph / ML contract queries (SURVEY §2.8 g-1/g-2/g-3/g-5).
 
 All run over the co-purchase part graph (distinct part pairs sharing an
-l_orderkey) or the embeddings table. PageRank and k-means are rows-only
-contracts (no SQL analog); internal invariants (Σrank ≈ 1, inertia
-monotone ↓) are asserted in tests/.
+l_orderkey) or the embeddings table. Each has a DuckDB oracle; internal
+invariants (Σrank ≈ 1, inertia monotone ↓) are also asserted in tests/.
 """
 
 from __future__ import annotations
@@ -127,7 +126,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# g-3 — k-means (rows-only; k=10, 5 iterations, label-seeded)
+# g-3 — k-means (k=10, 5 iterations, label-seeded)
 # --------------------------------------------------------------------------
 
 

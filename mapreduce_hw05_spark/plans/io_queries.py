@@ -191,7 +191,7 @@ def q_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# llm-8 — multimodal columns (rows-only: binary payloads have no SQL oracle)
+# llm-8 — multimodal columns
 # --------------------------------------------------------------------------
 
 

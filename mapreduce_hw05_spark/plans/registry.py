@@ -28,15 +28,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a contract query; ``oracle=None`` → rows-only check."""
+def contract(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Register a contract query with its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate contract query: {name}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco

@@ -70,3 +70,15 @@ def test_partitioned_sink_prunes_on_read(engine, spark):
     assert "= en)" in plan  # the lang=en partition predicate reached the scan
     assert back.count() == docs.filter(F.col("lang") == "en").count()
     shutil.rmtree(out, ignore_errors=True)
+
+
+def test_driver_adapter_surface(spark):
+    """``__spark_entry__`` hands the registry over unchanged: one oracle per
+    query, in registration order, and a non-empty flagship smoke frame."""
+    import __spark_entry__ as adapter
+    from mapreduce_hw05_spark.plans import QUERIES
+
+    queries, oracles = adapter.queries(), adapter.oracle_sql()
+    assert list(queries) == list(oracles) == list(QUERIES)
+    assert len(queries) == 315  # every plan module was imported
+    assert adapter.entry(spark).count() > 0

@@ -130,9 +130,6 @@ REGISTRY: dict[tuple[str, str], str | None] = {
     # IVF module doc: "a probe routes to its nprobe nearest centroids" —
     # implemented by route_probes in the same module
     ("operators/ann.py", "<module>"): "route_probes",
-    # rotation-schedule comment (churn history note, not a fallback
-    # promise): "brute-force→IVF counted routing added in r7"
-    ("plans/__init__.py", "<module>"): None,
     # per-node clustering coefficient: hub salting lives in the shared
     # wedge operator it calls
     ("plans/graph_queries.py", "q_clustering_coefficient"): (

@@ -1,5 +1,5 @@
-"""Internal invariants for rows-only contracts (SURVEY §5.2 item 2):
-ops with no SQL oracle are pinned by mathematical properties instead.
+"""Internal invariants (SURVEY §5.2 item 2): operators whose contract
+oracles only check a summary are pinned by mathematical properties too.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
-"""Differential tests: every contract query with a DuckDB oracle must
-match on row count, schema (column names), and values at sf0.01 — the
-local replica of the driver's CORRECTNESS gate.
+"""Differential tests: every contract query must match its DuckDB oracle
+on row count, schema (column names), and values at sf0.01 — the local
+replica of the driver's CORRECTNESS gate.
 
 r12 (VERDICT r11 item 2): the sweep's ~283 BATCH contracts are
 independent jobs, so they run through a small driver-side thread pool
@@ -97,15 +97,6 @@ def parity_results(request, spark, oracle):
 def test_oracle_parity(parity_results, name):
     problems = parity_results[name]
     assert not problems, f"{name}: " + " | ".join(problems)
-
-
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, oracle, name):
-    """Rows-only contracts must at least execute with a stable schema."""
-    df = QUERIES[name](spark, "/root/testdata/sf0.01")
-    rows = df.collect()
-    assert df.columns, name
-    assert rows is not None
 
 
 def test_sequential_comparator_still_agrees(spark, oracle):
