@@ -1,20 +1,21 @@
-"""Streaming contract query (SURVEY §2.1 src-4 / §2.9): a genuinely
-streaming-EXECUTED query in the correctness registry.
+"""Streaming contract queries (SURVEY §2.1 src-4 / §2.9): genuinely
+streaming-EXECUTED queries in the correctness registry.
 
 Structured Streaming's unified semantics guarantee that a streaming
 aggregation's final state equals the batch query over the same data —
-so the streaming run can be hash-checked against the *batch* SQL oracle.
-This query replays the events fixture as a chunked file stream (the
-local stand-in for Kafka), runs the tumbling-window aggregation
-incrementally across micro-batches, and returns the final result table.
+so each streaming run can be hash-checked against the *batch* SQL
+oracle. Every contract here replays a fixture as a chunked file stream
+(the local stand-in for Kafka) through ``streaming.replay.run_replay``,
+the one replay driver, and returns the final result table. Three thin
+wrappers pick the sink: ``_memory_replay`` (memory sink, 13 contracts),
+``_state_replay`` (foreachBatch or file sink, read back from its output
+dir) and ``_rollup_replay`` (the additive rollup sink plus a shared
+batch finisher).
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,64 +39,92 @@ from mapreduce_hw05_spark.plans.registry import contract
 from mapreduce_hw05_spark.sources import load_table
 from mapreduce_hw05_spark.streaming import ops
 from mapreduce_hw05_spark.streaming.replay import (
+    EVENTS_STREAM_SCHEMA,
     ChunkList,
-    FileReplay,
+    run_replay,
     time_ordered_chunks,
 )
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp")
 
+def _memory_replay(spark: SparkSession, chunks, prefix: str, op, mode: str,
+                   keep=None) -> DataFrame:
+    """Replay ``chunks`` through ``op`` into a memory sink in output
+    ``mode``; return a snapshot of the sink, through ``keep`` if given.
 
-def _fresh_scratch(prefix: str) -> str:
-    """New uuid scratch dir under .tmp; sweeps stale same-prefix dirs
-    first so a crashed earlier run can't accumulate litter."""
-    import glob
-
-    for stale in glob.glob(os.path.join(_SCRATCH, prefix + "*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    root = os.path.join(_SCRATCH, prefix + uuid.uuid4().hex[:8])
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-#: Target rows per streaming state partition. Measured on the tumbling
-#: replay (q_stream_batch_equiv, best-of-2 warm): at sf0.1 (100k rows)
-#: 4 parts = 3.9 s, 8 = 3.6 s, 16 = 4.2 s, 32 = 4.6 s; at sf0.01 (10k
-#: rows) 4 beats 8 (stream-stream join 4.7 s vs 7 s — it holds FOUR
-#: state stores per partition). ~12.5k rows/partition hits both optima
-#: and keeps growing with input instead of serializing at scale
-#: (the r3 VERDICT scale cliff: a constant 4 doubled sf0.1 replay time).
-_ROWS_PER_STATE_PARTITION = 12_500
-
-
-@contextlib.contextmanager
-def _replay_state_partitions(spark: SparkSession, replay=None, n: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` for a file-replay run,
-    sized to the replayed row count.
-
-    A stateful streaming query spins up one state-store instance per
-    shuffle partition PER MICRO-BATCH; on a fixture-sized replay that
-    fixed cost dominates, so the partition count scales with rows
-    (clamped to [4, 32]) rather than staying at the session's 32/200.
-    State partition count should size to stateful-key cardinality and
-    executor count — a deployment knob, not a plan property; each query
-    here starts from a fresh checkpoint, so the scoped value never
-    conflicts with pinned checkpoint metadata. The session value is
-    restored on exit (these queries share the driver's session with
-    every batch contract query).
+    The query (and so its memory view) is named after the scratch root,
+    which ``run_replay`` drops again on the way out. The snapshot is a
+    plain DataFrame whose contents survive that cleanup.
     """
-    if n is None:
-        rows = getattr(replay, "total_rows", None) or 0
-        n = max(4, min(32, rows // _ROWS_PER_STATE_PARTITION))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    def start(stream, root):
+        return (
+            op(stream)
+            .writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(os.path.basename(root))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .start()
+        )
+
+    def finish(root):
+        sink = spark.table(os.path.basename(root))
+        return snapshot_result(keep(sink) if keep else sink)
+
+    return run_replay(spark, chunks, prefix, start, finish)
+
+
+def _state_replay(spark: SparkSession, chunks, prefix: str, sink, finish,
+                  *, schema=EVENTS_STREAM_SCHEMA):
+    """Replay ``chunks`` into a foreachBatch or file sink; return
+    ``finish(state)`` over the sink's output dir.
+
+    ``sink(stream, state, ckpt)`` returns the configured writer for
+    output dir ``state`` and checkpoint ``ckpt``; ``finish`` reads the
+    result before the scratch root is removed.
+    """
+
+    def start(stream, root):
+        return sink(stream, os.path.join(root, "state"),
+                    os.path.join(root, "ckpt")).start()
+
+    return run_replay(
+        spark, chunks, prefix, start,
+        lambda root: finish(os.path.join(root, "state")), schema=schema,
+    )
+
+
+def _delivered_twice(chunks: ChunkList) -> ChunkList:
+    """Each chunk pushed twice in a row: the at-least-once redelivery of
+    a flaky upstream, with the row count doubled to match."""
+    doubled = ChunkList(c for chunk in chunks for c in (chunk, chunk))
+    doubled.total_rows = (chunks.total_rows or 0) * 2
+    return doubled
+
+
+def user_event_totals(batch: DataFrame) -> DataFrame:
+    """Per-user ``count(*) → n_events`` and ``sum(value) → sum_value``
+    delta for the additive rollup sink."""
+    return batch.groupBy("user_id").agg(
+        F.count("*").alias("n_events"),
+        F.sum("value").alias("sum_value"),
+    )
+
+
+def _rollup_replay(spark: SparkSession, sf_dir: str, prefix: str,
+                   keys: list[str], delta_fn, finish, ddl: str) -> DataFrame:
+    """Fold the events replay (4 chunks) into the additive rollup sink
+    keyed on ``keys`` with per-batch deltas from ``delta_fn``; return the
+    rows ``finish(state_df)`` collects from the final state as a
+    DataFrame of schema ``ddl``."""
+    events = load_table(spark, sf_dir, "events")
+    rows = _state_replay(
+        spark, time_ordered_chunks(events, "ts", 4), prefix,
+        lambda stream, state, ckpt: ops.stream_additive_rollup_foreachbatch(
+            stream, state, ckpt, keys, delta_fn,
+        ),
+        lambda state: finish(spark.read.parquet(state)),
+    )
+    return spark.createDataFrame(rows, ddl)
 
 
 @contract(
@@ -116,30 +145,8 @@ def q_stream_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (open windows × event types), never stream length.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_stream_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4), root)
-    name = "stream_equiv_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.tumbling_counts(replay.stream())
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    # Materialize off the (session-scoped) memory sink so the caller gets
-    # a plain DataFrame whose contents survive sink/table cleanup.
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 4),
+                          "q_stream_", ops.tumbling_counts, "complete")
 
 
 @contract(
@@ -166,35 +173,19 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
-    root = _fresh_scratch("q_sstat_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 3), root)
-    enriched = ops.enrich_with_users(replay.stream(), customer)
-    agg = (
-        enriched.groupBy(F.col("c_mktsegment").alias("mktsegment"))
-        .agg(
-            F.count("*").alias("n_events"),
-            money(F.sum("value")).alias("sum_value"),
+
+    def by_segment(stream):
+        return (
+            ops.enrich_with_users(stream, customer)
+            .groupBy(F.col("c_mktsegment").alias("mktsegment"))
+            .agg(
+                F.count("*").alias("n_events"),
+                money(F.sum("value")).alias("sum_value"),
+            )
         )
-    )
-    name = "sstat_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 3),
+                          "q_sstat_", by_segment, "complete")
 
 
 @contract(
@@ -231,28 +222,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch join (the unified-semantics guarantee this contract checks).
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_ssj_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 3), root)
-    name = "ssj_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.interval_join_clicks_purchases(replay.stream())
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 3),
+                          "q_ssj_", ops.interval_join_clicks_purchases,
+                          "append")
 
 
 @contract(
@@ -281,39 +253,29 @@ def q_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest pattern (stream → filtered columnar files → batch analytics).
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_fsink_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 3),
-                        os.path.join(root, "in"))
-    out = os.path.join(root, "out")
-    with _replay_state_partitions(spark, replay):
-        query = (
-            replay.stream()
-            .filter(F.col("value") > 1.0)
+
+    def parquet_sink(stream, out, ckpt):
+        return (
+            stream.filter(F.col("value") > 1.0)
             .select("event_id", "user_id", "event_type", "value")
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+            .option("checkpointLocation", ckpt)
         )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    agg = (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            money(F.sum("value")).alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
+
+    return _state_replay(
+        spark, time_ordered_chunks(events, "ts", 3), "q_fsink_", parquet_sink,
+        lambda out: snapshot_result(
+            spark.read.parquet(out)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                money(F.sum("value")).alias("sum_value"),
+                F.countDistinct("user_id").alias("n_users"),
+            )
+        ),
     )
-    result = snapshot_result(agg)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -353,25 +315,10 @@ def q_custom_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("id").alias("sum_id"),
         F.max("id_md5").alias("max_md5"),
     )
-    root = _fresh_scratch("q_csrc_")
-    name = "csrc_" + uuid.uuid4().hex[:8]
-    # no file replay here — 24k synthetic rows, minimum partition count
-    with _replay_state_partitions(spark, n=4):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    # no file chunks: the query reads seqgen, and zero replayed rows
+    # size the state scope to the minimum partition count
+    return _memory_replay(spark, [], "q_csrc_", lambda _replay: agg,
+                          "complete")
 
 
 @contract(
@@ -398,32 +345,18 @@ def q_stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics across arbitrary micro-batch boundaries.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_upsert_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 3),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_upsert_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt")
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    final = (
-        spark.read.parquet(state)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.round("value", 6).alias("last_value"),
-        )
+    return _state_replay(
+        spark, time_ordered_chunks(events, "ts", 3), "q_upsert_",
+        ops.stream_upsert_foreachbatch,
+        lambda state: snapshot_result(
+            spark.read.parquet(state).select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.col("event_type").alias("last_event_type"),
+                F.round("value", 6).alias("last_value"),
+            )
+        ),
     )
-    result = snapshot_result(final)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -462,28 +395,8 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     table for the hash check).
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sesswin_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4), root)
-    name = "stream_sesswin_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.session_window_stats(replay.stream())
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 4),
+                          "q_sesswin_", ops.session_window_stats, "complete")
 
 
 @contract(
@@ -509,38 +422,20 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     real delivery-lag bound and state stays O(events within horizon).
     """
     events = load_table(spark, sf_dir, "events")
-    chunks = time_ordered_chunks(events, "ts", 3)
-    doubled = ChunkList(c for chunk in chunks for c in (chunk, chunk))
-    doubled.total_rows = (chunks.total_rows or 0) * 2
-    root = _fresh_scratch("q_sdedup_")
-    replay = FileReplay(spark, doubled, os.path.join(root, "in"))
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.dedup_events(replay.stream(), watermark="3650 days")
-            .select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                F.round("value", 6).alias("value"),
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+
+    def dedup(stream):
+        return ops.dedup_events(stream, watermark="3650 days").select(
+            "event_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "user_id",
+            "event_type",
+            F.round("value", 6).alias("value"),
         )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+
+    return _memory_replay(
+        spark, _delivered_twice(time_ordered_chunks(events, "ts", 3)),
+        "q_sdedup_", dedup, "append",
+    )
 
 
 @contract(
@@ -567,32 +462,21 @@ def q_stream_exactly_once_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion of the q_stream_upsert_cdc family.
     """
     events = load_table(spark, sf_dir, "events")
-    chunks = time_ordered_chunks(events, "ts", 3)
-    doubled = ChunkList(c for chunk in chunks for c in (chunk, chunk))
-    doubled.total_rows = (chunks.total_rows or 0) * 2
-    root = _fresh_scratch("q_eocdc_")
-    replay = FileReplay(spark, doubled, os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_exactly_once_agg_foreachbatch(
-            ops.dedup_events(replay.stream(), watermark="3650 days"),
-            state,
-            os.path.join(root, "ckpt"),
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    final = spark.read.parquet(state).select(
-        "user_id",
-        "n_events",
-        F.round("sum_value", 2).alias("sum_value"),
+    return _state_replay(
+        spark, _delivered_twice(time_ordered_chunks(events, "ts", 3)),
+        "q_eocdc_",
+        lambda stream, state, ckpt: ops.stream_additive_rollup_foreachbatch(
+            ops.dedup_events(stream, watermark="3650 days"), state, ckpt,
+            ["user_id"], user_event_totals,
+        ),
+        lambda state: snapshot_result(
+            spark.read.parquet(state).select(
+                "user_id",
+                "n_events",
+                F.round("sum_value", 2).alias("sum_value"),
+            )
+        ),
     )
-    result = snapshot_result(final)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -616,31 +500,21 @@ def q_stream_compacted_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the engine test pins the file-count bound itself.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_compsink_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 6),
-                        os.path.join(root, "in"))
-    out = os.path.join(root, "out")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_append_compacting_sink(
-            replay.stream(), out, os.path.join(root, "ckpt"),
-            max_files=4, target_files=1,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    final = spark.read.parquet(out).select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        F.round("value", 6).alias("value"),
+    return _state_replay(
+        spark, time_ordered_chunks(events, "ts", 6), "q_compsink_",
+        lambda stream, out, ckpt: ops.stream_append_compacting_sink(
+            stream, out, ckpt, max_files=4, target_files=1,
+        ),
+        lambda out: snapshot_result(
+            spark.read.parquet(out).select(
+                "event_id",
+                F.unix_micros("ts").alias("ts_us"),
+                "user_id",
+                "event_type",
+                F.round("value", 6).alias("value"),
+            )
+        ),
     )
-    result = snapshot_result(final)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -663,28 +537,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-analog-only to streaming-executed.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sslide_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4), root)
-    name = "stream_slide_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.sliding_counts(replay.stream())
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 4),
+                          "q_sslide_", ops.sliding_counts, "complete")
 
 
 @contract(
@@ -710,25 +564,16 @@ def q_stream_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
 
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sksink_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_sketch_rollup_foreachbatch(
-            replay.stream(), ["event_type"], "user_id",
-            state, os.path.join(root, "ckpt"),
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    est = {
-        r["event_type"]: ThetaSketch.deserialize(bytes(r["sketch"])).estimate()
-        for r in spark.read.parquet(state).collect()  # bounded: one sketch row per event_type
-    }
+    est = _state_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "q_sksink_",
+        lambda stream, state, ckpt: ops.stream_sketch_rollup_foreachbatch(
+            stream, ["event_type"], "user_id", state, ckpt,
+        ),
+        lambda state: {
+            r["event_type"]: ThetaSketch.deserialize(bytes(r["sketch"])).estimate()
+            for r in spark.read.parquet(state).collect()  # bounded: one sketch row per event_type
+        },
+    )
     exact = {
         r["event_type"]: r["n"]
         for r in events.groupBy("event_type")
@@ -743,7 +588,6 @@ def q_stream_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for et, n in sorted(exact.items())
     ]
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, n_users_exact long, sketch_within_2pct boolean"
     )
@@ -792,33 +636,17 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.schema,
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 2 HOURS"))
 
-    chunks = time_ordered_chunks(on_time, "ts", 3) + [late, sentinel]
-    root = _fresh_scratch("q_late_")
-    replay = FileReplay(spark, chunks, os.path.join(root, "in"))
-    name = "stream_late_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.tumbling_counts(replay.stream(), watermark="10 minutes")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    max_real_hour = spark.sql(
-        f"SELECT unix_timestamp(date_trunc('hour', TIMESTAMP '{bounds['max_ts']}'))"
-    ).first()[0]
-    final = spark.table(name).filter(F.col("hour_epoch") <= max_real_hour)
-    result = snapshot_result(final)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    def real_hours(sink):
+        max_real_hour = spark.sql(
+            f"SELECT unix_timestamp(date_trunc('hour', TIMESTAMP '{bounds['max_ts']}'))"
+        ).first()[0]
+        return sink.filter(F.col("hour_epoch") <= max_real_hour)
+
+    return _memory_replay(
+        spark, time_ordered_chunks(on_time, "ts", 3) + [late, sentinel],
+        "q_late_", lambda s: ops.tumbling_counts(s, watermark="10 minutes"),
+        "append", real_hours,
+    )
 
 
 def _watermark_sentinels(spark, events):
@@ -837,8 +665,6 @@ def _watermark_sentinels(spark, events):
 
     from pyspark.sql import Row
 
-    from mapreduce_hw05_spark.streaming.replay import EVENTS_STREAM_SCHEMA
-
     max_ts = events.agg(F.max("ts").alias("m")).first()["m"]
     far = max_ts + datetime.timedelta(days=1)
     return spark.createDataFrame(
@@ -849,6 +675,19 @@ def _watermark_sentinels(spark, events):
                 value=0.0, props="{}"),
         ],
         schema=EVENTS_STREAM_SCHEMA,
+    )
+
+
+def _flushed_join_replay(spark: SparkSession, sf_dir: str, prefix: str,
+                         join) -> DataFrame:
+    """Replay the events in 3 chunks, then the watermark sentinels,
+    through the stream-stream ``join`` in append mode; the sentinels'
+    own rows are filtered out of the result."""
+    events = load_table(spark, sf_dir, "events")
+    chunks = time_ordered_chunks(events, "ts", 3)
+    return _memory_replay(
+        spark, chunks + [_watermark_sentinels(spark, events)], prefix, join,
+        "append", lambda sink: sink.filter(F.col("user_id") >= 0),
     )
 
 
@@ -889,32 +728,8 @@ def q_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters below the watermark node, so a neutral event type never
     advances either watermark branch.
     """
-    events = load_table(spark, sf_dir, "events")
-    chunks = time_ordered_chunks(events, "ts", 3)
-    flush = _watermark_sentinels(spark, events)
-    root = _fresh_scratch("q_ssjo_")
-    replay = FileReplay(spark, chunks + [flush], root)
-    name = "ssjo_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.interval_left_join_purchases(replay.stream())
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    sink = spark.table(name).filter(F.col("user_id") >= 0)
-    result = snapshot_result(sink)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _flushed_join_replay(spark, sf_dir, "q_ssjo_",
+                                ops.interval_left_join_purchases)
 
 
 @contract(
@@ -940,33 +755,14 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     every other money aggregate uses.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sstate_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4), root)
-    name = "sstate_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.stateful_user_counts(replay.stream())
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    updates = spark.table(name)
-    final = updates.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("sum_value", "n_events").alias("sum_value"),
+    return _memory_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "q_sstate_",
+        ops.stateful_user_counts, "update",
+        lambda updates: updates.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("sum_value", "n_events").alias("sum_value"),
+        ),
     )
-    result = snapshot_result(final)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -998,32 +794,8 @@ def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive. Same sentinel watermark-flush as the left-outer contract,
     now clearing two state stores.
     """
-    events = load_table(spark, sf_dir, "events")
-    chunks = time_ordered_chunks(events, "ts", 3)
-    flush = _watermark_sentinels(spark, events)
-    root = _fresh_scratch("q_ssjf_")
-    replay = FileReplay(spark, chunks + [flush], root)
-    name = "ssjf_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.interval_full_join_purchases(replay.stream())
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    sink = spark.table(name).filter(F.col("user_id") >= 0)
-    result = snapshot_result(sink)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _flushed_join_replay(spark, sf_dir, "q_ssjf_",
+                                ops.interval_full_join_purchases)
 
 
 @contract(
@@ -1055,32 +827,8 @@ def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     click-attribution view. Sentinel flush and result filter as in the
     other outer variants.
     """
-    events = load_table(spark, sf_dir, "events")
-    chunks = time_ordered_chunks(events, "ts", 3)
-    flush = _watermark_sentinels(spark, events)
-    root = _fresh_scratch("q_ssjr_")
-    replay = FileReplay(spark, chunks + [flush], root)
-    name = "ssjr_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.interval_right_join_purchases(replay.stream())
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    sink = spark.table(name).filter(F.col("user_id") >= 0)
-    result = snapshot_result(sink)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _flushed_join_replay(spark, sf_dir, "q_ssjr_",
+                                ops.interval_right_join_purchases)
 
 
 @contract(
@@ -1108,26 +856,17 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 4096
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_shh_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_heavy_hitters_foreachbatch(
-            replay.stream(), "user_id",
-            state, os.path.join(root, "ckpt"), k,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
+    summary = _state_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "q_shh_",
+        lambda stream, state, ckpt: ops.stream_heavy_hitters_foreachbatch(
+            stream, "user_id", state, ckpt, k,
+        ),
+        lambda state: spark.read.parquet(state).collect(),  # bounded: persisted summary has <= k rows
+    )
     sk = SpaceSaving(k)
-    for r in spark.read.parquet(state).collect():  # bounded: persisted summary has <= k rows
+    for r in summary:
         sk._ingest(r["user_id"], r["count"], r["err"])
     rows = [(int(it), int(c)) for it, c, _e in sk.top(20)]
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(rows, "user_id long, n_events long")
 
 
@@ -1162,23 +901,13 @@ def q_stream_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportionally more likely to be retained.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_swres_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_weighted_reservoir_foreachbatch(
-            replay.stream(), "event_id", "value", 50,
-            state, os.path.join(root, "ckpt"),
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    rows = spark.read.parquet(state).collect()  # bounded: reservoir state has <= k rows
-    shutil.rmtree(root, ignore_errors=True)
+    rows = _state_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "q_swres_",
+        lambda stream, state, ckpt: ops.stream_weighted_reservoir_foreachbatch(
+            stream, "event_id", "value", 50, state, ckpt,
+        ),
+        lambda state: spark.read.parquet(state).collect(),  # bounded: reservoir state has <= k rows
+    )
     n = len(rows)
     return spark.createDataFrame(
         [(n,
@@ -1234,32 +963,25 @@ def q_stream_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     language (count, id checksum, char sum).
     """
     docs = load_table(spark, sf_dir, "documents")
-    root = _fresh_scratch("q_sndf_")
-    replay = FileReplay(spark, time_ordered_chunks(docs, "doc_id", 3),
-                        os.path.join(root, "in"))
-    state_root = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_near_dup_filter_foreachbatch(
-            replay.stream(schema=docs.schema), "doc_id", "text",
-            state_root, os.path.join(root, "ckpt"),
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    admitted = (
-        spark.read.parquet(os.path.join(state_root, "admitted")).drop("b")
+    return _state_replay(
+        spark, time_ordered_chunks(docs, "doc_id", 3), "q_sndf_",
+        lambda stream, state_root, ckpt: (
+            ops.stream_near_dup_filter_foreachbatch(
+                stream, "doc_id", "text", state_root, ckpt,
+            )
+        ),
+        lambda state_root: snapshot_result(
+            spark.read.parquet(os.path.join(state_root, "admitted"))
+            .drop("b")
+            .groupBy("lang")
+            .agg(
+                F.count("*").alias("n_admitted"),
+                F.sum("doc_id").cast("long").alias("id_checksum"),
+                F.sum("n_chars").cast("long").alias("sum_chars"),
+            )
+        ),
+        schema=docs.schema,
     )
-    final = admitted.groupBy("lang").agg(
-        F.count("*").alias("n_admitted"),
-        F.sum("doc_id").cast("long").alias("id_checksum"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-    result = snapshot_result(final)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 @contract(
@@ -1288,26 +1010,17 @@ def q_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_hw05_spark.operators.count_min import CountMinSketch
 
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_scms_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_count_min_foreachbatch(
-            replay.stream(), "event_type", state, os.path.join(root, "ckpt"),
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    blob = spark.read.parquet(state).collect()[0]["sketch"]  # bounded: single serialized sketch blob
+    blob = _state_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "q_scms_",
+        lambda stream, state, ckpt: ops.stream_count_min_foreachbatch(
+            stream, "event_type", state, ckpt,
+        ),
+        lambda state: spark.read.parquet(state).collect()[0]["sketch"],  # bounded: single serialized sketch blob
+    )
     sk = CountMinSketch.deserialize(bytes(blob))
     exact = events.groupBy("event_type").agg(F.count("*").alias("n")).collect()  # driver-sized: one row per event_type
     types = np.array([r["event_type"] for r in exact], dtype=object)
     ests = sk.query_many(types)
-    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [
             (r["event_type"], int(e), bool(int(e) == r["n"]))
@@ -1356,28 +1069,8 @@ def q_stream_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     because a pair meets only in the click's home bucket.
     """
     events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sbj_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 3), root)
-    name = "sbj_" + uuid.uuid4().hex[:8]
-    with _replay_state_partitions(spark, replay):
-        query = (
-            ops.band_join_clicks_purchases(replay.stream())
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = snapshot_result(spark.table(name))
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(root, ignore_errors=True)
-    return result
+    return _memory_replay(spark, time_ordered_chunks(events, "ts", 3),
+                          "q_sbj_", ops.band_join_clicks_purchases, "append")
 
 
 # --------------------------------------------------------------------------
@@ -1404,28 +1097,12 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_value_stats,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sewma_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "hour_epoch"], hourly_value_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = ewma_from_hourly(
-        spark.read.parquet(state).select("event_type", "hour_epoch", "s", "n")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_sewma_",
+        ["event_type", "hour_epoch"], hourly_value_stats,
+        lambda state: ewma_from_hourly(
+            state.select("event_type", "hour_epoch", "s", "n")
+        ).collect(),  # driver-sized: grouped rollup state
         "event_type string, hour_epoch long, n_window long, "
         "x double, ewma double",
     )
@@ -1455,29 +1132,12 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_anomaly_stats,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sanom_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "hour_epoch"], hourly_anomaly_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = anomaly_from_hourly(
-        spark.read.parquet(state).select("event_type", "hour_epoch",
-                                         "s", "s2", "n")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_sanom_",
+        ["event_type", "hour_epoch"], hourly_anomaly_stats,
+        lambda state: anomaly_from_hourly(
+            state.select("event_type", "hour_epoch", "s", "s2", "n")
+        ).collect(),  # driver-sized: grouped rollup state
         "event_type string, n_scored long, n_anomalies long, "
         "anomaly_checksum long",
     )
@@ -1504,28 +1164,12 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily_revenue_stats,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_scusum_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "day_epoch"], daily_revenue_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = cusum_from_daily(
-        spark.read.parquet(state).select("event_type", "day_epoch", "s")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_scusum_",
+        ["event_type", "day_epoch"], daily_revenue_stats,
+        lambda state: cusum_from_daily(
+            state.select("event_type", "day_epoch", "s")
+        ).collect(),  # driver-sized: grouped rollup state
         "event_type string, n_days long, cp_day_epoch long, "
         "max_abs_dev long",
     )
@@ -1553,29 +1197,12 @@ def q_stream_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
         jackknife_from_buckets,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sjk_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "bucket"], jackknife_bucket_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = jackknife_from_buckets(
-        spark.read.parquet(state).select("event_type", "bucket",
-                                         "s_b", "n_b")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_sjk_",
+        ["event_type", "bucket"], jackknife_bucket_stats,
+        lambda state: jackknife_from_buckets(
+            state.select("event_type", "bucket", "s_b", "n_b")
+        ).collect(),  # driver-sized: grouped rollup state
         "event_type string, n_events long, n_replicates long, "
         "mean_v double, jk_sum_d2_q long",
     )
@@ -1602,28 +1229,12 @@ def q_stream_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         contingency_stats,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_schi_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "par"], contingency_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = chi_square_from_contingency(
-        spark.read.parquet(state).select("event_type", "par", "obs")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_schi_",
+        ["event_type", "par"], contingency_stats,
+        lambda state: chi_square_from_contingency(
+            state.select("event_type", "par", "obs")
+        ).collect(),  # driver-sized: grouped rollup state
         "n_events long, dof long, chi2_q9 long, cramers_v double",
     )
 
@@ -1652,28 +1263,13 @@ def q_stream_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_type_counts,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sacf_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "hour_epoch"], hourly_type_counts,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = acf_from_hourly_counts(
-        spark.read.parquet(state).select("event_type", "hour_epoch", "x")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result, "lag long, n_pairs long, acf double"
+    return _rollup_replay(
+        spark, sf_dir, "q_sacf_",
+        ["event_type", "hour_epoch"], hourly_type_counts,
+        lambda state: acf_from_hourly_counts(
+            state.select("event_type", "hour_epoch", "x")
+        ).collect(),  # driver-sized: grouped rollup state
+        "lag long, n_pairs long, acf double",
     )
 
 
@@ -1700,28 +1296,13 @@ def q_stream_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly_type_counts,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sfano_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type", "hour_epoch"], hourly_type_counts,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = fano_from_hourly_counts(
-        spark.read.parquet(state).select("event_type", "hour_epoch", "x")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result, "event_type string, n_hours long, n_events long, fano double"
+    return _rollup_replay(
+        spark, sf_dir, "q_sfano_",
+        ["event_type", "hour_epoch"], hourly_type_counts,
+        lambda state: fano_from_hourly_counts(
+            state.select("event_type", "hour_epoch", "x")
+        ).collect(),  # driver-sized: grouped rollup state
+        "event_type string, n_hours long, n_events long, fano double",
     )
 
 
@@ -1748,28 +1329,13 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         psi_from_buckets,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_spsi_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["bucket"], psi_bucket_counts,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = psi_from_buckets(
-        spark.read.parquet(state).select("bucket", "n_a", "n_b")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result, "bucket long, n_a long, n_b long, psi_term double"
+    return _rollup_replay(
+        spark, sf_dir, "q_spsi_",
+        ["bucket"], psi_bucket_counts,
+        lambda state: psi_from_buckets(
+            state.select("bucket", "n_a", "n_b")
+        ).collect(),  # driver-sized: grouped rollup state
+        "bucket long, n_a long, n_b long, psi_term double",
     )
 
 
@@ -1796,30 +1362,12 @@ def q_stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         type_moment_stats,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_smom_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["event_type"], type_moment_stats,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = moments_finish(
-        spark.read.parquet(state).select(
-            "event_type", "n", "s1", "s2", "s3", "s4"
-        )
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_smom_",
+        ["event_type"], type_moment_stats,
+        lambda state: moments_finish(
+            state.select("event_type", "n", "s1", "s2", "s3", "s4")
+        ).collect(),  # driver-sized: grouped rollup state
         "event_type string, n long, m double, m2 double, "
         "skew double, kurt_excess double",
     )
@@ -1848,27 +1396,11 @@ def q_stream_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         bootstrap_weighted_sums,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    root = _fresh_scratch("q_sboot_")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4),
-                        os.path.join(root, "in"))
-    state = os.path.join(root, "state")
-    with _replay_state_partitions(spark, replay):
-        query = ops.stream_additive_rollup_foreachbatch(
-            replay.stream(), state, os.path.join(root, "ckpt"),
-            ["b"], bootstrap_weighted_sums,
-        ).start()
-        try:
-            while replay.push_next():
-                query.processAllAvailable()
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    result = bootstrap_finish(
-        spark.read.parquet(state).select("b", "n_eff", "sum_q")
-    ).collect()  # driver-sized: grouped hourly state
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        result,
+    return _rollup_replay(
+        spark, sf_dir, "q_sboot_",
+        ["b"], bootstrap_weighted_sums,
+        lambda state: bootstrap_finish(
+            state.select("b", "n_eff", "sum_q")
+        ).collect(),  # driver-sized: grouped rollup state
         "b int, n_eff long, sum_q long, boot_mean_milli double",
     )

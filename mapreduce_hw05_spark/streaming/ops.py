@@ -340,75 +340,6 @@ def stream_upsert_foreachbatch(
     )
 
 
-def stream_exactly_once_agg_foreachbatch(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    keys: list[str] | None = None,
-):
-    """Row-level exactly-once streaming aggregation into a parquet state
-    table: per-batch deltas (count + sum per key) are ADDED into the
-    state — a duplicate-sensitive sink, unlike a keyed upsert, so any
-    duplicate row that slips past upstream dedup inflates the result and
-    fails the batch-oracle hash.
-
-    foreachBatch itself is only at-least-once (a recovered query re-runs
-    the last uncommitted batch), so the sink keeps a committed-batch
-    manifest ``_batches/<id>`` INSIDE the state directory and swaps
-    state + manifest in one atomic directory rename: a re-delivered batch
-    id is a no-op, which upgrades the additive merge to exactly-once.
-    Underscore-prefixed entries are invisible to Spark's file index, so
-    the manifest rides the parquet dir without disturbing reads. A real
-    deployment swaps the rewrite for a transactional table format
-    (MERGE + txn id), keeping this exact plan.
-    """
-    import os
-
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
-
-    keys = keys or ["user_id"]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return  # replayed batch already committed — exactly-once guard
-        spark = batch_df.sparkSession
-        delta = batch_df.groupBy(*keys).agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            base = spark.read.parquet(state_dir)
-            merged = (
-                base.unionByName(delta)
-                .groupBy(*keys)
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
-            )
-        else:
-            merged = delta
-        tmp = state_dir.rstrip("/") + ".next"
-        merged.write.mode("overwrite").parquet(tmp)
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def stream_sketch_rollup_foreachbatch(
     stream: DataFrame,
     key_cols: list[str],
@@ -1226,17 +1157,26 @@ def stream_additive_rollup_foreachbatch(
 ):
     """Generic exactly-once ADDITIVE keyed rollup into a parquet state
     table: ``delta_fn(batch_df)`` produces a keyed delta whose non-key
-    columns are all SUM-mergeable (integer counts/sums), and each batch's
+    columns are all SUM-mergeable (counts and sums), and each batch's
     delta is folded into the state by a per-alias re-sum.
 
-    Same duplicate-sensitivity and recovery contract as
-    :func:`stream_exactly_once_agg_foreachbatch`: foreachBatch is only
-    at-least-once, so a committed-batch manifest rides inside the state
-    directory and the state + manifest swap in one atomic rename-aside —
-    a re-delivered batch id is a no-op. The additive merge means the
-    final state is EXACTLY the batch aggregate of the union of all
-    chunks, which is what lets a downstream plan (e.g. the EWMA finisher)
-    be bit-identical to its batch twin.
+    The sink is duplicate-SENSITIVE, unlike a keyed upsert: any
+    duplicate row that slips past upstream dedup inflates the result
+    and fails the batch-oracle hash. foreachBatch itself is only
+    at-least-once (a recovered query re-runs the last uncommitted
+    batch), so the sink keeps a committed-batch manifest
+    ``_batches/<id>`` INSIDE the state directory and swaps state +
+    manifest in one atomic rename-aside: a re-delivered batch id is a
+    no-op, which upgrades the additive merge to exactly-once.
+    Underscore-prefixed entries are invisible to Spark's file index, so
+    the manifest rides the parquet dir without disturbing reads. A real
+    deployment swaps the rewrite for a transactional table format
+    (MERGE + txn id), keeping this exact plan.
+
+    The additive merge means the final state is EXACTLY the batch
+    aggregate of the union of all chunks, which is what lets a
+    downstream plan (e.g. the EWMA finisher) be bit-identical to its
+    batch twin.
     """
     import os
 

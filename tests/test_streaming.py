@@ -1,26 +1,28 @@
 """Streaming engine tests (SURVEY §5.2 item 3): batch-equivalence by file
-replay, watermark late-data drop, stateful ops.
+replay, watermark late-data drop, stateful ops, the exactly-once sinks.
 
-Each test replays the sf0.001 events fixture (1000 rows) in controlled
-micro-batches (write chunk → processAllAvailable → next chunk) into a
-memory sink, then compares against the batch analog.
+Each replay test drives the sf0.001 events fixture (1000 rows) through
+``streaming.replay.run_replay`` — the engine's one replay driver, so the
+tests push, wait and clean up exactly as the streaming contracts do —
+into a memory or foreachBatch sink, then compares against the batch
+analog. The sink tests call a factory's foreachBatch function directly
+(``_capture_foreach_batch``) to inject re-delivered batches and
+crash-mid-swap states; one test pins that a failed replay leaves
+nothing behind.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_hw05_spark.sources import load_table
 from mapreduce_hw05_spark.streaming import ops
-from mapreduce_hw05_spark.streaming.replay import FileReplay, time_ordered_chunks
+from mapreduce_hw05_spark.streaming.replay import run_replay, time_ordered_chunks
 
 SF_DIR = "/root/testdata/sf0.001"
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 
 @pytest.fixture()
@@ -28,45 +30,22 @@ def events(spark):
     return load_table(spark, SF_DIR, "events")
 
 
-def replay_through(spark, chunks, op, output_mode: str, schema=None):
-    """Run a streaming op over a chunked replay; return the memory table DF.
+def replay_through(spark, chunks, op, output_mode: str):
+    """Run a streaming op over a chunked replay into a memory sink;
+    return a snapshot of the sink that outlives the replay's cleanup.
 
-    r12: the replay runs under the engine's own row-scaled state
-    partitioning (`_replay_state_partitions`, exactly as every streaming
-    CONTRACT does). The test session's 32 shuffle partitions meant a
-    stream-stream join spun up 32×4 state-store instances per
-    micro-batch — measured 25.4 s → 11.8 s on the seed-11 band-join
-    replay at 4 partitions, identical results (partition count is not a
-    result property; every test here asserts against a batch analog or
-    a reference replay anyway).
+    The replay goes through the same memory-sink wrapper and driver
+    (``run_replay``) as the streaming CONTRACTS, so it runs under the
+    engine's row-scaled state partitioning. r12: the test session's 32
+    shuffle partitions meant a stream-stream join spun up 32×4
+    state-store instances per micro-batch — measured 25.4 s → 11.8 s on
+    the seed-11 band-join replay at 4 partitions, identical results
+    (partition count is not a result property; every test here asserts
+    against a batch analog or a reference replay anyway).
     """
-    from mapreduce_hw05_spark.plans.streaming_queries import (
-        _replay_state_partitions,
-    )
+    from mapreduce_hw05_spark.plans.streaming_queries import _memory_replay
 
-    name = "sink_" + uuid.uuid4().hex[:8]
-    root = os.path.join(SCRATCH, name)
-    replay = FileReplay(spark, chunks, root)
-    with _replay_state_partitions(spark, replay):
-        stream_df = op(replay.stream(schema) if schema else replay.stream())
-        ckpt = os.path.join(root, "ckpt")
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            while replay.push_next():
-                q.processAllAvailable()
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.table(name)
-    out = out.localCheckpoint()  # detach from the stopped query
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    return _memory_replay(spark, chunks, "test_replay_", op, output_mode)
 
 
 def as_sorted_rows(df):
@@ -226,17 +205,13 @@ def test_stream_upsert_foreachbatch(spark, events, tmp_path):
     """foreachBatch MERGE sink: after replaying all chunks, the parquet
     state table holds exactly the latest event per user."""
     state = str(tmp_path / "state")
-    root = str(tmp_path / "replay")
-    replay = FileReplay(spark, time_ordered_chunks(events, "ts", 4), root)
-    q = ops.stream_upsert_foreachbatch(
-        replay.stream(), state, str(tmp_path / "ckpt")
-    ).start()
-    try:
-        while replay.push_next():
-            q.processAllAvailable()
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_replay(
+        spark, time_ordered_chunks(events, "ts", 4), "test_upsert_",
+        lambda stream, root: ops.stream_upsert_foreachbatch(
+            stream, state, os.path.join(root, "ckpt")
+        ).start(),
+        lambda root: None,
+    )
     got = spark.read.parquet(state)
     from pyspark.sql import Window as W
 
@@ -262,35 +237,16 @@ def test_exactly_once_sink_batch_manifest_guard(spark, tmp_path):
     """A re-delivered foreachBatch batch id must be a no-op: the additive
     sink is duplicate-sensitive by design, so the committed-batch
     manifest inside the state dir is what makes it exactly-once."""
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_exactly_once_agg_foreachbatch,
-    )
+    from mapreduce_hw05_spark.plans.streaming_queries import user_event_totals
 
     state = str(tmp_path / "state")
     batch = spark.createDataFrame(
         [(1, 10.0), (1, 5.0), (2, 2.0)], "user_id long, value double"
     )
-
-    # Capture the foreachBatch callable without starting a real stream:
-    # the factory only touches stream.writeStream.foreachBatch(...).
-    captured = {}
-
-    class _CaptureWriter:
-        def foreachBatch(self, fn):
-            captured["fn"] = fn
-            return self
-
-        def outputMode(self, *_):
-            return self
-
-        def option(self, *_):
-            return self
-
-    class _FakeStream:
-        writeStream = _CaptureWriter()
-
-    stream_exactly_once_agg_foreachbatch(_FakeStream(), state, str(tmp_path / "ckpt"))
-    apply_batch = captured["fn"]
+    apply_batch = _capture_foreach_batch(
+        ops.stream_additive_rollup_foreachbatch, state,
+        str(tmp_path / "ckpt"), ["user_id"], user_event_totals,
+    )
 
     def snapshot():
         return {
@@ -318,18 +274,14 @@ def test_compacting_sink_bounds_file_count(spark, tmp_path):
 
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     out = str(tmp_path / "out")
-    replay = FileReplay(
-        spark, time_ordered_chunks(events, "ts", 6), str(tmp_path / "in")
+    run_replay(
+        spark, time_ordered_chunks(events, "ts", 6), "test_compact_",
+        lambda stream, root: ops.stream_append_compacting_sink(
+            stream, out, os.path.join(root, "ckpt"), max_files=4,
+            target_files=1,
+        ).start(),
+        lambda root: None,
     )
-    q = ops.stream_append_compacting_sink(
-        replay.stream(), out, str(tmp_path / "ckpt"), max_files=4, target_files=1
-    ).start()
-    try:
-        while replay.push_next():
-            q.processAllAvailable()
-        q.processAllAvailable()
-    finally:
-        q.stop()
     n_files = len(glob.glob(out + "/part-*") + glob.glob(out + "/b*-*.parquet"))
     assert n_files <= 4, n_files  # 6 batches appended, compaction fired
     got = spark.read.parquet(out)
@@ -672,15 +624,12 @@ def test_exactly_once_sink_survives_crash_mid_swap(spark, tmp_path):
     the next batch the sink must recover the fully-written .next state
     (roll-forward) instead of restarting from nothing — the silent
     state-reset bug of the old rmtree-then-rename swap."""
-    import os
-
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_exactly_once_agg_foreachbatch,
-    )
+    from mapreduce_hw05_spark.plans.streaming_queries import user_event_totals
 
     state = str(tmp_path / "state")
     apply_batch = _capture_foreach_batch(
-        stream_exactly_once_agg_foreachbatch, state, str(tmp_path / "ckpt")
+        ops.stream_additive_rollup_foreachbatch, state,
+        str(tmp_path / "ckpt"), ["user_id"], user_event_totals,
     )
     batch = spark.createDataFrame(
         [(1, 10.0), (1, 5.0), (2, 2.0)], "user_id long, value double"
@@ -813,27 +762,10 @@ def test_additive_rollup_sink_manifest_guard_and_merge(spark, tmp_path):
     b0 = mk([(base, "click", 1.5), (base, "click", 2.5)])
     b1 = mk([(base, "click", 4.0), (base + dt.timedelta(hours=1), "view", 8.0)])
 
-    captured = {}
-
-    class _CaptureWriter:
-        def foreachBatch(self, fn):
-            captured["fn"] = fn
-            return self
-
-        def outputMode(self, *_):
-            return self
-
-        def option(self, *_):
-            return self
-
-    class _FakeStream:
-        writeStream = _CaptureWriter()
-
-    stream_additive_rollup_foreachbatch(
-        _FakeStream(), state, str(tmp_path / "ckpt"),
+    apply_batch = _capture_foreach_batch(
+        stream_additive_rollup_foreachbatch, state, str(tmp_path / "ckpt"),
         ["event_type", "hour_epoch"], hourly_value_stats,
     )
-    apply_batch = captured["fn"]
 
     def snapshot():
         return {
@@ -853,3 +785,38 @@ def test_additive_rollup_sink_manifest_guard_and_merge(spark, tmp_path):
         ("click", epoch0): (8000, 3),
         ("view", epoch0 + 3600): (8000, 1),
     }
+
+
+def test_failed_replay_leaves_nothing_behind(spark, events):
+    """A micro-batch that raises must still stop the query, drop its
+    memory view, remove the scratch root and restore the session's
+    shuffle-partition count: ``run_replay`` cleans up in ``finally``.
+    The failure is JVM-side (``raise_error``), so no py4j callback is
+    involved."""
+    from pyspark.errors import StreamingQueryException
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = {}
+
+    def start(stream, root):
+        seen["root"] = root
+        seen["view"] = os.path.basename(root)
+        query = (
+            stream.select(F.raise_error(F.lit("replay-boom")).alias("x"))
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(seen["view"])
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .start()
+        )
+        seen["view_at_start"] = spark.catalog.tableExists(seen["view"])
+        return query
+
+    with pytest.raises(StreamingQueryException, match="replay-boom"):
+        run_replay(spark, time_ordered_chunks(events, "ts", 2),
+                   "test_failed_", start, lambda root: None)
+    assert seen["view_at_start"]  # the view existed, so its drop is tested
+    assert not spark.streams.active
+    assert not spark.catalog.tableExists(seen["view"])
+    assert not os.path.exists(seen["root"])
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
