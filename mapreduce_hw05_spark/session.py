@@ -13,6 +13,21 @@ The engine is designed for a multi-executor cluster; locally it runs on
 Both are runtime-settable SQL confs, so :func:`ensure_runtime_confs` can
 repair a session the caller built without them (the correctness driver
 passes in its own session).
+
+Two more confs of :func:`get_spark` cut the local engine's per-task
+floor (PERF.md "per-task floor"):
+
+- ``spark.sql.shuffle.partitions`` = the ``local[N]`` core count
+  (:func:`local_cores`). Every shuffle-map task writes one bucket per
+  partition and every reduce stage runs one task per partition; more
+  partitions than cores only adds tasks on a single machine.
+- ``spark.python.daemon.module`` = :mod:`.pydaemon`. Python workers then
+  skip CPython 3.11's re-read of every unchanged zip archive on the
+  worker path (``pyspark.zip``), ~0.13 s at the start of every
+  Python-UDF task.
+
+The daemon module is a static conf: a session the caller built keeps
+the stock daemon, as it keeps its own ``spark.executorEnv.PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -37,6 +52,13 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def local_cores() -> int:
+    """Cores of the engine's ``local[N]`` master: ``SPARK_GRAFT_CPUS``, or
+    every core this process may run on when it is unset or ``*``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable confs the engine relies on.
 
@@ -53,15 +75,16 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             pass
     # A foreign local-mode session left at Spark's 200-partition default
     # over-shuffles the fixture workloads badly; right-size it to the
-    # machine. Never touches an explicitly-configured value, and never
-    # fires off local mode (cluster sizing belongs to cluster_scale_confs).
+    # cores, as get_spark does. Never touches an explicitly-configured
+    # value, and never fires off local mode (cluster sizing belongs to
+    # cluster_scale_confs).
     try:
         master = spark.conf.get("spark.master", "")
         if master.startswith("local") and (
             spark.conf.get("spark.sql.shuffle.partitions") == "200"
         ):
             spark.conf.set(
-                "spark.sql.shuffle.partitions", str(os.cpu_count() or 8)
+                "spark.sql.shuffle.partitions", str(local_cores())
             )
     except Exception:
         pass
@@ -88,22 +111,26 @@ def get_spark(app_name: str = "mapreduce_hw05_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
     Local parallelism and shuffle partitioning come from
-    ``SPARK_GRAFT_CPUS`` (default: all cores). On a real cluster the same
-    code runs unchanged — only ``master`` and memory sizing differ.
+    ``SPARK_GRAFT_CPUS`` (default: all cores; :func:`local_cores`). On a
+    real cluster the same code runs unchanged — only ``master``, memory
+    and partition sizing differ (:func:`cluster_scale_confs`).
 
     Python workers get the package's parent directory on their
     ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``): UDF closures that
     reference engine modules then unpickle whatever the driver's working
-    directory is, not only from the repository root.
+    directory is, not only from the repository root. They fork from
+    :mod:`.pydaemon`, which stops them re-reading unchanged zip archives
+    on every task.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", str(local_cores()))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -24,10 +24,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    # r12: 8 local cores (was 4) — the parity sweep now overlaps 4
-    # concurrent contract jobs (test_oracle_parity), and the heavier
-    # single-job engine tests were core-starved at 4 on this 32-core
-    # host. Still env-overridable for constrained runners.
+    # Defaults to 8 local cores: the parity sweep overlaps 4 concurrent
+    # contract jobs (test_oracle_parity), and the heavier single-job
+    # engine tests were core-starved at 4 on a 32-core host. The Tier-1
+    # command sets SPARK_GRAFT_CPUS to the host's cores; get_spark sizes
+    # shuffle partitions to the same number.
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark

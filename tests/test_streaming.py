@@ -290,9 +290,10 @@ def test_compacting_sink_bounds_file_count(spark, tmp_path):
         events.select(F.sum("user_id")).first()[0]
 
 
-def _capture_foreach_batch(factory, *args, **kwargs):
+def _capture_foreach_batch(factory, *args, schema=None, **kwargs):
     """Extract a sink factory's foreachBatch callable without starting a
-    real stream (the factories only touch stream.writeStream...)."""
+    real stream (the factories only touch stream.writeStream... and, for
+    the sketch rollup, stream.schema — pass it as ``schema``)."""
     captured = {}
 
     class _CaptureWriter:
@@ -309,7 +310,9 @@ def _capture_foreach_batch(factory, *args, **kwargs):
     class _FakeStream:
         writeStream = _CaptureWriter()
 
-    factory(_FakeStream(), *args, **kwargs)
+    stream = _FakeStream()
+    stream.schema = schema
+    factory(stream, *args, **kwargs)
     return captured["fn"]
 
 
@@ -326,34 +329,13 @@ def test_sketch_rollup_sink_survives_crash_mid_swap(spark, tmp_path):
     )
 
     state = str(tmp_path / "state")
-
-    class _S:
-        pass
-
     batch = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 7)], "k string, v long"
     )
-
-    captured = {}
-
-    class _CaptureWriter:
-        def foreachBatch(self, fn):
-            captured["fn"] = fn
-            return self
-
-        def outputMode(self, *_):
-            return self
-
-        def option(self, *_):
-            return self
-
-    fake = _S()
-    fake.schema = batch.schema  # the factory derives state_schema from it
-    fake.writeStream = _CaptureWriter()
-    stream_sketch_rollup_foreachbatch(
-        fake, ["k"], "v", state, str(tmp_path / "ckpt"), k=64
+    apply_batch = _capture_foreach_batch(
+        stream_sketch_rollup_foreachbatch, ["k"], "v", state,
+        str(tmp_path / "ckpt"), k=64, schema=batch.schema,
     )
-    apply_batch = captured["fn"]
 
     def estimates():
         return {
@@ -400,26 +382,12 @@ def test_sketch_rollup_distributed_state_matches_driver_state(spark, tmp_path):
     )
 
     def run(state, **kw):
-        class _S:
-            pass
-
-        fake = _S()
-        fake.schema = batches[0].schema
-        fake.writeStream = type(
-            "_W",
-            (),
-            {
-                "foreachBatch": lambda s, fn: (captured.__setitem__("fn", fn), s)[1],
-                "outputMode": lambda s, *_: s,
-                "option": lambda s, *_: s,
-            },
-        )()
-        captured = {}
-        stream_sketch_rollup_foreachbatch(
-            fake, ["k"], "v", state, state + "_ckpt", k=64, **kw
+        apply_batch = _capture_foreach_batch(
+            stream_sketch_rollup_foreachbatch, ["k"], "v", state,
+            state + "_ckpt", k=64, schema=batches[0].schema, **kw,
         )
         for i, b in enumerate(batches):
-            captured["fn"](b, i)
+            apply_batch(b, i)
         return {
             r["k"]: (
                 ThetaSketch.deserialize(bytes(r["sketch"])).theta,
@@ -446,30 +414,14 @@ def test_sketch_rollup_distributed_replayed_batch_is_noop(spark, tmp_path):
 
     state = str(tmp_path / "state")
 
-    # built directly — the shared helper can't inject the schema attr
-    class _S:
-        pass
-
     batch = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 7)], "k string, v long"
     )
-    captured = {}
-    fake = _S()
-    fake.schema = batch.schema
-    fake.writeStream = type(
-        "_W",
-        (),
-        {
-            "foreachBatch": lambda s, fn: (captured.__setitem__("fn", fn), s)[1],
-            "outputMode": lambda s, *_: s,
-            "option": lambda s, *_: s,
-        },
-    )()
-    stream_sketch_rollup_foreachbatch(
-        fake, ["k"], "v", state, str(tmp_path / "ckpt"), k=64,
-        max_driver_keys=-1,
+    apply = _capture_foreach_batch(
+        stream_sketch_rollup_foreachbatch, ["k"], "v", state,
+        str(tmp_path / "ckpt"), k=64, max_driver_keys=-1,
+        schema=batch.schema,
     )
-    apply = captured["fn"]
     apply(batch, 0)
 
     def estimates():
