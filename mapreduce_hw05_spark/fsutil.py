@@ -1,4 +1,5 @@
-"""Crash-safe directory replacement for parquet state/sink directories.
+"""Crash-safe directory replacement and the exactly-once commit for
+parquet state/sink directories.
 
 The sinks in :mod:`mapreduce_hw05_spark.streaming.ops` and the table
 maintenance passes rewrite a directory by writing a complete ``.next``
@@ -25,6 +26,16 @@ either the previous or the new state exists under a well-known name, so
   the promotion, so a replayed foreachBatch id remains a no-op.
 - ``dst`` missing, only ``.old`` present → roll BACK: restore ``.old``;
   the checkpoint will replay the uncommitted batch against it.
+
+``commit_once(dst, batch_id, write_tmp)`` is the exactly-once commit
+the foreachBatch state sinks share. Its committed-batch manifest is a
+directory of empty ``_batches/<id>`` files INSIDE ``dst`` (underscore
+entries are invisible to Spark's file index). A commit recovers ``dst``,
+returns if ``batch_id`` is already in the manifest, has ``write_tmp``
+write the complete new state into ``<dst>.next``, copies the manifest
+there with ``batch_id`` added, and swaps state and manifest in together:
+a re-delivered batch id is a no-op, also across a crash mid-swap.
+``rewrite_dir`` is that write-copy-swap without the marker check.
 
 On a POSIX filesystem both renames are atomic; on an object store the
 same protocol is a manifest swap (pointer update), as the sink
@@ -73,3 +84,50 @@ def recover_dir(dst: str, tmp: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
     elif os.path.isdir(old):
         os.rename(old, dst)  # roll back: replay restores the lost batch
+
+
+_MANIFEST = "_batches"
+
+
+def _next_path(dst: str) -> str:
+    return dst.rstrip("/") + ".next"
+
+
+def recover(dst: str) -> None:
+    """:func:`recover_dir` with the protocol's own ``.next`` name."""
+    recover_dir(dst, _next_path(dst))
+
+
+def committed(dst: str, batch_id: int) -> bool:
+    """Whether ``batch_id`` is in ``dst``'s committed-batch manifest."""
+    return os.path.exists(os.path.join(dst, _MANIFEST, str(batch_id)))
+
+
+def mark_committed(dst: str, *batch_ids) -> None:
+    """Add ``batch_ids`` to ``dst``'s manifest (created if missing)."""
+    marker_dir = os.path.join(dst, _MANIFEST)
+    os.makedirs(marker_dir, exist_ok=True)
+    for b in batch_ids:
+        open(os.path.join(marker_dir, str(b)), "w").close()
+
+
+def rewrite_dir(dst: str, write_tmp, batch_id: int | None = None) -> None:
+    """Swap in the copy ``write_tmp(tmp)`` writes, with ``dst``'s
+    manifest (plus ``batch_id``). If ``write_tmp`` raises, ``dst`` is
+    untouched; once ``dst`` exists, :func:`recover` deletes the remnant."""
+    tmp = _next_path(dst)
+    write_tmp(tmp)
+    marker_dir = os.path.join(dst, _MANIFEST)
+    carried = os.listdir(marker_dir) if os.path.isdir(marker_dir) else []
+    mark_committed(tmp, *carried, *([] if batch_id is None else [batch_id]))
+    replace_dir(tmp, dst)
+
+
+def commit_once(dst: str, batch_id: int, write_tmp) -> bool:
+    """Commit ``write_tmp``'s state as ``batch_id`` unless that id is
+    already committed (then return False without calling it)."""
+    recover(dst)
+    if committed(dst, batch_id):
+        return False
+    rewrite_dir(dst, write_tmp, batch_id)
+    return True

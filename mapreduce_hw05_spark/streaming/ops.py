@@ -10,7 +10,11 @@ at scale every stateful op here holds state proportional to
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
@@ -278,6 +282,67 @@ def stateful_user_counts_v2(events: DataFrame) -> DataFrame:
     )
 
 
+# ------------------------------------------------- exactly-once state sinks
+
+
+def _commit_once_sink(stream: DataFrame, state_dir: str, checkpoint_dir: str,
+                      write_state):
+    """foreachBatch writer shared by the exactly-once state sinks.
+
+    ``write_state(batch_df, tmp)`` holds only the sink's own logic: it
+    writes the complete new state (old state folded with the batch) into
+    ``tmp``. Everything else is here and in ``fsutil``: recover a crash
+    mid-swap, skip an empty batch, skip a batch id already in the
+    committed-batch manifest, then commit state + manifest in one
+    rename-aside swap (``fsutil.commit_once``).
+    """
+    from mapreduce_hw05_spark.fsutil import commit_once, recover
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        recover(state_dir)
+        if not batch_df.isEmpty():
+            commit_once(
+                state_dir, batch_id, lambda tmp: write_state(batch_df, tmp)
+            )
+
+    return (
+        stream.writeStream.foreachBatch(apply_batch)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
+
+
+def _state_rows(state_dir: str) -> list[dict]:
+    """Every row of a committed state table, read driver-side with
+    pyarrow; ``[]`` before the first commit."""
+    if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+        return []
+    return [
+        rec
+        for part in sorted(os.listdir(state_dir))
+        if part.endswith(".parquet")
+        for rec in pq.read_table(os.path.join(state_dir, part)).to_pylist()
+    ]
+
+
+def _write_state(tmp: str, table: pa.Table) -> None:
+    """Write a driver-sized state table as one part plus ``_SUCCESS``."""
+    os.makedirs(tmp, exist_ok=True)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+
+def _footer_rows(root: str) -> int:
+    """Rows of every parquet file under ``root``, from footers only (no
+    data read); 0 when ``root`` is missing."""
+    return sum(
+        pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
 def stream_upsert_foreachbatch(
     stream: DataFrame,
     state_dir: str,
@@ -290,25 +355,19 @@ def stream_upsert_foreachbatch(
     lakehouse table" recipe when no transactional table format is
     mounted.
 
-    foreachBatch hands over (batch_df, batch_id); with the checkpoint
-    tracking batch ids the merge is effectively-once (a replayed batch
-    re-merges the same images — idempotent because the merge is
-    keyed). State is read+rewritten per batch; a real deployment swaps
-    the parquet rewrite for a format with MERGE support, keeping this
-    exact plan.
+    Exactly-once: the sink commits through fsutil's committed-batch
+    manifest and rename-aside swap (``_commit_once_sink``), so a
+    re-delivered batch id is a no-op (one ``isEmpty`` job, no merge).
+    The keyed merge is idempotent anyway, so the manifest changes cost,
+    not results. State is read+rewritten per batch; a real deployment
+    swaps the parquet rewrite for a format with MERGE support, keeping
+    this exact plan.
     """
-    import os
-
     from pyspark.sql import Window as W
 
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
     from mapreduce_hw05_spark.operators.cdc import merge_upsert
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
         latest = (
             batch_df.withColumn(
                 "__rn",
@@ -323,21 +382,15 @@ def stream_upsert_foreachbatch(
             .withColumn("op", F.lit("U"))
         )
         if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            base = spark.read.parquet(state_dir)
+            base = batch_df.sparkSession.read.parquet(state_dir)
             merged = merge_upsert(base, latest, keys)
         else:
             merged = latest.drop("op")
-        # Rewrite via a temp dir: the plan reads state_dir, so writing
-        # over it in place would race the scan.
-        tmp = state_dir.rstrip("/") + ".next"
+        # tmp, not state_dir: the plan reads state_dir, so writing over
+        # it in place would race the scan.
         merged.write.mode("overwrite").parquet(tmp)
-        replace_dir(tmp, state_dir)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_sketch_rollup_foreachbatch(
@@ -372,15 +425,12 @@ def stream_sketch_rollup_foreachbatch(
       state (engine-tested), so a stream can cross the threshold
       mid-flight.
 
-    Exactly-once via the same committed-batch manifest + atomic
-    directory swap as the additive CDC sink (a replayed foreachBatch id
-    is a no-op).
+    Exactly-once through fsutil's committed-batch manifest + atomic
+    directory swap, like the sibling state sinks (a replayed
+    foreachBatch id is a no-op).
     """
-    import os
-
     from pyspark.sql import types as T
 
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
     from mapreduce_hw05_spark.operators.theta_sketch import (
         ThetaSketch,
         theta_sketch_merge_partials,
@@ -391,8 +441,6 @@ def stream_sketch_rollup_foreachbatch(
         [stream.schema[c] for c in key_cols]
         + [T.StructField("sketch", T.BinaryType())]
     )
-
-    import pyarrow as pa
 
     #: Spark -> Arrow types for the driver-side state write (keys only;
     #: extend as new key types appear in contracts).
@@ -420,60 +468,21 @@ def stream_sketch_rollup_foreachbatch(
                 "(max_driver_keys=-1)"
             ) from None
 
-    def _persisted_key_count() -> int:
-        """State row count from parquet FOOTERS only (no data read)."""
-        import pyarrow.parquet as pq
-
-        if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            return 0
-        return sum(
-            pq.ParquetFile(os.path.join(state_dir, part)).metadata.num_rows
-            for part in os.listdir(state_dir)
-            if part.endswith(".parquet")
-        )
-
-    def _commit_markers(tmp: str, marker_dir: str, batch_id: int) -> None:
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
-
-    def _apply_batch_distributed(
-        batch_df: DataFrame, batch_id: int, marker_dir: str
-    ) -> None:
-        import shutil
-
-        spark = batch_df.sparkSession
-        parts = theta_sketch_partials(batch_df, key_cols, value_col, k)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            prev = spark.read.schema(state_schema).parquet(state_dir)
-            parts = parts.unionByName(prev)
-        merged = theta_sketch_merge_partials(parts, key_cols)
-        tmp = state_dir.rstrip("/") + ".next"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # Spark writes the state table (and its own _SUCCESS) before the
-        # swap, so the lazy read of the old state above is fully
-        # consumed by the time replace_dir runs.
-        merged.write.mode("overwrite").parquet(tmp)
-        _commit_markers(tmp, marker_dir, batch_id)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return
-        if _persisted_key_count() > max_driver_keys:
-            _apply_batch_distributed(batch_df, batch_id, marker_dir)
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
+        n_keys = _footer_rows(state_dir)
+        if n_keys > max_driver_keys:
+            parts = theta_sketch_partials(batch_df, key_cols, value_col, k)
+            if n_keys:
+                prev = batch_df.sparkSession.read.schema(
+                    state_schema
+                ).parquet(state_dir)
+                parts = parts.unionByName(prev)
+            # Spark writes the state table (and its own _SUCCESS) before
+            # the swap, so the lazy read of the old state above is fully
+            # consumed by the time the swap runs.
+            theta_sketch_merge_partials(parts, key_cols).write.mode(
+                "overwrite"
+            ).parquet(tmp)
             return
         # Collect per-partition PARTIALS and merge here: this loop is
         # already the driver-side merge point (state ∪ batch), so the
@@ -483,31 +492,17 @@ def stream_sketch_rollup_foreachbatch(
         # is driver-sized by the same argument that lets partials
         # collect, so its read/modify/write is direct parquet IO, not
         # two more scheduled jobs. (Past max_driver_keys persisted keys
-        # the routing above switches to the distributed merge + write.)
+        # the branch above takes the distributed merge + write.)
         partials: dict[tuple, ThetaSketch] = {}
-        for row in theta_sketch_partials(
+        rows = theta_sketch_partials(
             batch_df, key_cols, value_col, k
-        ).collect():  # bounded: one sketch row per key
-            key = tuple(row[c] for c in key_cols)
-            sk = ThetaSketch.deserialize(bytes(row["sketch"]))
+        ).collect()  # bounded: one sketch row per key
+        for rec in [r.asDict() for r in rows] + _state_rows(state_dir):
+            key = tuple(rec[c] for c in key_cols)
+            sk = ThetaSketch.deserialize(bytes(rec["sketch"]))
             partials[key] = partials[key].union(sk) if key in partials else sk
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            for part in sorted(os.listdir(state_dir)):
-                if not part.endswith(".parquet"):
-                    continue
-                for rec in pq.read_table(
-                    os.path.join(state_dir, part)
-                ).to_pylist():
-                    key = tuple(rec[c] for c in key_cols)
-                    old = ThetaSketch.deserialize(bytes(rec["sketch"]))
-                    partials[key] = (
-                        partials[key].union(old) if key in partials else old
-                    )
-        tmp = state_dir.rstrip("/") + ".next"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
         keys_sorted = sorted(partials, key=lambda t: tuple(map(str, t)))
-        table = pa.table(
+        _write_state(tmp, pa.table(
             {
                 **{
                     c: [key[i] for key in keys_sorted]
@@ -519,16 +514,9 @@ def stream_sketch_rollup_foreachbatch(
                 [(c, _pa_key_type(c)) for c in key_cols]
                 + [("sketch", pa.binary())]
             ),
-        )
-        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        _commit_markers(tmp, marker_dir, batch_id)
+        ))
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_append_compacting_sink(
@@ -553,28 +541,30 @@ def stream_append_compacting_sink(
     the rewrite scopes to a partition subdirectory (compact only
     partitions whose file count tripped) — same swap protocol.
 
-    Replay-safe: foreachBatch is at-least-once, so the sink keeps the
-    same committed-batch manifest (``_batches/<id>`` — underscore dirs
-    are invisible to Spark's file index) as the sibling state sinks, and
+    Replay-safe: foreachBatch is at-least-once, so the sink keeps fsutil's
+    committed-batch manifest (``_batches/<id>`` — underscore dirs are
+    invisible to Spark's file index) like the sibling state sinks, and
     appends under deterministic per-batch file names (``b<id>-<i>``,
-    crash remnants deleted before re-staging). A replayed batch id is a
-    no-op; a half-appended batch is re-staged cleanly; the manifest
-    survives compaction because the rewrite copies it into the new
-    directory before the crash-safe rename-aside swap.
+    crash remnants deleted before re-staging). Unlike them it appends in
+    place and marks the batch in place; the compaction commits through
+    ``fsutil.rewrite_dir``, which carries the manifest into the new
+    directory before the crash-safe rename-aside swap. A replayed batch
+    id is a no-op; a half-appended batch is re-staged cleanly.
     """
     import glob
-    import os
     import shutil
 
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
+    from mapreduce_hw05_spark.fsutil import (
+        committed,
+        mark_committed,
+        recover,
+        rewrite_dir,
+    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_dir(out_dir, out_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(out_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return  # replayed batch already committed
+        recover(out_dir)
+        if batch_df.isEmpty() or committed(out_dir, batch_id):
+            return  # empty, or a replayed batch already committed
         spark = batch_df.sparkSession
         # Stage the batch, then move its files in under deterministic
         # names so a replay of a half-appended batch replaces rather
@@ -590,22 +580,19 @@ def stream_append_compacting_sink(
             os.rename(src, os.path.join(out_dir, f"b{batch_id}-{i}.parquet"))
         open(os.path.join(out_dir, "_SUCCESS"), "w").close()
         shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(marker_dir, exist_ok=True)
-        open(os.path.join(marker_dir, str(batch_id)), "w").close()
+        mark_committed(out_dir, batch_id)
         n_files = len(
             glob.glob(os.path.join(out_dir, "part-*"))
             + glob.glob(os.path.join(out_dir, "b*-*.parquet"))
         )
         if n_files > max_files:
-            tmp = out_dir.rstrip("/") + ".next"
-            spark.read.parquet(out_dir).repartition(target_files).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            new_marker_dir = os.path.join(tmp, "_batches")
-            os.makedirs(new_marker_dir, exist_ok=True)
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-            replace_dir(tmp, out_dir)
+            rewrite_dir(
+                out_dir,
+                lambda tmp: spark.read.parquet(out_dir)
+                .repartition(target_files)
+                .write.mode("overwrite")
+                .parquet(tmp),
+            )
 
     return (
         stream.writeStream.foreachBatch(apply_batch)
@@ -754,69 +741,33 @@ def stream_heavy_hitters_foreachbatch(
     driver-sized state is read/written with direct pyarrow IO inside
     the committed-batch manifest + atomic-swap protocol.
     """
-    import os
-    import shutil
-
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
     from mapreduce_hw05_spark.operators.heavy_hitters import (
         SpaceSaving,
         merge_summary_rows,
         space_saving_partials,
     )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
         rows = [
             r.asDict()
             for r in space_saving_partials(batch_df, item_col, k).collect()  # bounded: <= k rows per partition summary
         ]
         merged = merge_summary_rows(rows, item_col, k)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+        prev_rows = _state_rows(state_dir)
+        if prev_rows:
             prev = SpaceSaving(k)
-            for part in sorted(os.listdir(state_dir)):
-                if not part.endswith(".parquet"):
-                    continue
-                for rec in pq.read_table(
-                    os.path.join(state_dir, part)
-                ).to_pylist():
-                    prev._ingest(rec[item_col], rec["count"], rec["err"])
+            for rec in prev_rows:
+                prev._ingest(rec[item_col], rec["count"], rec["err"])
             merged = prev.merge(merged)
-        tmp = state_dir.rstrip("/") + ".next"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
         pdf = pd.DataFrame(
             [
                 {item_col: it, "count": c, "err": e}
                 for it, c, e in merged.top(k)
             ]
         )
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(tmp, "part-00000.parquet"),
-        )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
+        _write_state(tmp, pa.Table.from_pandas(pdf, preserve_index=False))
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_weighted_reservoir_foreachbatch(
@@ -837,64 +788,20 @@ def stream_weighted_reservoir_foreachbatch(
     + atomic-swap + driver-side pyarrow state IO as the sibling sinks;
     the per-batch top-k (one TakeOrdered) is the only Spark job.
     """
-    import os
-    import shutil
-
     from mapreduce_hw05_spark.operators.sampling import weighted_sample
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
-
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return
-        batch_top = [
-            (r[id_col], r[weight_col], r["sample_key"])
-            for r in weighted_sample(
-                batch_df.select(id_col, weight_col), id_col, weight_col, k
-            ).collect()  # bounded: <= k sampled rows
-        ]
-        rows = {i: (i, w, key) for i, w, key in batch_top}
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            for part in sorted(os.listdir(state_dir)):
-                if not part.endswith(".parquet"):
-                    continue
-                for rec in pq.read_table(
-                    os.path.join(state_dir, part)
-                ).to_pylist():
-                    rows[rec[id_col]] = (
-                        rec[id_col], rec[weight_col], rec["sample_key"]
-                    )
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
+        batch_top = weighted_sample(
+            batch_df.select(id_col, weight_col), id_col, weight_col, k
+        ).collect()  # bounded: <= k sampled rows
+        rows = {}
+        for rec in [r.asDict() for r in batch_top] + _state_rows(state_dir):
+            rows[rec[id_col]] = (rec[id_col], rec[weight_col], rec["sample_key"])
         keep = sorted(rows.values(), key=lambda t: (-t[2], t[0]))[:k]
-        tmp = state_dir.rstrip("/") + ".next"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
         pdf = pd.DataFrame(keep, columns=[id_col, weight_col, "sample_key"])
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(tmp, "part-00000.parquet"),
-        )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
+        _write_state(tmp, pa.Table.from_pandas(pdf, preserve_index=False))
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_near_dup_filter_foreachbatch(
@@ -945,8 +852,6 @@ def stream_near_dup_filter_foreachbatch(
     tables), the same verify joins run shuffled instead of broadcast —
     identical results, one extra exchange per side.
     """
-    import os
-
     from mapreduce_hw05_spark.operators.similarity import (
         MAX_BROADCAST_TOKEN_DOCS,
         lsh_band_buckets,
@@ -1032,17 +937,9 @@ def stream_near_dup_filter_foreachbatch(
         # footers only): both pruned tables are subsets of the index,
         # so index-docs <= cap makes the broadcasts safe; past it the
         # same joins run shuffled with identical results
-        import pyarrow.parquet as pqt
-
-        index_docs = sum(
-            pqt.ParquetFile(os.path.join(root_, fpart)).metadata.num_rows
-            for root_, _dirs, files in os.walk(toks_root)
-            for fpart in files
-            if fpart.endswith(".parquet")
-        )
         maybe_b = (
             F.broadcast
-            if index_docs <= max_broadcast_index_docs
+            if _footer_rows(toks_root) <= max_broadcast_index_docs
             else (lambda df: df)
         )
         dropped = (
@@ -1084,68 +981,26 @@ def stream_count_min_foreachbatch(
     IO as the sibling sketch sinks; the partial build is the only
     Spark job per batch.
     """
-    import os
-
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
     from mapreduce_hw05_spark.operators.count_min import (
         CountMinSketch,
         count_min_partials,
     )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
         merged = CountMinSketch(depth, width, seed)
-        for row in count_min_partials(
+        rows = count_min_partials(
             batch_df, item_col, depth, width, seed
-        ).collect():  # bounded: <= max_driver_keys state rows
+        ).collect()  # bounded: one d×w sketch row per partition
+        for rec in [r.asDict() for r in rows] + _state_rows(state_dir):
             merged = merged.merge(
-                CountMinSketch.deserialize(bytes(row["sketch"]))
+                CountMinSketch.deserialize(bytes(rec["sketch"]))
             )
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            for part in sorted(os.listdir(state_dir)):
-                if not part.endswith(".parquet"):
-                    continue
-                for rec in pq.read_table(
-                    os.path.join(state_dir, part)
-                ).to_pylist():
-                    merged = merged.merge(
-                        CountMinSketch.deserialize(bytes(rec["sketch"]))
-                    )
-        tmp = state_dir.rstrip("/") + ".next"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame({"sketch": [merged.serialize()]}),
-                preserve_index=False,
-            ),
-            os.path.join(tmp, "part-00000.parquet"),
-        )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
+        _write_state(tmp, pa.Table.from_pandas(
+            pd.DataFrame({"sketch": [merged.serialize()]}),
+            preserve_index=False,
+        ))
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_additive_rollup_foreachbatch(
@@ -1164,55 +1019,33 @@ def stream_additive_rollup_foreachbatch(
     duplicate row that slips past upstream dedup inflates the result
     and fails the batch-oracle hash. foreachBatch itself is only
     at-least-once (a recovered query re-runs the last uncommitted
-    batch), so the sink keeps a committed-batch manifest
-    ``_batches/<id>`` INSIDE the state directory and swaps state +
-    manifest in one atomic rename-aside: a re-delivered batch id is a
-    no-op, which upgrades the additive merge to exactly-once.
-    Underscore-prefixed entries are invisible to Spark's file index, so
-    the manifest rides the parquet dir without disturbing reads. A real
-    deployment swaps the rewrite for a transactional table format
-    (MERGE + txn id), keeping this exact plan.
+    batch), so the sink commits through fsutil's committed-batch
+    manifest (``_batches/<id>`` INSIDE the state directory) and
+    rename-aside swap, which moves state + manifest in one atomic
+    rename: a re-delivered batch id is a no-op, which upgrades the
+    additive merge to exactly-once. Underscore-prefixed entries are
+    invisible to Spark's file index, so the manifest rides the parquet
+    dir without disturbing reads. A real deployment swaps the rewrite
+    for a transactional table format (MERGE + txn id), keeping this
+    exact plan.
 
     The additive merge means the final state is EXACTLY the batch
     aggregate of the union of all chunks, which is what lets a
     downstream plan (e.g. the EWMA finisher) be bit-identical to its
     batch twin.
     """
-    import os
 
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_dir(state_dir, state_dir.rstrip("/") + ".next")
-        if batch_df.isEmpty():
-            return
-        marker_dir = os.path.join(state_dir, "_batches")
-        if os.path.exists(os.path.join(marker_dir, str(batch_id))):
-            return  # replayed batch already committed — exactly-once guard
-        spark = batch_df.sparkSession
-        delta = delta_fn(batch_df)
+    def write_state(batch_df: DataFrame, tmp: str) -> None:
+        merged = delta = delta_fn(batch_df)
         val_cols = [c for c in delta.columns if c not in key_cols]
         if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            base = spark.read.parquet(state_dir).select(*delta.columns)
+            base = batch_df.sparkSession.read.parquet(state_dir)
             merged = (
-                base.unionByName(delta)
+                base.select(*delta.columns)
+                .unionByName(delta)
                 .groupBy(*key_cols)
                 .agg(*[F.sum(c).alias(c) for c in val_cols])
             )
-        else:
-            merged = delta
-        tmp = state_dir.rstrip("/") + ".next"
         merged.write.mode("overwrite").parquet(tmp)
-        new_marker_dir = os.path.join(tmp, "_batches")
-        os.makedirs(new_marker_dir, exist_ok=True)
-        if os.path.isdir(marker_dir):
-            for m in os.listdir(marker_dir):
-                open(os.path.join(new_marker_dir, m), "w").close()
-        open(os.path.join(new_marker_dir, str(batch_id)), "w").close()
-        replace_dir(tmp, state_dir)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)

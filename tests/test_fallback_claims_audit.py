@@ -88,7 +88,7 @@ REGISTRY: dict[tuple[str, str], str | None] = {
     # routes through the distributed path (counted from parquet footers)
     (
         "streaming/ops.py",
-        "stream_sketch_rollup_foreachbatch.apply_batch",
+        "stream_sketch_rollup_foreachbatch.write_state",
     ): "max_driver_keys",
     (
         "streaming/ops.py",

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 
-from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
+import pytest
+
+from mapreduce_hw05_spark.fsutil import commit_once, recover_dir, replace_dir
 
 
 def _mkdir_with(path: str, marker: str) -> None:
@@ -103,3 +105,93 @@ def test_state_never_vanishes_mid_swap(tmp_path):
         marker = "v2" if crash_after == "rename_in" else "v2"
         # roll-forward in both cases: tmp was complete
         assert marker in _content(dst)
+
+
+# ------------------------------------------------------------ commit_once
+
+
+def _writer(marker: str, calls: list | None = None):
+    """A ``write_tmp`` that writes a complete state dir holding ``marker``."""
+
+    def write_tmp(tmp: str) -> None:
+        if calls is not None:
+            calls.append(tmp)
+        _mkdir_with(tmp, marker)
+
+    return write_tmp
+
+
+def _batches(path: str) -> list[str]:
+    return sorted(os.listdir(os.path.join(path, "_batches")))
+
+
+def _tree(path: str) -> dict[str, bytes]:
+    return {
+        os.path.relpath(os.path.join(d, f), path): open(
+            os.path.join(d, f), "rb"
+        ).read()
+        for d, _dirs, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_commit_once_first_commit_writes_state_and_marker(tmp_path):
+    dst = str(tmp_path / "state")
+    assert commit_once(dst, 0, _writer("v0"))
+    assert "v0" in _content(dst)
+    assert _batches(dst) == ["0"]
+    assert not os.path.exists(dst + ".next")
+
+
+def test_commit_once_replayed_id_is_a_noop(tmp_path):
+    """A committed batch id never reaches ``write_tmp`` and leaves the
+    directory byte-identical."""
+    dst = str(tmp_path / "state")
+    commit_once(dst, 0, _writer("v0"))
+    before, calls = _tree(dst), []
+    assert not commit_once(dst, 0, _writer("v1", calls))
+    assert calls == []
+    assert _tree(dst) == before
+
+
+def test_commit_once_new_id_carries_the_manifest(tmp_path):
+    dst = str(tmp_path / "state")
+    for batch_id in range(3):
+        assert commit_once(dst, batch_id, _writer(f"v{batch_id}"))
+    assert _content(dst) == {"v2", "_SUCCESS", "_batches"}
+    assert _batches(dst) == ["0", "1", "2"]
+
+
+def test_commit_once_failed_write_keeps_state_and_manifest(tmp_path):
+    """A ``write_tmp`` that raises leaves the old state and manifest in
+    place; the next commit deletes the half-written remnant."""
+    dst = str(tmp_path / "state")
+    commit_once(dst, 0, _writer("v0"))
+
+    def boom(tmp: str) -> None:
+        _writer("partial")(tmp)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        commit_once(dst, 1, boom)
+    assert "v0" in _content(dst)
+    assert _batches(dst) == ["0"]
+    assert os.path.exists(dst + ".next")  # the remnant
+    assert commit_once(dst, 1, _writer("v1"))
+    assert _content(dst) == {"v1", "_SUCCESS", "_batches"}
+    assert _batches(dst) == ["0", "1"]
+    assert not os.path.exists(dst + ".next")
+
+
+def test_commit_once_rolls_forward_a_dangling_next(tmp_path):
+    """Crash between the two renames (only ``.next`` left): the next
+    commit promotes it with its manifest, so the replayed id is a no-op."""
+    dst = str(tmp_path / "state")
+    commit_once(dst, 0, _writer("v0"))
+    commit_once(dst, 1, _writer("v1"))
+    os.rename(dst, dst + ".next")
+    calls = []
+    assert not commit_once(dst, 1, _writer("v9", calls))
+    assert calls == []
+    assert "v1" in _content(dst)
+    assert _batches(dst) == ["0", "1"]

@@ -695,6 +695,95 @@ def test_weighted_reservoir_sink_survives_crash_mid_swap(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(state, "_batches"))) == ["0", "1"]
 
 
+def _kv_batches(spark):
+    """Two one-partition micro-batches every state sink below accepts
+    (one partition keeps ``isEmpty`` at one job on any core count)."""
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v long, ts long, event_id long"
+    ).coalesce(1)
+    return (
+        mk([("a", 1, 1, 1), ("a", 2, 2, 2), ("b", 7, 3, 3)]),
+        mk([("a", 3, 4, 4), ("c", 7, 5, 5)]),
+    )
+
+
+def _kv_sink(name, state, schema):
+    """The foreachBatch function of one state sink over ``_kv_batches``."""
+    factory, args, kwargs = {
+        "sketch_rollup": (
+            ops.stream_sketch_rollup_foreachbatch, (["k"], "v"), {"k": 64}
+        ),
+        "heavy_hitters": (ops.stream_heavy_hitters_foreachbatch, ("k",), {}),
+        "count_min": (ops.stream_count_min_foreachbatch, ("k",), {}),
+        "weighted_reservoir": (
+            ops.stream_weighted_reservoir_foreachbatch, ("k", "v", 2), {}
+        ),
+        "upsert": (ops.stream_upsert_foreachbatch, (), {"keys": ["k"]}),
+    }[name]
+    return _capture_foreach_batch(
+        factory, *args, state, state + "_ckpt", schema=schema, **kwargs
+    )
+
+
+@pytest.mark.parametrize("sink", ["count_min", "upsert"])
+def test_state_sink_survives_redelivery_and_crash_mid_swap(
+    spark, tmp_path, sink
+):
+    """Crash-mid-swap + replayed-batch semantics for the count-min and
+    upsert sinks: a re-delivered batch id is a no-op, and a dangling
+    .next rolls forward with its manifest."""
+    state = str(tmp_path / "state")
+    b0, b1 = _kv_batches(spark)
+    apply_batch = _kv_sink(sink, state, b0.schema)
+
+    def snapshot():
+        return sorted(tuple(r) for r in spark.read.parquet(state).collect())
+
+    apply_batch(b0, 0)
+    apply_batch(b1, 1)
+    post = snapshot()
+    apply_batch(b1, 1)  # at-least-once re-delivery: a no-op
+    assert snapshot() == post
+    os.rename(state, state + ".next")  # crash between the two renames
+    apply_batch(b1, 1)  # replay: roll forward; marker makes it a no-op
+    assert snapshot() == post
+    assert sorted(os.listdir(os.path.join(state, "_batches"))) == ["0", "1"]
+
+
+@pytest.mark.parametrize(
+    "sink",
+    ["sketch_rollup", "heavy_hitters", "count_min", "weighted_reservoir",
+     "upsert"],
+)
+def test_state_sink_jobs_per_batch(spark, tmp_path, sink):
+    """Spark jobs per foreachBatch call (first batch, second batch,
+    replayed id, empty batch), counted by job tag. The driver-state
+    sinks run ``isEmpty`` plus the partial build and nothing else: their
+    state IO is pyarrow, never a ``spark.read`` job. A replayed id costs
+    only the ``isEmpty`` probe, the upsert's included."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    b0, b1 = _kv_batches(spark)
+    apply_batch = _kv_sink(sink, str(tmp_path / "state"), b0.schema)
+
+    def jobs(batch, batch_id):
+        tag = f"jobs-{sink}-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            apply_batch(batch, batch_id)
+        finally:
+            sc.removeJobTag(tag)
+        return len(tracker.getJobIdsForTag(tag))
+
+    got = (jobs(b0, 0), jobs(b1, 1), jobs(b1, 1), jobs(b0.limit(0), 2))
+    if sink == "upsert":  # its merge plan's job count is Spark's own
+        assert got[2:] == (1, 0)
+    else:
+        assert got == (2, 2, 1, 0)
+
+
 def test_additive_rollup_sink_manifest_guard_and_merge(spark, tmp_path):
     """The generic additive rollup sink: per-batch deltas fold by
     per-alias re-sum, a re-delivered batch id is a no-op, and the final
