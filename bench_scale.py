@@ -735,7 +735,7 @@ def run_streaming(spark, scales: list[int], only: str | None = None) -> dict:
             shutil.rmtree(root, ignore_errors=True)
             replay = FileReplay(spark, chunks, root)
             _drive(
-                ops.interval_join_clicks_purchases(
+                ops.interval_join_purchases(
                     replay.stream(), watermark="1 hour"
                 ),
                 "ss_interval_join_1h",

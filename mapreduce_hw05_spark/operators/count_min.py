@@ -15,12 +15,13 @@ is hash-comparable against plain SQL COUNT(*), while the collision
 regime's error bound is engine-tested on crafted Zipf data — the same
 exactness-regime discipline as the space-saving contract.
 
-Scale shape: one ``mapInPandas`` pass builds a (d × w) int64 counts
-matrix per partition (per-batch ``value_counts`` pre-aggregates; only
-distinct items are hashed, vectorized); merge is an elementwise sum —
-associative and commutative, so partials fold in any order, driver- or
-reducer-side, and sketches built over different corpus shards union by
-addition exactly like the other sketches.
+Scale shape: the shared mergeable-sketch path (operators/sketches.py)
+builds a (d × w) int64 counts matrix per partition in one map-only
+pass (per-batch ``value_counts`` pre-aggregates; only distinct items are
+hashed, vectorized); merge is an elementwise sum — associative and
+commutative, so partials fold in any order, driver- or reducer-side, and
+sketches built over different corpus shards union by addition exactly
+like the other sketches.
 
 Hashing: items pass through pandas' process-stable 64-bit SipHash
 (``pd.util.hash_array``, the same key-stable primitive the MinHash and
@@ -36,8 +37,6 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 _MERSENNE = (1 << 61) - 1
 
@@ -84,6 +83,23 @@ class CountMinSketch:
         for j in range(self.depth):
             np.add.at(self.counts[j], b[j], w)
 
+    def add(self, values: pd.Series) -> None:
+        """Count a column slice. NULLs count under the reserved
+        ``"\\0null"`` item (SQL GROUP BY's NULL group); integral values
+        hash as int64, as query-side ints do."""
+        vc = values.dropna().value_counts()
+        integral = pd.api.types.is_integer_dtype(vc.index)
+        self.add_items(
+            vc.index.to_numpy(dtype=np.int64 if integral else None),
+            vc.to_numpy(dtype=np.int64),
+        )
+        n_null = int(values.isna().sum())
+        if n_null:
+            self.add_items(
+                np.array(["\0null"], dtype=object),
+                np.array([n_null], dtype=np.int64),
+            )
+
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
         """Elementwise sum — requires identical (depth, width, seed)."""
         if (self.depth, self.width, self.seed) != (
@@ -127,64 +143,3 @@ class CountMinSketch:
         )
         return sk
 
-
-def count_min_partials(
-    df: DataFrame,
-    item_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    seed: int = 7,
-) -> DataFrame:
-    """One serialized sketch per partition — a single map-only pass,
-    O(d·w) bytes per partition regardless of input size. NULL items are
-    counted under a reserved sentinel bucket row-set (the "\\0null"
-    key), mirroring SQL's GROUP BY null group."""
-    out_schema = T.StructType([T.StructField("sketch", T.BinaryType())])
-
-    # Integral columns reach pandas as float64 when they carry nulls;
-    # hash_array(float64) != hash_array(int64) for the same value, so
-    # pin integral items back to int64 before hashing (query-side calls
-    # hash plain ints).
-    int_like = isinstance(
-        df.schema[item_col].dataType,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-    )
-
-    def build(batches):
-        sk = CountMinSketch(depth, width, seed)
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            col = pdf[item_col]
-            n_null = int(col.isna().sum())
-            vc = col.dropna().value_counts()
-            items = vc.index.to_numpy(dtype=np.int64 if int_like else None)
-            sk.add_items(items, vc.to_numpy(dtype=np.int64))
-            if n_null:
-                sk.add_items(
-                    np.array(["\0null"], dtype=object),
-                    np.array([n_null], dtype=np.int64),
-                )
-        if seen:
-            yield pd.DataFrame({"sketch": [sk.serialize()]})
-
-    return df.select(item_col).mapInPandas(build, out_schema)
-
-
-def count_min_from_df(
-    df: DataFrame,
-    item_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    seed: int = 7,
-) -> CountMinSketch:
-    """Build + merge over a DataFrame. The driver-side fold is over
-    O(partitions) blobs of d·w int64 each — partition-count-sized, not
-    data-sized; at extreme partition counts the same associative merge
-    runs as a tree reduce over the blob column."""
-    merged = CountMinSketch(depth, width, seed)
-    for row in count_min_partials(df, item_col, depth, width, seed).collect():  # bounded: one d x w matrix per partition
-        merged = merged.merge(CountMinSketch.deserialize(bytes(row["sketch"])))
-    return merged

@@ -16,20 +16,20 @@ EXACT; the contract query runs in that regime so its top-k is
 hash-comparable against plain SQL, while the eviction regime is
 engine-tested on crafted Zipf data.
 
-Scale shape: one ``mapInPandas`` pass builds an O(k) summary per
-partition (per-batch ``value_counts`` is vectorized; only the batch's
-DISTINCT items cross the Python loop), and only partition-count × k
-(item, count, err) rows reach the merge — the same partial-aggregate
-discipline as the other sketches.
+Scale shape: the shared mergeable-sketch path (operators/sketches.py)
+builds an O(k) summary per partition in one map-only pass (per-batch
+``value_counts`` is vectorized; only the batch's DISTINCT items cross
+the Python loop), and only partition-count summaries of ≤ k counters
+reach the merge. The wire format is JSON, which keeps str, int and
+NULL (None) items as they are.
 """
 
 from __future__ import annotations
 
 import heapq
+import json
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 
 def _ord(item):
@@ -72,14 +72,24 @@ class SpaceSaving:
 
     def _ingest(self, item, count: int, err: int) -> None:
         """Install a (count, err) pair AND its heap snapshot. Every
-        assembly path (merge, merge_summary_rows) must go through this
-        — a bare ``counts[item] =`` leaves the heap missing that item's
+        assembly path (merge, deserialize) must go through this — a
+        bare ``counts[item] =`` leaves the heap missing that item's
         snapshot, and a later offer()-driven eviction could then evict
         a non-minimum counter, breaking the space-saving error bound
         (ADVICE r4)."""
         self.counts[item] = count
         self.errs[item] = err
         self._push(item, count)
+
+    def add(self, values: pd.Series) -> None:
+        """Offer a column slice, pre-aggregated with ``value_counts`` so
+        only its DISTINCT items take the Python path; NULLs are offered
+        last as the None item (SQL GROUP BY keeps the NULL group)."""
+        for item, cnt in values.dropna().value_counts().items():
+            self.offer(item.item() if hasattr(item, "item") else item, int(cnt))
+        n_null = int(values.isna().sum())
+        if n_null:
+            self.offer(None, n_null)
 
     def offer(self, item, weight: int = 1) -> None:
         """Add ``weight`` occurrences of ``item`` (weights let callers
@@ -142,79 +152,15 @@ class SpaceSaving:
         )[:n]
         return [(it, self.counts[it], self.errs[it]) for it in order]
 
+    # -- wire format ---------------------------------------------------
+    def serialize(self) -> bytes:
+        """JSON ``{"k", "items": [[item, count, err], ...]}``."""
+        return json.dumps({"k": self.k, "items": self.top(self.k)}).encode()
 
-def space_saving_partials(
-    df: DataFrame, item_col: str, k: int = 4096
-) -> DataFrame:
-    """One summary per partition as (item, count, err) rows — ≤ k rows
-    per partition regardless of input size, built in a single map-only
-    pass. Feed to :func:`merge_summary_rows` (driver- or reducer-side)."""
-    schema = T.StructType(
-        [
-            df.schema[item_col],
-            T.StructField("__part_id", T.LongType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("err", T.LongType()),
-        ]
-    )
-
-    # Integral item columns arrive in pandas as float64 when they carry
-    # nulls — the values must go back to Python ints (the LongType
-    # output schema) and the NaNs back to None (NaN breaks _ord ties
-    # and can't round-trip LongType); ADVICE r3 item 4.
-    int_like = isinstance(
-        df.schema[item_col].dataType,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-    )
-
-    def build(batches):
-        from pyspark import TaskContext
-
-        sk = SpaceSaving(k)
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            col = pdf[item_col]
-            n_null = int(col.isna().sum())
-            # vectorized pre-aggregation: only the batch's DISTINCT
-            # items take the Python offer() path; the null group is
-            # offered as None (SQL GROUP BY keeps it)
-            for item, cnt in col.dropna().value_counts().items():
-                if hasattr(item, "item"):  # numpy scalar -> python
-                    item = item.item()
-                if int_like:
-                    item = int(item)
-                sk.offer(item, int(cnt))
-            if n_null:
-                sk.offer(None, n_null)
-        if seen:
-            # deterministic summary id -> deterministic merge fold order
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame(
-                [
-                    {item_col: it, "__part_id": pid, "count": c, "err": e}
-                    for it, c, e in sk.top(k)
-                ]
-            )
-
-    return df.select(item_col).mapInPandas(build, schema)
-
-
-def merge_summary_rows(
-    partials: list[dict], item_col: str, k: int
-) -> SpaceSaving:
-    """Reassemble per-partition summaries (rows from
-    :func:`space_saving_partials`) and fold them with the mergeable-
-    summaries rule. Partition order is made deterministic by sorting on
-    the summary id — merge is order-dependent only in the eviction
-    regime, and even there the error guarantees hold for any order."""
-    by_part: dict = {}
-    for row in partials:
-        sk = by_part.setdefault(row["__part_id"], SpaceSaving(k))
-        sk._ingest(row[item_col], row["count"], row["err"])
-    merged = SpaceSaving(k)
-    for pid in sorted(by_part):
-        merged = merged.merge(by_part[pid])
-    return merged
+    @classmethod
+    def deserialize(cls, blob: bytes) -> "SpaceSaving":
+        state = json.loads(blob)
+        sk = cls(state["k"])
+        for item, count, err in state["items"]:
+            sk._ingest(item, count, err)
+        return sk

@@ -5,11 +5,15 @@ reaggregatable-quantile counterpart of the HLL distinct rollup
 Spark's built-in ``percentile_approx`` (Greenwald–Khanna) is a black box
 that only merges inside one aggregate; this operator demonstrates the
 pattern a 100-TB pipeline actually needs: per-partition sketch PARTIALS
-(one small state object per partition per key, built in a single
-mapInPandas pass), an ASSOCIATIVE merge (so daily/hourly partials can be
-persisted and re-rolled into any range later), and rank-error-bounded
-estimates from the merged state. Driver traffic per key is one sketch of
-O(k·log(n/k)) floats — independent of row count.
+(one small state object per partition per key), an ASSOCIATIVE merge (so
+daily/hourly partials can be persisted and re-rolled into any range
+later), and rank-error-bounded estimates from the merged state. Driver
+traffic per key is one sketch of O(k·log(n/k)) floats — independent of
+row count.
+
+Scale shape: the partial build and the keyed merge are the shared
+mergeable-sketch path (operators/sketches.py); this module adds only the
+quantile read over the merged sketches.
 
 Compaction is DETERMINISTIC (per-level alternating offset instead of a
 random coin): estimates are then reproducible run-to-run, which the
@@ -21,11 +25,13 @@ the error-bound test pins behavior on the fixtures.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from mapreduce_hw05_spark.operators.sketches import merge_by_key, sketch_partials
 
 
 class KLLSketch:
@@ -39,9 +45,9 @@ class KLLSketch:
         self.n = 0
 
     # -- build ---------------------------------------------------------
-    def add_many(self, values: np.ndarray) -> None:
-        vals = np.asarray(values, dtype=np.float64)
-        vals = vals[~np.isnan(vals)]
+    def add(self, values: pd.Series) -> None:
+        """Add numeric values; NULLs (and NaN) are skipped."""
+        vals = np.asarray(values[pd.notna(values)], dtype=np.float64)
         self.n += len(vals)
         # Level-0 capacity SHRINKS whenever a compaction deepens the
         # hierarchy, so it must be re-read every chunk — caching it once
@@ -144,59 +150,32 @@ def quantile_sketch_rollup(
     k: int = 200,
 ) -> DataFrame:
     """Distributed quantile estimation via mergeable sketch partials:
-    one mapInPandas pass builds a sketch per (partition × key), a keyed
-    groupBy ships only sketch blobs, and applyInPandas merges + reads
-    the quantiles. The only shuffle moves O(partitions × keys) sketches,
-    never rows — the same topology as the HLL rollup.
+    ``sketch_partials`` builds a sketch per (partition × key),
+    ``merge_by_key`` ships only sketch blobs through one keyed shuffle,
+    and one ``mapInPandas`` reads ``n_rows`` (non-NULL values) and the
+    quantiles from each merged sketch. The only shuffle moves
+    O(partitions × keys) sketches, never rows.
     """
     from pyspark.sql import types as T
 
-    key_fields = [df.schema[c] for c in key_cols]
-    partial_schema = T.StructType(
-        list(key_fields) + [T.StructField("sketch", T.BinaryType())]
+    new = partial(KLLSketch, k)
+    merged = merge_by_key(
+        sketch_partials(df, key_cols, value_col, new), key_cols, new
     )
-
-    def build_partials(batches):
-        acc: dict[tuple, KLLSketch] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # dropna=False: SQL GROUP BY keeps the null group — the
-            # DuckDB oracles do; pandas' default would silently drop it.
-            for key, grp in pdf.groupby(key_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                key = tuple(
-                    None if (isinstance(c, float) and np.isnan(c)) else c
-                    for c in key
-                )
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = KLLSketch(k)
-                sk.add_many(grp[value_col].to_numpy(dtype=np.float64))
-        if acc:
-            yield pd.DataFrame(
-                [(*key, sk.serialize()) for key, sk in acc.items()],
-                columns=[*key_cols, "sketch"],
-            )
-
     q_names = [f"q{int(round(q * 100)):02d}" for q in quantiles]
     out_schema = T.StructType(
-        list(key_fields)
+        [merged.schema[c] for c in key_cols]
         + [T.StructField("n_rows", T.LongType())]
         + [T.StructField(name, T.DoubleType()) for name in q_names]
     )
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = KLLSketch(k)
-        for blob in pdf["sketch"]:
-            merged.merge(KLLSketch.deserialize(bytes(blob)))
-        est = merged.quantiles(quantiles)
-        row = [pdf.iloc[0][c] for c in key_cols] + [merged.n] + est
-        return pd.DataFrame([row], columns=[*key_cols, "n_rows", *q_names])
+    def read_quantiles(batches):
+        for pdf in batches:
+            sks = [KLLSketch.deserialize(bytes(b)) for b in pdf["sketch"]]
+            est = [sk.quantiles(quantiles) for sk in sks]
+            yield pdf[key_cols].assign(
+                n_rows=[sk.n for sk in sks],
+                **{q: [e[i] for e in est] for i, q in enumerate(q_names)},
+            )
 
-    partials = df.select(*key_cols, value_col).mapInPandas(
-        build_partials, schema=partial_schema
-    )
-    return partials.groupBy(*key_cols).applyInPandas(
-        merge_group, schema=out_schema
-    )
+    return merged.mapInPandas(read_quantiles, schema=out_schema)

@@ -2,10 +2,10 @@
 difference — the capability HLL does not have (HLL unions fine but cannot
 intersect; "distinct users who did A AND B" needs theta/KMV).
 
-Same distributed topology as the KLL quantile rollup
-(operators/quantile_sketch.py): per-partition partials built in one
-mapInPandas pass (bounded at k hashes each), an associative merge, and
-only sketch blobs ever cross the wire. Estimates are |S|/θ with
+Scale shape: the shared mergeable-sketch path (operators/sketches.py)
+builds per-partition partials in one map-only pass (bounded at k
+hashes each) and merges them with the associative KMV union; only
+sketch blobs ever cross the wire. Estimates are |S|/θ with
 RSE ≈ 1/√(k-1); set-op estimates restrict both retained sets to the
 common θ first (the standard theta-sketch a-priori rule).
 
@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -42,8 +40,9 @@ class ThetaSketch:
         self.hashes = np.empty(0, dtype=np.float64)  # sorted, < theta
         self.theta = 1.0
 
-    def add_many(self, values: np.ndarray) -> None:
-        h = _splitmix64(np.asarray(values, dtype=np.int64))
+    def add(self, values: pd.Series) -> None:
+        """Add integer values; NULLs are skipped (COUNT(DISTINCT))."""
+        h = _splitmix64(np.asarray(values[pd.notna(values)], dtype=np.int64))
         h = h[h < self.theta]
         merged = np.unique(np.concatenate([self.hashes, h]))
         if len(merged) > self.k:
@@ -62,6 +61,8 @@ class ThetaSketch:
             merged = merged[: out.k]
         out.hashes = merged
         return out
+
+    merge = union  # the mergeable-sketch interface (operators/sketches.py)
 
     def intersect(self, other: "ThetaSketch") -> "ThetaSketch":
         out = ThetaSketch(min(self.k, other.k))
@@ -100,91 +101,3 @@ class ThetaSketch:
         sk.hashes = np.frombuffer(blob, dtype=np.float64, offset=16).copy()
         return sk
 
-
-def theta_sketch_partials(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    k: int = 4096,
-) -> DataFrame:
-    """(key..., sketch binary) PARTIALS — one sketch per (partition ×
-    key), built in a single mapInPandas pass with NO shuffle. Callers
-    that already merge driver-side (the streaming rollup sink) consume
-    these directly; :func:`theta_sketch_by_key` adds the keyed
-    distributed merge."""
-    from pyspark.sql import types as T
-
-    key_fields = [df.schema[c] for c in key_cols]
-    partial_schema = T.StructType(
-        list(key_fields) + [T.StructField("sketch", T.BinaryType())]
-    )
-
-    def build_partials(batches):
-        acc: dict[tuple, ThetaSketch] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # dropna=False: SQL GROUP BY keeps the null group — the
-            # DuckDB oracles do; pandas' default would silently drop it.
-            for key, grp in pdf.groupby(key_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                key = tuple(
-                    None if (isinstance(c, float) and np.isnan(c)) else c
-                    for c in key
-                )
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = ThetaSketch(k)
-                sk.add_many(grp[value_col].to_numpy(dtype=np.int64))
-        if acc:
-            yield pd.DataFrame(
-                [(*key, sk.serialize()) for key, sk in acc.items()],
-                columns=[*key_cols, "sketch"],
-            )
-
-    return df.select(*key_cols, value_col).mapInPandas(
-        build_partials, schema=partial_schema
-    )
-
-
-def theta_sketch_merge_partials(
-    partials: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Merge a (key..., sketch) partials table to ONE sketch per key —
-    the distributed half of the rollup: one shuffle on the key, an
-    associative KMV union per group (order-independent: the result is
-    always the k smallest distinct hashes under the min θ), only blobs
-    of ≤ k hashes ever cross the wire. Consumed by
-    :func:`theta_sketch_by_key` and by the streaming sink's
-    distributed-state fallback."""
-    from pyspark.sql import types as T
-
-    key_fields = [partials.schema[c] for c in key_cols]
-    out_schema = T.StructType(
-        list(key_fields) + [T.StructField("sketch", T.BinaryType())]
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged: ThetaSketch | None = None
-        for blob in pdf["sketch"]:
-            sk = ThetaSketch.deserialize(bytes(blob))
-            merged = sk if merged is None else merged.union(sk)
-        row = [pdf.iloc[0][c] for c in key_cols] + [merged.serialize()]
-        return pd.DataFrame([row], columns=[*key_cols, "sketch"])
-
-    return partials.groupBy(*key_cols).applyInPandas(
-        merge_group, schema=out_schema
-    )
-
-
-def theta_sketch_by_key(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    k: int = 4096,
-) -> DataFrame:
-    """(key..., sketch binary) — one merged theta sketch per key, built
-    from per-partition partials; only O(partitions × keys) blobs of
-    ≤ k hashes shuffle."""
-    partials = theta_sketch_partials(df, key_cols, value_col, k)
-    return theta_sketch_merge_partials(partials, key_cols)

@@ -819,17 +819,22 @@ def q_theta_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality the sketches are below k and therefore exact — the 5%
     bound is exercised at scale by the synthetic invariant test).
     """
-    from mapreduce_hw05_spark.operators.theta_sketch import (
-        ThetaSketch,
-        theta_sketch_by_key,
+    from mapreduce_hw05_spark.operators.sketches import (
+        merge_by_key,
+        sketch_partials,
     )
+    from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
+    merged = merge_by_key(
+        sketch_partials(ev, ["event_type"], "user_id", ThetaSketch),
+        ["event_type"], ThetaSketch,
+    )
     blobs = {
         r["event_type"]: ThetaSketch.deserialize(bytes(r["sketch"]))
-        for r in theta_sketch_by_key(ev, ["event_type"], "user_id").collect()  # bounded: one sketch row per event_type
+        for r in merged.collect()  # bounded: one sketch row per event_type
     }
     clicks, purchases = blobs["click"], blobs["purchase"]
     est = {
@@ -916,14 +921,19 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from mapreduce_hw05_spark.operators.count_min import count_min_from_df
+    from mapreduce_hw05_spark.operators.count_min import CountMinSketch
+    from mapreduce_hw05_spark.operators.sketches import fold, sketch_partials
 
     ev = load_table(spark, sf_dir, "events")
-    even = ev.filter(F.col("event_id") % 2 == 0)
-    odd = ev.filter(F.col("event_id") % 2 == 1)
-    sk = count_min_from_df(even, "event_type").merge(
-        count_min_from_df(odd, "event_type")
-    )
+    shards = [ev.filter(F.col("event_id") % 2 == r) for r in (0, 1)]
+    blobs = [
+        rec["sketch"]
+        for shard in shards
+        for rec in sketch_partials(
+            shard, [], "event_type", CountMinSketch
+        ).collect()  # bounded: one d×w sketch row per partition
+    ]
+    sk = fold(blobs, CountMinSketch)  # the shards' sketches merge by sum
     exact = ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()  # driver-sized: one row per event_type
     types = np.array([r["event_type"] for r in exact], dtype=object)
     ests = sk.query_many(types)

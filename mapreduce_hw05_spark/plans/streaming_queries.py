@@ -16,6 +16,7 @@ batch finisher).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,8 +224,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load_table(spark, sf_dir, "events")
     return _memory_replay(spark, time_ordered_chunks(events, "ts", 3),
-                          "q_ssj_", ops.interval_join_clicks_purchases,
-                          "append")
+                          "q_ssj_", ops.interval_join_purchases, "append")
 
 
 @contract(
@@ -566,8 +566,8 @@ def q_stream_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     est = _state_replay(
         spark, time_ordered_chunks(events, "ts", 4), "q_sksink_",
-        lambda stream, state, ckpt: ops.stream_sketch_rollup_foreachbatch(
-            stream, ["event_type"], "user_id", state, ckpt,
+        lambda stream, state, ckpt: ops.stream_sketch_foreachbatch(
+            stream, ["event_type"], "user_id", ThetaSketch, state, ckpt,
         ),
         lambda state: {
             r["event_type"]: ThetaSketch.deserialize(bytes(r["sketch"])).estimate()
@@ -679,14 +679,15 @@ def _watermark_sentinels(spark, events):
 
 
 def _flushed_join_replay(spark: SparkSession, sf_dir: str, prefix: str,
-                         join) -> DataFrame:
+                         how: str) -> DataFrame:
     """Replay the events in 3 chunks, then the watermark sentinels,
-    through the stream-stream ``join`` in append mode; the sentinels'
-    own rows are filtered out of the result."""
+    through the ``how`` outer interval join in append mode; the
+    sentinels' own rows are filtered out of the result."""
     events = load_table(spark, sf_dir, "events")
     chunks = time_ordered_chunks(events, "ts", 3)
     return _memory_replay(
-        spark, chunks + [_watermark_sentinels(spark, events)], prefix, join,
+        spark, chunks + [_watermark_sentinels(spark, events)], prefix,
+        lambda stream: ops.interval_join_purchases(stream, how),
         "append", lambda sink: sink.filter(F.col("user_id") >= 0),
     )
 
@@ -728,8 +729,7 @@ def q_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters below the watermark node, so a neutral event type never
     advances either watermark branch.
     """
-    return _flushed_join_replay(spark, sf_dir, "q_ssjo_",
-                                ops.interval_left_join_purchases)
+    return _flushed_join_replay(spark, sf_dir, "q_ssjo_", "left")
 
 
 @contract(
@@ -794,8 +794,7 @@ def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive. Same sentinel watermark-flush as the left-outer contract,
     now clearing two state stores.
     """
-    return _flushed_join_replay(spark, sf_dir, "q_ssjf_",
-                                ops.interval_full_join_purchases)
+    return _flushed_join_replay(spark, sf_dir, "q_ssjf_", "full")
 
 
 @contract(
@@ -827,8 +826,7 @@ def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     click-attribution view. Sentinel flush and result filter as in the
     other outer variants.
     """
-    return _flushed_join_replay(spark, sf_dir, "q_ssjr_",
-                                ops.interval_right_join_purchases)
+    return _flushed_join_replay(spark, sf_dir, "q_ssjr_", "right")
 
 
 @contract(
@@ -844,28 +842,25 @@ def q_stream_stream_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming frequent-items maintenance executed BY THE STREAMING
     ENGINE: the events replay (4 micro-batches) folds per-partition
-    space-saving summaries into one persisted O(k) state table through
-    the manifest-guarded foreachBatch sink — trending-user state bounded
-    at k counters regardless of stream length. k = 4096 far exceeds the
-    fixture's user cardinality, so the maintained counts are provably
-    exact (no eviction in any batch or merge) and the final top-20 is
+    space-saving summaries into one persisted O(k) summary blob through
+    the manifest-guarded foreachBatch sketch sink — trending-user state
+    bounded at k counters regardless of stream length. k = 4096 far
+    exceeds the fixture's user cardinality, so the maintained counts are
+    provably exact (no eviction in any batch or merge) and the top-20 is
     hash-comparable to the batch GROUP BY oracle; eviction-regime
     guarantees are engine-tested (tests/test_engine_ops.py).
     """
     from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
 
-    k = 4096
     events = load_table(spark, sf_dir, "events")
-    summary = _state_replay(
+    blob = _state_replay(
         spark, time_ordered_chunks(events, "ts", 4), "q_shh_",
-        lambda stream, state, ckpt: ops.stream_heavy_hitters_foreachbatch(
-            stream, "user_id", state, ckpt, k,
+        lambda stream, state, ckpt: ops.stream_sketch_foreachbatch(
+            stream, [], "user_id", partial(SpaceSaving, 4096), state, ckpt,
         ),
-        lambda state: spark.read.parquet(state).collect(),  # bounded: persisted summary has <= k rows
+        lambda state: spark.read.parquet(state).collect()[0]["sketch"],  # bounded: single serialized summary blob
     )
-    sk = SpaceSaving(k)
-    for r in summary:
-        sk._ingest(r["user_id"], r["count"], r["err"])
+    sk = SpaceSaving.deserialize(bytes(blob))
     rows = [(int(it), int(c)) for it, c, _e in sk.top(20)]
     return spark.createDataFrame(rows, "user_id long, n_events long")
 
@@ -1012,8 +1007,8 @@ def q_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     blob = _state_replay(
         spark, time_ordered_chunks(events, "ts", 4), "q_scms_",
-        lambda stream, state, ckpt: ops.stream_count_min_foreachbatch(
-            stream, "event_type", state, ckpt,
+        lambda stream, state, ckpt: ops.stream_sketch_foreachbatch(
+            stream, [], "event_type", CountMinSketch, state, ckpt,
         ),
         lambda state: spark.read.parquet(state).collect()[0]["sketch"],  # bounded: single serialized sketch blob
     )

@@ -5,6 +5,8 @@ All token work is Catalyst-side (explode/split); see operators.text.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -227,25 +229,23 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 most frequent tokens via SPACE-SAVING summaries instead of
     a full wordcount shuffle: each partition reduces its token stream to
-    an O(k) (item, count, err) summary in one map pass; only
-    partitions × k rows reach the driver-side mergeable-summaries fold
-    (the same partial-shape as the HLL/KLL/theta sketches, for frequent
+    an O(k) (item, count, err) summary in one map pass; only one summary
+    blob per partition reaches the driver-side mergeable-summaries fold
+    (the shared sketch path of operators/sketches.py, for frequent
     items). With k = 4096 far above this corpus's vocabulary no counter
     is ever evicted, so counts are provably EXACT and the top-20 is
     hash-comparable to the plain GROUP BY oracle; the eviction regime's
     (n/k)-error and no-lost-heavy-hitter guarantees are engine-tested on
     crafted Zipf data (tests/test_engine_ops.py).
     """
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        merge_summary_rows,
-        space_saving_partials,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
+    from mapreduce_hw05_spark.operators.sketches import fold, sketch_partials
     from mapreduce_hw05_spark.plans.common import spread_small
 
-    k = 4096
+    new = partial(SpaceSaving, 4096)
     toks = tokenize(spread_small(load_table(spark, sf_dir, "documents")), "text")
-    rows = [r.asDict() for r in space_saving_partials(toks, "token", k).collect()]  # bounded: <= k rows per partition summary
-    merged = merge_summary_rows(rows, "token", k)
+    parts = sketch_partials(toks, [], "token", new)
+    merged = fold([r["sketch"] for r in parts.collect()], new)  # bounded: one O(k) summary per partition
     return spark.createDataFrame(
         [(it, int(c)) for it, c, _err in merged.top(20)],
         "token string, n_occurrences long",

@@ -17,7 +17,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # ---------------------------------------------------------------- st-1/st-2
@@ -100,21 +99,32 @@ def enrich_with_users(events: DataFrame, customer_dim: DataFrame) -> DataFrame:
 # ------------------------------------------------------------------- st-8
 
 
-def interval_join_clicks_purchases(
-    events: DataFrame, watermark: str = "10 minutes"
+def interval_join_purchases(
+    events: DataFrame, how: str = "inner", watermark: str = "10 minutes"
 ) -> DataFrame:
-    """Stream-stream inner join: each purchase matched to the same user's
-    clicks in the preceding hour (inclusive bound on both ends).
+    """Stream-stream interval join: each purchase matched to the same
+    user's clicks in the preceding hour (inclusive bound on both ends),
+    as join type ``how`` — ``"inner"``, ``"left"`` (every purchase, nulls
+    if no click), ``"right"`` (every click, nulls when no purchase
+    followed it: the click-attribution view) or ``"full"`` (unmatched
+    rows from both sides). Matched rows have equal users, so
+    ``coalesce(p_user, c_user)`` is the right ``user_id`` for all four.
 
     Both sides carry a watermark and the join condition bounds event-time
     distance, so click state is evicted once the watermark passes
     click_ts + 1 h + delay — state is proportional to one hour of
-    clicks per user, never stream length. Inner-join matches emit as soon
-    as both rows have arrived (no watermark emission delay — only OUTER
-    stream-stream joins hold results back).
+    clicks per user, never stream length. Inner-join matches emit as
+    soon as both rows have arrived; outer results are emitted only once
+    the watermark passes ``p_ts + 1 h + delay`` (the engine must be sure
+    no matching row can still arrive), so state AND result latency are
+    watermark-bounded.
 
     The watermark is applied BEFORE the event_type filters so any event
-    advances it (lets a replay's tail rows flush residual state).
+    advances it. Callers replaying finite data into an outer join must
+    advance the watermark past the tail with sentinel rows that SURVIVE
+    the event_type filters (Catalyst pushes those filters below the
+    watermark node, so a filtered-out sentinel never advances it) or
+    the last unmatched rows stay withheld in the state store.
     """
     wm = events.withWatermark("ts", watermark)
     clicks = wm.filter(F.col("event_type") == "click").select(
@@ -134,11 +144,11 @@ def interval_join_clicks_purchases(
             "p_user = c_user AND "
             "c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
         ),
-        "inner",
+        how,
     ).select(
         "purchase_id",
         "click_id",
-        F.col("p_user").alias("user_id"),
+        F.coalesce("p_user", "c_user").alias("user_id"),
         F.unix_micros("p_ts").alias("purchase_ts_us"),
         F.unix_micros("c_ts").alias("click_ts_us"),
         "click_value",
@@ -241,48 +251,12 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-class _UserCountsProcessor(StatefulProcessor):
-    """Per-user running (count, value-sum) via the transformWithState
-    v2 state API: named ValueState, explicit lifecycle (init/close),
-    timer support if ever needed — the Spark-4 successor to
-    applyInPandasWithState (kept above as ``stateful_user_counts``; both
-    are engine-tested for batch-equivalence).
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._agg = handle.getValueState("agg", "n long, total double")
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._agg.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [round(total, 2)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_user_counts_v2(events: DataFrame) -> DataFrame:
-    """``stateful_user_counts`` re-expressed on transformWithStateInPandas.
-
-    Requires ``google.protobuf`` at runtime (the v2 state server's wire
-    format), which this container's PySpark install lacks — the operator
-    is complete and its batch-equivalence test auto-skips until the
-    dependency is present (no stub, no fake).
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserCountsProcessor(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 # ------------------------------------------------- exactly-once state sinks
+
+#: Persisted keys past which the sketch sink's state merge routes through
+#: Spark (``merge_by_key`` + parquet write) instead of the driver; read
+#: at call time, so tests can lower it.
+MAX_DRIVER_STATE_KEYS = 200_000
 
 
 def _commit_once_sink(stream: DataFrame, state_dir: str, checkpoint_dir: str,
@@ -393,127 +367,91 @@ def stream_upsert_foreachbatch(
     return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
-def stream_sketch_rollup_foreachbatch(
+def stream_sketch_foreachbatch(
     stream: DataFrame,
     key_cols: list[str],
     value_col: str,
+    new,
     state_dir: str,
     checkpoint_dir: str,
-    k: int = 4096,
-    max_driver_keys: int = 200_000,
 ):
-    """Streaming maintenance of mergeable theta sketches: each
+    """Streaming maintenance of any mergeable sketch (theta, KLL,
+    count-min, space-saving; ``new`` builds an empty one): each
     micro-batch is reduced to per-key sketch PARTIALS (bounded blobs,
-    built distributed), union-merged into a persisted state table of
-    (key, sketch) — the streaming half of the reaggregatable-sketch
-    story. Distinct-count state is O(keys × k hashes) forever, never
-    O(stream length), and the persisted sketches keep supporting set
-    algebra (intersect "did A AND B") that no streaming countDistinct
-    could.
+    built distributed by ``operators.sketches.sketch_partials``) and
+    merged into a persisted state table of ``(key…, sketch)`` —
+    ``key_cols=[]`` keeps one sketch. State is O(keys × sketch size)
+    forever, never O(stream length); with ``merge`` exact (count-min's
+    sum, theta's KMV union) the final state equals the batch-built
+    sketch over the same rows.
 
     Two state strategies, chosen PER BATCH from the persisted key count
     (read from parquet footers only — no data scan):
 
-    - ≤ ``max_driver_keys``: the state table is driver-sized, so the
-      merge point is the driver — one Spark job per batch (the partial
-      build), direct pyarrow state IO.
-    - beyond it: the DISTRIBUTED fallback — batch partials union the
-      persisted state table as DataFrames, one keyed applyInPandas
-      merge (associative KMV union, order-independent result), and a
-      Spark parquet write of the new state. Two jobs per batch, state
-      bounded only by cluster storage. Both paths produce bit-identical
-      state (engine-tested), so a stream can cross the threshold
-      mid-flight.
+    - ≤ ``MAX_DRIVER_STATE_KEYS``: the state table is driver-sized, so
+      the merge point is the driver — one Spark job per batch (the
+      partial build), direct pyarrow state IO.
+    - past the MAX_DRIVER_STATE_KEYS bound: the DISTRIBUTED path —
+      batch partials union the persisted state table as DataFrames, one
+      keyed ``merge_by_key``, and a Spark parquet write of the new
+      state. State is bounded only by cluster storage. Both paths
+      produce bit-identical theta state (engine-tested), so a stream can
+      cross the threshold mid-flight.
 
     Exactly-once through fsutil's committed-batch manifest + atomic
     directory swap, like the sibling state sinks (a replayed
     foreachBatch id is a no-op).
     """
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    from mapreduce_hw05_spark.operators.theta_sketch import (
-        ThetaSketch,
-        theta_sketch_merge_partials,
-        theta_sketch_partials,
+    from mapreduce_hw05_spark.operators.sketches import (
+        fold,
+        merge_by_key,
+        sketch_partials,
     )
 
     state_schema = T.StructType(
         [stream.schema[c] for c in key_cols]
         + [T.StructField("sketch", T.BinaryType())]
     )
-
-    #: Spark -> Arrow types for the driver-side state write (keys only;
-    #: extend as new key types appear in contracts).
-    _PA_TYPES = {
-        T.StringType: pa.string(),
-        T.LongType: pa.int64(),
-        T.IntegerType: pa.int32(),
-        T.ShortType: pa.int16(),
-        T.DoubleType: pa.float64(),
-        T.FloatType: pa.float32(),
-        T.BooleanType: pa.bool_(),
-        T.DateType: pa.date32(),
-        T.TimestampType: pa.timestamp("us"),
-    }
-
-    def _pa_key_type(col: str):
-        dt = state_schema[col].dataType
-        try:
-            return _PA_TYPES[type(dt)]
-        except KeyError:
-            raise TypeError(
-                f"sketch rollup: unsupported key column type {dt} for "
-                f"{col!r} in the driver-side state write — add it to "
-                "_PA_TYPES or route through the distributed state path "
-                "(max_driver_keys=-1)"
-            ) from None
+    arrow_schema = pa.schema(
+        [(f.name, to_arrow_type(f.dataType, timestamp_utc=False))
+         for f in state_schema]
+    )
 
     def write_state(batch_df: DataFrame, tmp: str) -> None:
+        parts = sketch_partials(batch_df, key_cols, value_col, new)
         n_keys = _footer_rows(state_dir)
-        if n_keys > max_driver_keys:
-            parts = theta_sketch_partials(batch_df, key_cols, value_col, k)
+        if n_keys > MAX_DRIVER_STATE_KEYS:
             if n_keys:
-                prev = batch_df.sparkSession.read.schema(
-                    state_schema
-                ).parquet(state_dir)
-                parts = parts.unionByName(prev)
+                parts = parts.unionByName(
+                    batch_df.sparkSession.read.schema(state_schema)
+                    .parquet(state_dir)
+                )
             # Spark writes the state table (and its own _SUCCESS) before
             # the swap, so the lazy read of the old state above is fully
             # consumed by the time the swap runs.
-            theta_sketch_merge_partials(parts, key_cols).write.mode(
+            merge_by_key(parts, key_cols, new).write.mode(
                 "overwrite"
             ).parquet(tmp)
             return
-        # Collect per-partition PARTIALS and merge here: this loop is
-        # already the driver-side merge point (state ∪ batch), so the
-        # keyed applyInPandas merge stage theta_sketch_by_key adds would
-        # be a redundant shuffle + Python stage per micro-batch. The
-        # partial build is the ONLY Spark job per batch: the state table
-        # is driver-sized by the same argument that lets partials
-        # collect, so its read/modify/write is direct parquet IO, not
-        # two more scheduled jobs. (Past max_driver_keys persisted keys
-        # the branch above takes the distributed merge + write.)
-        partials: dict[tuple, ThetaSketch] = {}
-        rows = theta_sketch_partials(
-            batch_df, key_cols, value_col, k
-        ).collect()  # bounded: one sketch row per key
+        # The driver is already the merge point (state ∪ batch), so a
+        # keyed merge_by_key here would be a redundant shuffle + Python
+        # stage per micro-batch: the partial build is the ONLY Spark job.
+        blobs: dict[tuple, list] = {}
+        # bounded: one sketch per partition × key, keys under the gate
+        rows = parts.collect()
         for rec in [r.asDict() for r in rows] + _state_rows(state_dir):
             key = tuple(rec[c] for c in key_cols)
-            sk = ThetaSketch.deserialize(bytes(rec["sketch"]))
-            partials[key] = partials[key].union(sk) if key in partials else sk
-        keys_sorted = sorted(partials, key=lambda t: tuple(map(str, t)))
+            blobs.setdefault(key, []).append(rec["sketch"])
+        keys = sorted(blobs, key=lambda t: tuple(map(str, t)))
         _write_state(tmp, pa.table(
             {
-                **{
-                    c: [key[i] for key in keys_sorted]
-                    for i, c in enumerate(key_cols)
-                },
-                "sketch": [partials[key].serialize() for key in keys_sorted],
+                **{c: [key[i] for key in keys] for i, c in enumerate(key_cols)},
+                "sketch": [fold(blobs[key], new).serialize() for key in keys],
             },
-            schema=pa.schema(
-                [(c, _pa_key_type(c)) for c in key_cols]
-                + [("sketch", pa.binary())]
-            ),
+            schema=arrow_schema,
         ))
 
     return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
@@ -599,175 +537,6 @@ def stream_append_compacting_sink(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
-
-
-def interval_left_join_purchases(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase with the
-    same user's clicks in the preceding hour, or nulls if none.
-
-    Unlike the inner variant, outer results are emitted only once the
-    watermark passes ``p_ts + 1 h + delay`` (the engine must be sure no
-    matching click can still arrive), so state AND result latency are
-    watermark-bounded. Callers replaying finite data must advance the
-    watermark past the tail with sentinel rows that SURVIVE the
-    event_type filters (Catalyst pushes those filters below the
-    watermark node, so a filtered-out sentinel never advances it) or
-    the last purchases' null rows stay withheld in the state store.
-    """
-    wm = events.withWatermark("ts", watermark)
-    clicks = wm.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = wm.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
-        ),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.col("p_user").alias("user_id"),
-        F.unix_micros("p_ts").alias("purchase_ts_us"),
-        F.unix_micros("c_ts").alias("click_ts_us"),
-        "click_value",
-    )
-
-
-def interval_full_join_purchases(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream FULL OUTER interval join: purchases × trailing-hour
-    clicks per user, emitting unmatched rows from BOTH sides with nulls
-    once the watermark clears them — the complete join-matrix corner.
-
-    State/latency bounds are the same as the left-outer variant but
-    apply to both state stores; a finite replay must advance the
-    watermark past the tail or both sides' unmatched rows stay withheld.
-    """
-    wm = events.withWatermark("ts", watermark)
-    clicks = wm.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = wm.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
-        ),
-        "fullOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.coalesce("p_user", "c_user").alias("user_id"),
-        F.unix_micros("p_ts").alias("purchase_ts_us"),
-        F.unix_micros("c_ts").alias("click_ts_us"),
-        "click_value",
-    )
-
-
-def interval_right_join_purchases(
-    events: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream RIGHT OUTER interval join: every click surfaces,
-    with nulls when no purchase followed it within the hour — the
-    click-attribution view (which impressions never converted).
-
-    Same watermark-bounded emission as the other outer variants, with
-    the unmatched-side state store on the click side.
-    """
-    wm = events.withWatermark("ts", watermark)
-    clicks = wm.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = wm.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
-        ),
-        "rightOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.coalesce("c_user", "p_user").alias("user_id"),
-        F.unix_micros("p_ts").alias("purchase_ts_us"),
-        F.unix_micros("c_ts").alias("click_ts_us"),
-        "click_value",
-    )
-
-
-def stream_heavy_hitters_foreachbatch(
-    stream: DataFrame,
-    item_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    k: int = 4096,
-):
-    """Streaming frequent-items maintenance: each micro-batch reduces to
-    per-partition space-saving summaries (O(k) rows each, built
-    distributed) that fold into ONE persisted summary of ≤ k
-    (item, count, err) rows — trending-items state bounded at O(k)
-    forever, never O(stream length). Same exactly-once discipline and
-    one-Spark-job-per-batch shape as the sketch rollup sink: the
-    distributed partial build is the only scheduled job; the
-    driver-sized state is read/written with direct pyarrow IO inside
-    the committed-batch manifest + atomic-swap protocol.
-    """
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        SpaceSaving,
-        merge_summary_rows,
-        space_saving_partials,
-    )
-
-    def write_state(batch_df: DataFrame, tmp: str) -> None:
-        rows = [
-            r.asDict()
-            for r in space_saving_partials(batch_df, item_col, k).collect()  # bounded: <= k rows per partition summary
-        ]
-        merged = merge_summary_rows(rows, item_col, k)
-        prev_rows = _state_rows(state_dir)
-        if prev_rows:
-            prev = SpaceSaving(k)
-            for rec in prev_rows:
-                prev._ingest(rec[item_col], rec["count"], rec["err"])
-            merged = prev.merge(merged)
-        pdf = pd.DataFrame(
-            [
-                {item_col: it, "count": c, "err": e}
-                for it, c, e in merged.top(k)
-            ]
-        )
-        _write_state(tmp, pa.Table.from_pandas(pdf, preserve_index=False))
-
-    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_weighted_reservoir_foreachbatch(
@@ -959,48 +728,6 @@ def stream_near_dup_filter_foreachbatch(
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
-
-
-def stream_count_min_foreachbatch(
-    stream: DataFrame,
-    item_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 1024,
-    seed: int = 7,
-):
-    """Streaming count-min maintenance: each micro-batch reduces to
-    per-partition d×w count matrices (built distributed, O(d·w) bytes
-    each) that fold by elementwise sum into ONE persisted sketch blob —
-    point-frequency state bounded at O(d·w) forever, never
-    O(stream length) or O(distinct items). The sum-merge is exact, so
-    the final sketch EQUALS the batch-built sketch over the same rows
-    regardless of micro-batch boundaries. Same exactly-once
-    committed-batch manifest + atomic-swap + driver-side pyarrow state
-    IO as the sibling sketch sinks; the partial build is the only
-    Spark job per batch.
-    """
-    from mapreduce_hw05_spark.operators.count_min import (
-        CountMinSketch,
-        count_min_partials,
-    )
-
-    def write_state(batch_df: DataFrame, tmp: str) -> None:
-        merged = CountMinSketch(depth, width, seed)
-        rows = count_min_partials(
-            batch_df, item_col, depth, width, seed
-        ).collect()  # bounded: one d×w sketch row per partition
-        for rec in [r.asDict() for r in rows] + _state_rows(state_dir):
-            merged = merged.merge(
-                CountMinSketch.deserialize(bytes(rec["sketch"]))
-            )
-        _write_state(tmp, pa.Table.from_pandas(
-            pd.DataFrame({"sketch": [merged.serialize()]}),
-            preserve_index=False,
-        ))
-
-    return _commit_once_sink(stream, state_dir, checkpoint_dir, write_state)
 
 
 def stream_additive_rollup_foreachbatch(

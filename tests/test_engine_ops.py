@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1066,27 +1068,35 @@ def test_theta_sketch_empty_and_disjoint():
     assert empty.estimate() == 0.0
 
     a = ThetaSketch(64)
-    a.add_many(np.arange(100, dtype=np.int64))
+    a.add(np.arange(100, dtype=np.int64))
     assert a.intersect(empty).estimate() == 0.0
     assert a.union(empty).estimate() == a.estimate()
     assert a.difference(empty).estimate() == a.estimate()
 
     b = ThetaSketch(64)
-    b.add_many(np.arange(1000, 1100, dtype=np.int64))
+    b.add(np.arange(1000, 1100, dtype=np.int64))
     assert a.intersect(b).estimate() == 0.0  # disjoint ranges
 
 
 def test_sketch_rollups_keep_null_key_group(spark):
     """SQL GROUP BY keeps the null group; the sketch partial builders use
     pandas groupby which silently drops it by default (ADVICE r2 item 3)
-    — both rollups must report the null-key group."""
+    — both rollups must report the null-key group. NULL VALUES are not
+    values: KLL's n_rows counts non-NULLs, and theta's estimate is
+    COUNT(DISTINCT v), which skips NULLs (a NULL in a nullable long
+    column once hashed as INT64_MIN and counted as a distinct value)."""
     from mapreduce_hw05_spark.operators.quantile_sketch import (
         quantile_sketch_rollup,
     )
-    from mapreduce_hw05_spark.operators.theta_sketch import theta_sketch_by_key
+    from mapreduce_hw05_spark.operators.sketches import (
+        merge_by_key,
+        sketch_partials,
+    )
+    from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
 
     df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), (None, 3.0), (None, 4.0), (None, 5.0)],
+        [("a", 1.0), ("a", 2.0), ("a", None), (None, 3.0), (None, 4.0),
+         (None, 5.0), (None, None)],
         "k string, v double",
     )
     q = quantile_sketch_rollup(df, ["k"], "v", [0.5]).collect()
@@ -1094,11 +1104,18 @@ def test_sketch_rollups_keep_null_key_group(spark):
     assert by_key == {"a": 2, None: 3}
 
     dfi = spark.createDataFrame(
-        [("a", 1), ("a", 2), (None, 3), (None, 4), (None, 4)],
+        [("a", 1), ("a", None), ("a", 2), ("b", None), (None, 3),
+         (None, 4), (None, 4)],
         "k string, v long",
     )
-    t = theta_sketch_by_key(dfi, ["k"], "v").collect()
-    assert {r["k"] for r in t} == {"a", None}
+    t = merge_by_key(
+        sketch_partials(dfi, ["k"], "v", ThetaSketch), ["k"], ThetaSketch
+    ).collect()
+    est = {
+        r["k"]: ThetaSketch.deserialize(bytes(r["sketch"])).estimate()
+        for r in t
+    }
+    assert est == {"a": 2.0, "b": 0.0, None: 2.0}
 
 
 def test_kll_chunk_loop_recomputes_level0_capacity():
@@ -1110,7 +1127,7 @@ def test_kll_chunk_loop_recomputes_level0_capacity():
     from mapreduce_hw05_spark.operators.quantile_sketch import KLLSketch
 
     sk = KLLSketch(64)
-    sk.add_many(np.arange(100_000, dtype=np.float64))
+    sk.add(np.arange(100_000, dtype=np.float64))
     for lvl in range(len(sk.levels)):
         assert len(sk.levels[lvl]) <= sk._capacity(lvl), (
             lvl, len(sk.levels[lvl]), sk._capacity(lvl)
@@ -1368,6 +1385,15 @@ def test_aqe_splits_skewed_join_partition(spark):
 # --------------------------------------------------------------------------
 
 
+def _fold_partials(df, item_col, new):
+    """One unkeyed sketch over ``df[item_col]``: per-partition partials
+    collected and folded driver-side (operators.sketches)."""
+    from mapreduce_hw05_spark.operators.sketches import fold, sketch_partials
+
+    parts = sketch_partials(df, [], item_col, new).collect()
+    return fold([r["sketch"] for r in parts], new)
+
+
 def test_space_saving_exact_when_under_capacity():
     from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
 
@@ -1416,18 +1442,15 @@ def test_space_saving_offer_after_merge_evicts_true_minimum():
     installation, not offer()) must still evict the TRUE minimum when it
     later receives offer() calls — a stale/partial eviction heap would
     evict a non-minimum counter and break the space-saving error bound."""
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        SpaceSaving,
-        merge_summary_rows,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
+    from mapreduce_hw05_spark.operators.sketches import fold
 
     k = 3
-    rows = [
-        {"item": "big", "__part_id": 0, "count": 100, "err": 0},
-        {"item": "mid", "__part_id": 0, "count": 50, "err": 0},
-        {"item": "small", "__part_id": 1, "count": 1, "err": 0},
-    ]
-    sk = merge_summary_rows(rows, "item", k)
+    p0, p1 = SpaceSaving(k), SpaceSaving(k)
+    p0.offer("big", 100), p0.offer("mid", 50)
+    p1.offer("small", 1)
+    # deserialized partials folded by the shared driver-side merge
+    sk = fold([p0.serialize(), p1.serialize()], partial(SpaceSaving, k))
     # re-offer an existing item so the heap is non-empty but would be
     # INCOMPLETE without snapshot installation at assembly time
     sk.offer("big", 1)
@@ -1450,6 +1473,39 @@ def test_space_saving_offer_after_merge_evicts_true_minimum():
     got = {it: (c, e) for it, c, e in m.top(2)}
     assert got["x"] == (16, 0)
     assert got["z"] == (5, 4)
+
+
+@pytest.mark.parametrize(
+    "items, newcomer",
+    [(["x", None, "y", "z", "w"], "v"), ([15, None, 132, 7, 3], 99)],
+    ids=["str", "int"],
+)
+def test_space_saving_wire_format_roundtrip(items, newcomer):
+    """The JSON wire format keeps str, int and None items, every
+    (count, err) and the tie order; the deserialized summary's eviction
+    heap is complete, so its next offer evicts the true minimum."""
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving, _ord
+
+    k = 4
+    sk = SpaceSaving(k)
+    # the fifth item evicts the count-1 fourth: errs != 0, a three-way
+    # tie at count 3 that includes the None item
+    for item, weight in zip(items, [5, 3, 3, 1, 2]):
+        sk.offer(item, weight)
+    rt = SpaceSaving.deserialize(sk.serialize())
+    assert rt.top(k) == sk.top(k)
+    assert [type(it) for it, _c, _e in rt.top(k)] == [
+        type(it) for it, _c, _e in sk.top(k)
+    ]
+    assert None in rt.counts and {c for _i, c, _e in rt.top(k)} == {5, 3}
+
+    victim = min(rt.counts, key=lambda i: (rt.counts[i], _ord(i)))
+    floor = rt.counts[victim]
+    rt.offer(newcomer, 1)
+    assert victim not in rt.counts
+    assert (rt.counts[newcomer], rt.errs[newcomer]) == (floor + 1, floor)
+    sk.offer(newcomer, 1)
+    assert rt.top(k) == sk.top(k)
 
 
 def test_space_saving_random_merge_offer_interleavings_keep_bounds():
@@ -1520,10 +1576,7 @@ def test_space_saving_partials_merge_matches_exact_counts(spark):
     """Distributed partials over a small-vocabulary corpus merge to
     EXACT token counts (no eviction anywhere), independent of input
     partitioning."""
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        merge_summary_rows,
-        space_saving_partials,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
     from mapreduce_hw05_spark.operators.text import tokenize
     from mapreduce_hw05_spark.sources import load_table
 
@@ -1533,13 +1586,9 @@ def test_space_saving_partials_merge_matches_exact_counts(spark):
         for r in toks.groupBy("token").agg(F.count("*").alias("n")).collect()
     }
     for parts in (3, 11):
-        rows = [
-            r.asDict()
-            for r in space_saving_partials(
-                toks.repartition(parts), "token", k=4096
-            ).collect()
-        ]
-        merged = merge_summary_rows(rows, "token", 4096)
+        merged = _fold_partials(
+            toks.repartition(parts), "token", partial(SpaceSaving, 4096)
+        )
         got = {it: c for it, c, e in merged.top(4096)}
         errs = {it: e for it, c, e in merged.top(4096)}
         assert got == exact
@@ -1549,16 +1598,12 @@ def test_space_saving_partials_merge_matches_exact_counts(spark):
 def test_space_saving_partials_keep_null_group(spark):
     """SQL GROUP BY keeps the NULL group — the partials builder must
     too (value_counts dropna=False), and NULLs sort last in ties."""
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        merge_summary_rows,
-        space_saving_partials,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
 
     df = spark.createDataFrame(
         [("a",), (None,), ("a",), (None,), ("b",)], "k string"
     )
-    rows = [r.asDict() for r in space_saving_partials(df, "k", k=8).collect()]
-    merged = merge_summary_rows(rows, "k", 8)
+    merged = _fold_partials(df, "k", partial(SpaceSaving, 8))
     assert dict((it, c) for it, c, e in merged.top(8)) == {
         "a": 2, None: 2, "b": 1
     }
@@ -1571,17 +1616,20 @@ def test_space_saving_partials_nullable_long_column(spark):
     the partials builder must offer the nulls as None (not NaN — NaN
     breaks tie ordering and can't round-trip the LongType output) and
     hand the integral values back as ints (ADVICE r3 item 4)."""
-    from mapreduce_hw05_spark.operators.heavy_hitters import (
-        merge_summary_rows,
-        space_saving_partials,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
+    from mapreduce_hw05_spark.operators.sketches import sketch_partials
 
     df = spark.createDataFrame(
         [(7,), (None,), (7,), (None,), (None,), (15,), (132,)], "k long"
     )
-    rows = [r.asDict() for r in space_saving_partials(df, "k", k=8).collect()]
-    assert all(r["k"] is None or isinstance(r["k"], int) for r in rows)
-    merged = merge_summary_rows(rows, "k", 8)
+    parts = [
+        SpaceSaving.deserialize(bytes(r["sketch"]))
+        for r in sketch_partials(df, [], "k", partial(SpaceSaving, 8)).collect()
+    ]
+    assert all(
+        it is None or isinstance(it, int) for p in parts for it in p.counts
+    )
+    merged = _fold_partials(df, "k", partial(SpaceSaving, 8))
     assert dict((it, c) for it, c, _e in merged.top(8)) == {
         None: 3, 7: 2, 15: 1, 132: 1
     }
@@ -1652,7 +1700,7 @@ def test_count_min_exact_in_sparse_regime_and_partition_invariant(spark):
     identical under any input partitioning (partials merge by sum)."""
     import numpy as np
 
-    from mapreduce_hw05_spark.operators.count_min import count_min_from_df
+    from mapreduce_hw05_spark.operators.count_min import CountMinSketch
     from mapreduce_hw05_spark.operators.text import tokenize
     from mapreduce_hw05_spark.sources import load_table
 
@@ -1663,7 +1711,10 @@ def test_count_min_exact_in_sparse_regime_and_partition_invariant(spark):
     }
     items = np.array(sorted(exact), dtype=object)
     for parts in (3, 11):
-        sk = count_min_from_df(toks.repartition(parts), "token", width=2048)
+        sk = _fold_partials(
+            toks.repartition(parts), "token",
+            partial(CountMinSketch, width=2048),
+        )
         got = dict(zip(items, sk.query_many(items)))
         assert got == exact
 
@@ -1739,15 +1790,12 @@ def test_count_min_nullable_long_column(spark):
     values hash as ints so a query with plain Python ints matches."""
     import numpy as np
 
-    from mapreduce_hw05_spark.operators.count_min import (
-        CountMinSketch,
-        count_min_from_df,
-    )
+    from mapreduce_hw05_spark.operators.count_min import CountMinSketch
 
     df = spark.createDataFrame(
         [(7,), (None,), (7,), (None,), (15,)], "k long"
     )
-    sk = count_min_from_df(df, "k", width=64)
+    sk = _fold_partials(df, "k", partial(CountMinSketch, width=64))
     got = sk.query_many(np.array([7, 15, 999], dtype=np.int64))
     assert list(got[:2]) == [2, 1]
     sentinel = sk.query_many(np.array(["\0null"], dtype=object))

@@ -84,16 +84,12 @@ REGISTRY: dict[tuple[str, str], str | None] = {
         "streaming/ops.py",
         "stream_near_dup_filter_foreachbatch.apply_batch",
     ): "max_broadcast_index_docs",
-    # sketch rollup: past max_driver_keys persisted keys the state write
-    # routes through the distributed path (counted from parquet footers)
-    (
-        "streaming/ops.py",
-        "stream_sketch_rollup_foreachbatch.write_state",
-    ): "max_driver_keys",
-    (
-        "streaming/ops.py",
-        "stream_sketch_rollup_foreachbatch._pa_key_type",
-    ): "max_driver_keys",
+    # sketch sink: past MAX_DRIVER_STATE_KEYS persisted keys the state
+    # merge routes through Spark (counted from parquet footers)
+    ("streaming/ops.py", "<module>"): "MAX_DRIVER_STATE_KEYS",
+    ("streaming/ops.py", "stream_sketch_foreachbatch"): (
+        "MAX_DRIVER_STATE_KEYS"
+    ),
     ("operators/naive_bayes.py", "<module>"): "MAX_BROADCAST_MODEL_ROWS",
     # r7 (VERDICT r6 item 2): the brute-force cosine family's counted
     # routing — broadcast BLAS under the cap, blocked-and-distributed

@@ -394,14 +394,14 @@ def test_kll_sketch_merge_associative_and_rank_bounded(spark):
 
     seq = KLLSketch(200)
     for p in parts:
-        seq.add_many(p)
+        seq.add(p)
 
     left = KLLSketch(200)
     for p in parts[:4]:
-        left.add_many(p)
+        left.add(p)
     right = KLLSketch(200)
     for p in parts[4:]:
-        right.add_many(p)
+        right.add(p)
     merged = left.merge(right)
 
     assert merged.n == seq.n == len(data)
@@ -419,7 +419,7 @@ def test_kll_sketch_serialization_roundtrip():
     from mapreduce_hw05_spark.operators.quantile_sketch import KLLSketch
 
     sk = KLLSketch(64)
-    sk.add_many(np.arange(5000, dtype=float))
+    sk.add(np.arange(5000, dtype=float))
     back = KLLSketch.deserialize(sk.serialize())
     assert back.n == sk.n
     assert back.levels == sk.levels
@@ -438,9 +438,9 @@ def test_theta_sketch_set_ops_error_bounded():
 
     a, b = ThetaSketch(4096), ThetaSketch(4096)
     for chunk in np.array_split(a_ids, 7):
-        a.add_many(chunk)
+        a.add(chunk)
     for chunk in np.array_split(b_ids, 5):
-        b.add_many(chunk)
+        b.add(chunk)
 
     cases = {
         a.estimate(): 120_000,
@@ -453,8 +453,8 @@ def test_theta_sketch_set_ops_error_bounded():
         assert abs(got - want) <= 0.05 * want, (got, want)
 
     small = ThetaSketch(4096)
-    small.add_many(np.arange(1000, dtype=np.int64))
-    small.add_many(np.arange(500, 1500, dtype=np.int64))  # dups + new
+    small.add(np.arange(1000, dtype=np.int64))
+    small.add(np.arange(500, 1500, dtype=np.int64))  # dups + new
     assert small.estimate() == 1500  # below k -> exact
 
     rt = ThetaSketch.deserialize(a.serialize())

@@ -14,6 +14,7 @@ nothing behind.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -169,38 +170,6 @@ def test_stateful_user_counts(spark, events):
     assert as_sorted_rows(latest) == as_sorted_rows(expect)
 
 
-def test_stateful_user_counts_v2(spark, events):
-    """st-7 on the transformWithState v2 API: same batch totals.
-
-    The v2 state server speaks protobuf; this container ships PySpark
-    without ``google.protobuf``, so the test (not the operator) is
-    gated — on a full install it runs as-is.
-    """
-    pytest.importorskip("google.protobuf.descriptor")
-    got = replay_through(
-        spark,
-        time_ordered_chunks(events, "ts", 4),
-        ops.stateful_user_counts_v2,
-        "update",
-    )
-    from pyspark.sql import Window as W
-
-    latest = (
-        got.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "sum_value")
-    )
-    expect = events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value")
-    )
-    assert as_sorted_rows(latest) == as_sorted_rows(expect)
-
-
 def test_stream_upsert_foreachbatch(spark, events, tmp_path):
     """foreachBatch MERGE sink: after replaying all chunks, the parquet
     state table holds exactly the latest event per user."""
@@ -324,17 +293,14 @@ def test_sketch_rollup_sink_survives_crash_mid_swap(spark, tmp_path):
     import os
 
     from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_sketch_rollup_foreachbatch,
-    )
 
     state = str(tmp_path / "state")
     batch = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 7)], "k string, v long"
     )
     apply_batch = _capture_foreach_batch(
-        stream_sketch_rollup_foreachbatch, ["k"], "v", state,
-        str(tmp_path / "ckpt"), k=64, schema=batch.schema,
+        ops.stream_sketch_foreachbatch, ["k"], "v", partial(ThetaSketch, 64),
+        state, str(tmp_path / "ckpt"), schema=batch.schema,
     )
 
     def estimates():
@@ -358,7 +324,9 @@ def test_sketch_rollup_sink_survives_crash_mid_swap(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(state, "_batches"))) == ["0", "1"]
 
 
-def test_sketch_rollup_distributed_state_matches_driver_state(spark, tmp_path):
+def test_sketch_rollup_distributed_state_matches_driver_state(
+    spark, tmp_path, monkeypatch
+):
     """The distributed-state fallback (VERDICT r3 item 5): the same
     micro-batch sequence run through (a) the driver-side state path,
     (b) the forced distributed path, and (c) a threshold that flips the
@@ -366,9 +334,6 @@ def test_sketch_rollup_distributed_state_matches_driver_state(spark, tmp_path):
     KMV union is associative and order-independent, so the merge
     topology must not leak into the persisted bytes."""
     from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_sketch_rollup_foreachbatch,
-    )
 
     batches = [
         spark.createDataFrame(
@@ -381,10 +346,14 @@ def test_sketch_rollup_distributed_state_matches_driver_state(spark, tmp_path):
         [(f"k{i % 7}", i * 11) for i in range(40)], "k string, v long"
     )
 
-    def run(state, **kw):
+    def run(state, max_driver_state_keys=ops.MAX_DRIVER_STATE_KEYS):
+        monkeypatch.setattr(
+            ops, "MAX_DRIVER_STATE_KEYS", max_driver_state_keys
+        )
         apply_batch = _capture_foreach_batch(
-            stream_sketch_rollup_foreachbatch, ["k"], "v", state,
-            state + "_ckpt", k=64, schema=batches[0].schema, **kw,
+            ops.stream_sketch_foreachbatch, ["k"], "v",
+            partial(ThetaSketch, 64), state, state + "_ckpt",
+            schema=batches[0].schema,
         )
         for i, b in enumerate(batches):
             apply_batch(b, i)
@@ -397,30 +366,29 @@ def test_sketch_rollup_distributed_state_matches_driver_state(spark, tmp_path):
         }
 
     driver = run(str(tmp_path / "drv"))                          # always driver
-    distributed = run(str(tmp_path / "dst"), max_driver_keys=-1)  # always distributed
-    crossing = run(str(tmp_path / "mix"), max_driver_keys=5)      # flips after batch 0
+    distributed = run(str(tmp_path / "dst"), -1)  # always distributed
+    crossing = run(str(tmp_path / "mix"), 5)      # flips after batch 0
     assert driver == distributed
     assert driver == crossing
     assert len(driver) == 7  # k0..k6 across the two key shapes
 
 
-def test_sketch_rollup_distributed_replayed_batch_is_noop(spark, tmp_path):
+def test_sketch_rollup_distributed_replayed_batch_is_noop(
+    spark, tmp_path, monkeypatch
+):
     """Exactly-once on the distributed path: a re-delivered batch id is
     absorbed by the committed-batch manifest, same as driver-side."""
     from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_sketch_rollup_foreachbatch,
-    )
 
+    monkeypatch.setattr(ops, "MAX_DRIVER_STATE_KEYS", -1)  # always distributed
     state = str(tmp_path / "state")
 
     batch = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 7)], "k string, v long"
     )
     apply = _capture_foreach_batch(
-        stream_sketch_rollup_foreachbatch, ["k"], "v", state,
-        str(tmp_path / "ckpt"), k=64, max_driver_keys=-1,
-        schema=batch.schema,
+        ops.stream_sketch_foreachbatch, ["k"], "v", partial(ThetaSketch, 64),
+        state, str(tmp_path / "ckpt"), schema=batch.schema,
     )
     apply(batch, 0)
 
@@ -449,12 +417,11 @@ def test_stream_count_min_sink_exact_and_replay_noop(spark, tmp_path):
     import numpy as np
 
     from mapreduce_hw05_spark.operators.count_min import CountMinSketch
-    from mapreduce_hw05_spark.streaming import ops
 
     state = str(tmp_path / "state")
     apply_batch = _capture_foreach_batch(
-        ops.stream_count_min_foreachbatch,
-        "k", state, str(tmp_path / "ckpt"),
+        ops.stream_sketch_foreachbatch,
+        [], "k", CountMinSketch, state, str(tmp_path / "ckpt"),
     )
     b0 = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
     b1 = spark.createDataFrame([("a",), ("c",), ("c",)], "k string")
@@ -623,20 +590,19 @@ def test_heavy_hitters_sink_survives_crash_mid_swap(spark, tmp_path):
     counting)."""
     import os
 
-    from mapreduce_hw05_spark.streaming.ops import (
-        stream_heavy_hitters_foreachbatch,
-    )
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
 
     state = str(tmp_path / "hh_state")
     apply_batch = _capture_foreach_batch(
-        stream_heavy_hitters_foreachbatch, "k", state,
-        str(tmp_path / "ckpt"), 64,
+        ops.stream_sketch_foreachbatch, [], "k", partial(SpaceSaving, 64),
+        state, str(tmp_path / "ckpt"),
     )
 
     def counts():
+        (row,) = spark.read.parquet(state).collect()
         return {
-            r["k"]: (r["count"], r["err"])
-            for r in spark.read.parquet(state).collect()
+            it: (c, e)
+            for it, c, e in SpaceSaving.deserialize(bytes(row["sketch"])).top(64)
         }
 
     b0 = spark.createDataFrame(
@@ -709,12 +675,17 @@ def _kv_batches(spark):
 
 def _kv_sink(name, state, schema):
     """The foreachBatch function of one state sink over ``_kv_batches``."""
+    from mapreduce_hw05_spark.operators.count_min import CountMinSketch
+    from mapreduce_hw05_spark.operators.heavy_hitters import SpaceSaving
+    from mapreduce_hw05_spark.operators.theta_sketch import ThetaSketch
+
+    sketch = ops.stream_sketch_foreachbatch
     factory, args, kwargs = {
         "sketch_rollup": (
-            ops.stream_sketch_rollup_foreachbatch, (["k"], "v"), {"k": 64}
+            sketch, (["k"], "v", partial(ThetaSketch, 64)), {}
         ),
-        "heavy_hitters": (ops.stream_heavy_hitters_foreachbatch, ("k",), {}),
-        "count_min": (ops.stream_count_min_foreachbatch, ("k",), {}),
+        "heavy_hitters": (sketch, ([], "k", partial(SpaceSaving, 4096)), {}),
+        "count_min": (sketch, ([], "k", CountMinSketch), {}),
         "weighted_reservoir": (
             ops.stream_weighted_reservoir_foreachbatch, ("k", "v", 2), {}
         ),

@@ -137,7 +137,7 @@ def test_stream_stream_inner_join_invariant_to_chunking(spark, events, seed):
     got = replay_through(
         spark,
         random_chunks(events, "ts", seed),
-        ops.interval_join_clicks_purchases,
+        ops.interval_join_purchases,
         "append",
     )
     clicks = events.filter(F.col("event_type") == "click").select(
@@ -180,7 +180,7 @@ def outer_join_reference(spark):
     ref = replay_through(
         spark,
         [events.localCheckpoint(), flush],
-        ops.interval_left_join_purchases,
+        lambda stream: ops.interval_join_purchases(stream, "left"),
         "append",
     )
     return as_sorted_rows(ref)
@@ -202,7 +202,7 @@ def test_stream_stream_outer_join_invariant_to_chunking(
     got = replay_through(
         spark,
         random_chunks(events, "ts", seed) + [flush],
-        ops.interval_left_join_purchases,
+        lambda stream: ops.interval_join_purchases(stream, "left"),
         "append",
     )
     assert as_sorted_rows(got) == outer_join_reference, f"seed={seed}"
