@@ -119,7 +119,9 @@ def rewrite_dir(dst: str, write_tmp, batch_id: int | None = None) -> None:
     write_tmp(tmp)
     marker_dir = os.path.join(dst, _MANIFEST)
     carried = os.listdir(marker_dir) if os.path.isdir(marker_dir) else []
-    mark_committed(tmp, *carried, *([] if batch_id is None else [batch_id]))
+    marks = [*carried, *([] if batch_id is None else [batch_id])]
+    if marks:  # a table without a manifest does not gain an empty one
+        mark_committed(tmp, *marks)
     replace_dir(tmp, dst)
 
 

@@ -8,7 +8,8 @@ into ~``target_bytes`` files: partition count is derived from the actual
 on-disk byte size (never row counts — row width varies), data is
 rewritten with a round-robin ``repartition`` (no shuffle key — byte
 balance is the goal, not co-location), and the swap is atomic at the
-directory level (write to ``<dir>.compact-tmp``, then rename over).
+directory level (``fsutil.rewrite_dir``: write ``<dir>.next``, then
+rename over).
 
 Content equality is the contract: compaction must never change the row
 multiset, only the file layout. The contract query proves it by
@@ -21,7 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
+from mapreduce_hw05_spark.fsutil import recover, rewrite_dir
 
 
 def dir_bytes(path: str) -> int:
@@ -45,14 +46,14 @@ def compact_parquet_dir(
     target_bytes: int = 128 * (1 << 20),
 ) -> int:
     """Rewrite ``path`` into ~target-sized parquet files; returns the new
-    file count. Crash-safe rename-aside swap (``fsutil.replace_dir``):
+    file count. Crash-safe rename-aside swap (``fsutil.rewrite_dir``):
     readers of ``path`` see old files until the final rename, and a
     crash mid-swap is recovered on the next pass. On object stores the
     same protocol is a manifest swap."""
-    tmp = path.rstrip("/") + ".compact-tmp"
-    recover_dir(path, tmp)
+    recover(path)
     n = plan_num_files(dir_bytes(path), target_bytes)
     df: DataFrame = spark.read.parquet(path)
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-    replace_dir(tmp, path)
+    rewrite_dir(
+        path, lambda tmp: df.repartition(n).write.mode("overwrite").parquet(tmp)
+    )
     return n

@@ -34,89 +34,13 @@ def weighted_median_two_pass(
     """Exact weighted median per ``key`` → (key, total_weight,
     median_val): the smallest ``val`` whose cumulative ``weight`` (in
     (val, tiebreak) order) reaches half the group total — identical
-    semantics to the single-window plan, computed in two passes.
-
-    ``val`` must be integer-typed (pre-quantize doubles to BIGINT
-    first); bucket ids are ``(v - lo) * buckets // (hi - lo + 1)``
-    computed in DECIMAL(20,0) — unconditionally exact over the whole
-    int64 domain, including mixed-sign extremes where ``v - lo`` or
-    ``span * buckets`` would overflow BIGINT (ADVICE r5: the previous
-    pure-LONG ``DIV`` was exact only while span·buckets < 2⁶³ and could
-    wrap/error near the edge under ANSI).
+    semantics to the single-window plan. It is
+    :func:`weighted_quantiles_two_pass` at the one probability 1/2.
     """
-    wts = wts.select(
-        F.col(key).alias("k"),
-        F.col(val).cast("long").alias("v"),
-        F.col(weight).cast("long").alias("w"),
-        F.col(tiebreak).alias("tb"),
-    ).persist()
-    bounds = wts.groupBy("k").agg(
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-        F.sum("w").cast("long").alias("tw"),
-    )
-    with_b = (
-        # label-sized: one bounds row per group key (few-key/huge-group shape)
-        wts.join(F.broadcast(bounds), "k")
-        .withColumn(
-            "b",
-            # DECIMAL(20,0) holds the full int64 range, so v - lo, the
-            # span, and span*buckets are unconditionally exact here —
-            # no 2^63 wrap for mixed-sign extremes (ADVICE r5; ANSI
-            # would error on the LONG overflow, non-ANSI would wrap).
-            # DIV on nonnegative operands == floor division → BIGINT.
-            F.expr(
-                f"(CAST(v AS DECIMAL(20,0)) - lo) * {int(buckets)}"
-                " DIV (CAST(hi AS DECIMAL(20,0)) - lo + 1)"
-            ),
-        )
-        .select("k", "v", "w", "tb", "b")
-    )
-    hist = with_b.groupBy("k", "b").agg(F.sum("w").cast("long").alias("bw"))
-    cum_w = (
-        W.partitionBy("k").orderBy("b").rowsBetween(W.unboundedPreceding, 0)
-    )
-    profile = hist.join(
-        # label-sized: one total-weight row per group key
-        F.broadcast(bounds.select("k", "tw")), "k"
-    ).withColumn("cum", F.sum("bw").over(cum_w).cast("long"))
-    target = (
-        profile.filter(2 * F.col("cum") >= F.col("tw"))
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("k").orderBy("b"))
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("k").alias("t_k"),
-            F.col("b").alias("t_b"),
-            (F.col("cum") - F.col("bw")).alias("offset"),
-            F.col("tw").alias("t_tw"),
-        )
-    )
-    in_bucket = with_b.join(
-        # label-sized: one target-bucket row per group key
-        F.broadcast(target),
-        (F.col("k") == F.col("t_k")) & (F.col("b") == F.col("t_b")),
+    return weighted_quantiles_two_pass(
+        wts, key, val, weight, tiebreak, (("p50", 1, 2),), buckets
     ).select(
-        "k", "v", "w", "tb", "offset", F.col("t_tw").alias("tw")
-    )
-    cum_in = W.partitionBy("k").orderBy("v", "tb").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    pick = (
-        in_bucket.withColumn(
-            "cum", F.col("offset") + F.sum("w").over(cum_in).cast("long")
-        )
-        .filter(2 * F.col("cum") >= F.col("tw"))
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("k").orderBy("v", "tb"))
-        )
-        .filter(F.col("rn") == 1)
-    )
-    return pick.select(
-        F.col("k").alias(key),
-        F.col("tw").alias("total_weight"),
-        F.col("v").alias("median_val"),
+        key, "total_weight", F.col("quantile_val").alias("median_val")
     )
 
 
@@ -140,15 +64,26 @@ def weighted_quantiles_two_pass(
     probability ever multiplies a weight). The profile pass is shared
     across quantiles; pass 2 sorts only the union of each quantile's
     target bucket, so adding a quantile costs one more ≤bucket-sized
-    sort, not another scan — the generalization of
-    :func:`weighted_median_two_pass` (median = ("p50", 1, 2)).
+    sort, not another scan.
+
+    ``val`` must be integer-typed (pre-quantize doubles to BIGINT
+    first); bucket ids are ``(v - lo) * buckets // (hi - lo + 1)``
+    computed in DECIMAL(20,0) — unconditionally exact over the whole
+    int64 domain, including mixed-sign extremes where ``v - lo`` or
+    ``span * buckets`` would overflow BIGINT (ADVICE r5: the previous
+    pure-LONG ``DIV`` was exact only while span·buckets < 2⁶³ and could
+    wrap/error near the edge under ANSI).
+
+    Nothing is persisted: a cache the returned lazy plan still needs
+    could never be released, and the session's shared CacheManager would
+    then make later calls' job counts depend on what ran before.
     """
     wts = wts.select(
         F.col(key).alias("k"),
         F.col(val).cast("long").alias("v"),
         F.col(weight).cast("long").alias("w"),
         F.col(tiebreak).alias("tb"),
-    ).persist()
+    )
     bounds = wts.groupBy("k").agg(
         F.min("v").alias("lo"),
         F.max("v").alias("hi"),
@@ -181,17 +116,23 @@ def weighted_quantiles_two_pass(
         # label-sized: one total-weight row per group key
         hist.join(F.broadcast(bounds.select("k", "tw")), "k")
         .withColumn("cum", F.sum("bw").over(cum_w).cast("long"))
-        .persist()
     )
-    spark = wts.sparkSession
-    # bounded: one row per requested quantile
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            list(quantiles), "qname string, qnum long, qden long"
+    # each profile row fans out to one row per requested quantile: a
+    # generator over literals, not a join against a quantile table
+    spine = F.inline(
+        F.array(
+            *(
+                F.struct(
+                    F.lit(name).alias("qname"),
+                    F.lit(int(num)).cast("long").alias("qnum"),
+                    F.lit(int(den)).cast("long").alias("qden"),
+                )
+                for name, num, den in quantiles
+            )
         )
     )
     targets = (
-        profile.crossJoin(qdf)
+        profile.select("*", spine)
         .filter(F.col("cum") * F.col("qden") >= F.col("qnum") * F.col("tw"))
         .withColumn(
             "rn",

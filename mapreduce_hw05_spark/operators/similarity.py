@@ -1,6 +1,12 @@
 """Vector-similarity operators: exact cosine top-k / threshold search,
 kNN, and MinHash-LSH near-dedup support (SURVEY §2.11 llm-2/3/7, §4 item 2).
 
+Set-similarity (near-dup) routes share two building blocks from here:
+:func:`doc_elements` is the one per-doc element SET (tokens or word
+shingles — the sets :func:`minhash_signatures` hashes) and
+:func:`set_jaccard` the one Jaccard expression. The exact joins, the
+LSH verify and the streaming admission filter all measure through them.
+
 Physical strategy
 -----------------
 Per-row vector math must NOT go through Catalyst higher-order functions
@@ -33,9 +39,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mapreduce_hw05_spark.operators.text import tokenize, word_shingles
 
 _PAIR_SCHEMA = T.StructType(
     [
@@ -267,6 +275,28 @@ def maybe_broadcast(
     if limit is None:
         limit = MAX_BROADCAST_TOKEN_DOCS
     return F.broadcast(df) if n_rows <= limit else df
+
+
+def doc_elements(
+    docs: DataFrame,
+    shingle: int = 1,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Distinct ``(id_col, elem)`` rows: each document's element SET —
+    its whitespace tokens for ``shingle == 1``, its word-``shingle``-grams
+    otherwise (the same sets ``minhash_signatures(shingle=…)`` hashes).
+    Every set-similarity route builds its sets here."""
+    if shingle == 1:
+        elems = tokenize(docs, text_col, id_col)
+    else:
+        elems = word_shingles(docs, shingle, text_col, id_col)
+    return elems.toDF(id_col, "elem").distinct()
+
+
+def set_jaccard(n_common: Column, n1: Column, n2: Column) -> Column:
+    """|A∩B| / |A∪B| in double from the intersection and set sizes."""
+    return n_common.cast("double") / (n1 + n2 - n_common)
 
 
 def _reference_matrix(
@@ -725,9 +755,10 @@ def lsh_band_buckets(
     candidate join (:func:`lsh_candidate_pairs`) and the persisted
     streaming near-dup index (streaming.ops.stream_near_dup_filter):
     two documents are LSH candidates iff they share a (band, bucket)
-    row, and the rows are storable/joinable state."""
-    n_hashes = len(signatures.select("signature").first()["signature"])
-    rows_per_band = n_hashes // num_bands
+    row, and the rows are storable/joinable state. The band width is
+    read per row in Catalyst (every signature has the same length,
+    the short-doc sentinel included), so banding runs no job."""
+    rows_per_band = (F.size("signature") / num_bands).cast("int")
     return signatures.select(
         F.col(id_col),
         F.explode(
@@ -736,7 +767,11 @@ def lsh_band_buckets(
                     F.struct(
                         F.lit(band).alias("band"),
                         F.xxhash64(
-                            F.slice("signature", band * rows_per_band + 1, rows_per_band)
+                            F.slice(
+                                "signature",
+                                rows_per_band * band + 1,
+                                rows_per_band,
+                            )
                         ).alias("bucket"),
                     )
                     for band in range(num_bands)

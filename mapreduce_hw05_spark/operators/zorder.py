@@ -98,7 +98,7 @@ def zorder_incremental(
     import json
     import os
 
-    from mapreduce_hw05_spark.fsutil import recover_dir, replace_dir
+    from mapreduce_hw05_spark.fsutil import recover, rewrite_dir
 
     manifest_path = os.path.join(table_dir, "_zorder_manifest")
     manifest: dict[str, str] = {}
@@ -121,11 +121,7 @@ def zorder_incremental(
         if entry.startswith(f"{partition_col}=") and entry.endswith(
             (".next", ".old")
         ):
-            base = entry.rsplit(".", 1)[0]
-            recover_dir(
-                os.path.join(table_dir, base),
-                os.path.join(table_dir, base) + ".next",
-            )
+            recover(os.path.join(table_dir, entry.rsplit(".", 1)[0]))
 
     rewritten: list[str] = []
     for entry in sorted(os.listdir(table_dir)):
@@ -142,9 +138,10 @@ def zorder_incremental(
         clustered = zorder_rewrite(
             spark.read.parquet(part_dir), cols, num_files, bits
         )
-        tmp = part_dir + ".next"
-        clustered.write.mode("overwrite").parquet(tmp)
-        replace_dir(tmp, part_dir)
+        rewrite_dir(
+            part_dir,
+            lambda tmp: clustered.write.mode("overwrite").parquet(tmp),
+        )
         manifest[entry] = file_hash(part_dir)
         rewritten.append(entry)
 

@@ -5,6 +5,14 @@ The Spark side uses the float64 NumPy kernels in operators.similarity
 the same similarity in explicit float64 SQL — DuckDB's native
 ``list_cosine_similarity`` is float32 (measured ~1.6e-7 error) and would
 not survive round-to-6 hashing.
+
+The set-similarity near-dup family is one join with interchangeable
+parts: ``doc_elements`` picks the sets (tokens or bigrams),
+:func:`_set_overlap` counts shared elements (inverted-index self-join
+or given candidate pairs) and attaches both set sizes, and a measure
+filters — Jaccard (:func:`_jaccard_at`, q_near_dup_jaccard /
+q_near_dup_ngram / q_prefix_filter_pairs) or containment. The MinHash
+route :func:`lsh_jaccard_pairs` serves tokens and shingles alike.
 """
 
 from __future__ import annotations
@@ -15,12 +23,13 @@ from pyspark.sql import functions as F
 from mapreduce_hw05_spark.operators import similarity as _sim
 from mapreduce_hw05_spark.operators.similarity import (
     cosine_pairs_topk_per_row,
+    doc_elements,
     global_topk_pairs,
     lsh_candidate_pairs,
     maybe_broadcast,
     minhash_signatures,
+    set_jaccard,
 )
-from mapreduce_hw05_spark.operators.text import tokenize
 from mapreduce_hw05_spark.plans.common import (
     lng,
     ratio,
@@ -209,31 +218,45 @@ _JACCARD_ORACLE = """
 """
 
 
-def _exact_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
+def _corpus_elements(
+    spark: SparkSession, sf_dir: str, shingle: int = 1
+) -> tuple[DataFrame, int]:
+    """The documents table's distinct ``(doc_id, elem)`` sets and its
+    row count (the size joins' broadcast gate)."""
     raw = load_table(spark, sf_dir, "documents")
     n_docs = raw.count()
-    docs = spread_small(raw)
-    toks = tokenize(docs, "text", "doc_id").distinct()
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    t1 = toks.withColumnRenamed("doc_id", "id1")
-    t2 = toks.withColumnRenamed("doc_id", "id2")
-    inter = (
-        t1.join(t2, "token")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    # per-doc size tables are doc-count-sized: counted broadcast routing
+    return doc_elements(spread_small(raw), shingle), n_docs
+
+
+def _set_overlap(
+    elems: DataFrame, n_docs: int, cands: DataFrame | None = None
+) -> DataFrame:
+    """``(id1, id2, n_common, n1, n2)`` for the doc pairs (id1 < id2)
+    that share an element: the inverted-index self-join on ``elem`` —
+    keyed on the element, never all-pairs — or only the given candidate
+    pairs. The per-doc size tables are doc-count-sized and join through
+    the counted ``maybe_broadcast``."""
+    sizes = elems.groupBy("doc_id").agg(F.count("*").alias("n"))
+    e1 = elems.withColumnRenamed("doc_id", "id1")
+    e2 = elems.withColumnRenamed("doc_id", "id2")
+    if cands is None:
+        shared = e1.join(e2, "elem").filter(F.col("id1") < F.col("id2"))
+    else:
+        shared = cands.join(e1, "id1").join(e2, ["id2", "elem"])
+    inter = shared.groupBy("id1", "id2").agg(F.count("*").alias("n_common"))
     s1 = sizes.withColumnsRenamed({"doc_id": "id1", "n": "n1"})
     s2 = sizes.withColumnsRenamed({"doc_id": "id2", "n": "n2"})
-    jac = F.col("n_common").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("n_common")
+    return inter.join(maybe_broadcast(s1, n_docs), "id1").join(
+        maybe_broadcast(s2, n_docs), "id2"
     )
-    return (
-        inter.join(maybe_broadcast(s1, n_docs), "id1")
-        .join(maybe_broadcast(s2, n_docs), "id2")
-        .filter(jac >= threshold)
-        .select("id1", "id2", ratio(jac).alias("jaccard"))
+
+
+def _jaccard_at(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(id1, id2, jaccard) of the :func:`_set_overlap` pairs at
+    Jaccard ≥ ``threshold``."""
+    jac = set_jaccard(F.col("n_common"), F.col("n1"), F.col("n2"))
+    return overlap.filter(jac >= threshold).select(
+        "id1", "id2", ratio(jac).alias("jaccard")
     )
 
 
@@ -243,22 +266,19 @@ def _verify_jaccard_on_candidates(
     set_col: str,
     threshold: float,
     n_docs: int,
-    broadcast_doc_limit: int | None = None,
-    sizes: DataFrame | None = None,
+    sizes: DataFrame,
 ) -> DataFrame:
-    """Shared exact-verify join for the MinHash-LSH family (unigram
-    tokens AND word-bigram shingles): join each candidate pair to its
-    per-doc sorted element array, intersect JVM-side in one codegen
-    stage, keep pairs at set-Jaccard ≥ ``threshold``.
+    """The exact verify join of :func:`lsh_jaccard_pairs`: join each
+    candidate pair to its per-doc sorted element array, intersect
+    JVM-side in one codegen stage, keep pairs at set-Jaccard ≥
+    ``threshold``. ``sizes`` is the per-doc ``(doc_id, sz)`` element
+    count — counted from the distinct pairs, so the prefilter never
+    builds the array column just to measure it.
 
-    ONE helper so the broadcast-vs-shuffle routing cannot fork per
-    variant again (VERDICT r5 item 2 — the shingle path had re-grown an
-    ungated broadcast the round after the unigram path was gated): the
-    per-doc array table is doc-count-sized and broadcasts under
-    ``broadcast_doc_limit`` (default
-    ``operators.similarity.MAX_BROADCAST_TOKEN_DOCS``, read at call
-    time); past it the SAME joins run shuffled — identical results, one
-    extra exchange. Forced-shuffle identity tests live in
+    The per-doc tables are doc-count-sized and broadcast while
+    ``n_docs`` fits under ``MAX_BROADCAST_TOKEN_DOCS``; past it the
+    SAME joins run shuffled — identical results, one extra exchange
+    (``maybe_broadcast``). Forced-shuffle identity tests live in
     tests/test_near_dup.py.
 
     SIZE PREFILTER (r6, driven by the x1000 weak-scaling probe): before
@@ -284,16 +304,7 @@ def _verify_jaccard_on_candidates(
     one machine's disk, which a cluster distributes); at sf0.1 it
     prunes 41 % and is wall-clock-neutral (A/B/A 38.5/39.9/37.2 s).
     The size table is two LONG columns — the same counted broadcast
-    gate as the array tables.
-
-    ``sizes`` (r12): callers that still hold the pre-array distinct
-    ``(doc_id, elem)`` pairs pass the per-doc COUNT aggregate directly —
-    ``size(sort_array(collect_list(e)))`` over distinct elements equals
-    ``count(*)`` by construction, but the count aggregate skips building
-    (and broadcasting twice) the array column just to measure it. Left
-    None, the sizes derive from ``per_doc`` as before."""
-    if sizes is None:
-        sizes = per_doc.select("doc_id", F.size(set_col).alias("sz"))
+    gate as the array tables."""
     z1 = sizes.withColumnsRenamed({"doc_id": "id1", "sz": "sz1"})
     z2 = sizes.withColumnsRenamed({"doc_id": "id2", "sz": "sz2"})
     ratio_ok = F.least("sz1", "sz2").cast("double") >= (
@@ -303,18 +314,19 @@ def _verify_jaccard_on_candidates(
         - F.lit(1e-9)
     )
     slim = (
-        cands.join(maybe_broadcast(z1, n_docs, broadcast_doc_limit), "id1")
-        .join(maybe_broadcast(z2, n_docs, broadcast_doc_limit), "id2")
+        cands.join(maybe_broadcast(z1, n_docs), "id1")
+        .join(maybe_broadcast(z2, n_docs), "id2")
         .filter(ratio_ok)
         .select("id1", "id2")
     )
     d1 = per_doc.withColumnsRenamed({"doc_id": "id1", set_col: "e1"})
     d2 = per_doc.withColumnsRenamed({"doc_id": "id2", set_col: "e2"})
-    n_common = F.size(F.array_intersect("e1", "e2"))
-    jac = n_common.cast("double") / (F.size("e1") + F.size("e2") - n_common)
+    jac = set_jaccard(
+        F.size(F.array_intersect("e1", "e2")), F.size("e1"), F.size("e2")
+    )
     return (
-        slim.join(maybe_broadcast(d1, n_docs, broadcast_doc_limit), "id1")
-        .join(maybe_broadcast(d2, n_docs, broadcast_doc_limit), "id2")
+        slim.join(maybe_broadcast(d1, n_docs), "id1")
+        .join(maybe_broadcast(d2, n_docs), "id2")
         .filter(jac >= threshold)
         .select("id1", "id2", ratio(jac).alias("jaccard"))
     )
@@ -325,18 +337,16 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc pairs with token-set Jaccard ≥ 0.8 (exact pairwise, contract
     scale only — the token self-join is keyed on token, never all-pairs,
     but hot tokens still fan out; the scale path is the LSH variant)."""
-    return _exact_jaccard_pairs(spark, sf_dir, threshold=0.8)
+    return _jaccard_at(_set_overlap(*_corpus_elements(spark, sf_dir)), 0.8)
 
 
 def lsh_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    max_bucket_size: int | None = None,
-    broadcast_doc_limit: int | None = None,
+    docs: DataFrame, threshold: float = 0.8, shingle: int = 1
 ) -> DataFrame:
-    """Token-Jaccard ≥ threshold pairs via the LSH fast path:
-    signatures → banding → candidate pairs → exact verify on candidates
-    only. Returns (id1, id2, jaccard).
+    """Set-Jaccard ≥ threshold pairs via the MinHash-LSH fast path, over
+    token sets (``shingle=1``) or word-``shingle``-gram sets (the
+    order-sensitive measure): signatures → banding → candidate pairs →
+    exact verify on candidates only. Returns (id1, id2, jaccard).
 
     Callers need NOT pre-spread their input: the spread_small gate is
     applied internally (r11) — wrapping the argument in spread_small is
@@ -347,32 +357,23 @@ def lsh_jaccard_pairs(
     ~1-(1-s^4)^32 ≈ 1-5e-8 at s=0.8 — probabilistic, not a proof;
     coverage is FIXTURE-ASSERTED in tests/test_near_dup.py at the
     scale factors the contracts run at) at a fraction of the cost on
-    dense corpora —
+    dense corpora — the inverted-index join emits Σ_token df(token)²
+    rows (~350 M at sf0.1 on this 31-token-vocab fixture), the banded
+    join only collision groups. Shingle hashes are composed inside the
+    vectorized MinHash kernel, so shingle strings are only built for
+    the verify's per-doc sets.
 
-    ``max_bucket_size`` (default None = exact) caps degenerate LSH
-    buckets via representative-star candidates — the 100-TB knob for
-    constant-signature corpora; see
-    :func:`~mapreduce_hw05_spark.operators.similarity.lsh_candidate_pairs`.
-    Capping can drop true pairs inside oversize MIXED buckets, so the
-    oracle-checked contracts keep None.
-    the inverted-index join emits Σ_token df(token)² rows (~350 M at
-    sf0.1 on this 31-token-vocab fixture), the banded join only
-    collision groups.
-
-    Verify step: per-doc DISTINCT token ARRAYS broadcast to the
+    Verify step: per-doc DISTINCT element ARRAYS broadcast to the
     candidate pairs, intersected JVM-side. The alternative — fanning
     each candidate pair out over its tokens and re-grouping — emits
     |cands| × tokens-per-doc intermediate rows (~300 M at sf0.1,
     measured 71 s); two broadcast hash joins plus a per-row
     array_intersect over ~100-token arrays does the same exact math in
-    one codegen stage (23 s). The token-array table is doc-count-sized
+    one codegen stage (23 s). The element-array table is doc-count-sized
     (not corpus-sized) so it broadcasts far beyond fixture scale; past
-    ``broadcast_doc_limit`` (default
-    ``operators.similarity.MAX_BROADCAST_TOKEN_DOCS``) the SAME joins
-    run shuffled — identical results, one extra exchange — routed on a
-    metadata-cheap ``docs.count()`` inside the shared
-    :func:`_verify_jaccard_on_candidates` helper (r6: one verify join
-    for the whole LSH family, so the routing can't fork per variant).
+    ``MAX_BROADCAST_TOKEN_DOCS`` the SAME joins run shuffled —
+    identical results, one extra exchange — routed on a metadata-cheap
+    ``docs.count()`` inside :func:`_verify_jaccard_on_candidates`.
     """
     # r11 (guide §2.5 input skew): a corpus that is tiny ON DISK arrives
     # as ONE scan split, so the signature kernel, the banding explode and
@@ -382,28 +383,31 @@ def lsh_jaccard_pairs(
     # yields >= default-parallelism splits (any at-scale input).
     n_docs = docs.count()
     docs = spread_small(docs)
-    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=128)
-    cands = lsh_candidate_pairs(
-        sigs, "doc_id", num_bands=32, max_bucket_size=max_bucket_size
+    sigs = minhash_signatures(
+        docs, "doc_id", "text", num_hashes=128, shingle=shingle
     )
-    doc_elems = tokenize(docs, "text", "doc_id").distinct()
-    # r12 (guide §2.3): dictionary-encode tokens to dense int64 ids under
-    # the counted vocab gate — the verify's array_intersect then compares
-    # longs, not strings. Jaccard is invariant under the injective
-    # relabeling; past the gate the string path runs unchanged.
-    doc_elems = (
-        _sim.dict_encode_elements(doc_elems, "token") or doc_elems
-    )
+    cands = lsh_candidate_pairs(sigs, "doc_id", num_bands=32)
+    elems = doc_elements(docs, shingle)
+    if shingle == 1:
+        # r12 (guide §2.3): dictionary-encode tokens to dense int64 ids
+        # under the counted vocab gate — the verify's array_intersect
+        # then compares longs, not strings. Jaccard is invariant under
+        # the injective relabeling; past the gate the string path runs
+        # unchanged. Shingle sets keep their strings (OPTIMIZATION_r12
+        # §4): their banded candidate set is small on realistic corpora,
+        # so the verify win cannot repay the encoder's two vocab jobs +
+        # per-arm mapping join (interleaved noop A/B at sf0.1: 4.36 s
+        # encoded vs 3.44 s strings; sf0.01: 4.24 vs 3.83).
+        elems = _sim.dict_encode_elements(elems, "elem") or elems
     # per-doc set sizes from the distinct pairs (count == array length by
     # construction) — skips materializing the array column in the size
     # prefilter's two broadcast arms.
-    sizes = doc_elems.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    doc_toks = doc_elems.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("token")).alias("toks")
+    sizes = elems.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    per_doc = elems.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("elem")).alias("elems")
     )
     return _verify_jaccard_on_candidates(
-        cands, doc_toks, "toks", threshold, n_docs, broadcast_doc_limit,
-        sizes=sizes,
+        cands, per_doc, "elems", threshold, n_docs, sizes
     )
 
 
@@ -456,26 +460,9 @@ def q_containment_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature with a size-stratified index, or use the exact join with
     hot-token capping — documented knob, not silently approximated here.
     """
-    raw = load_table(spark, sf_dir, "documents")
-    n_docs = raw.count()
-    docs = spread_small(raw)
-    toks = tokenize(docs, "text", "doc_id").distinct()
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    t1 = toks.withColumnRenamed("doc_id", "id1")
-    t2 = toks.withColumnRenamed("doc_id", "id2")
-    inter = (
-        t1.join(t2, "token")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    # per-doc size tables are doc-count-sized: counted broadcast routing
-    s1 = sizes.withColumnsRenamed({"doc_id": "id1", "n": "n1"})
-    s2 = sizes.withColumnsRenamed({"doc_id": "id2", "n": "n2"})
     cont = F.col("n_common").cast("double") / F.least("n1", "n2")
     pairs = (
-        inter.join(maybe_broadcast(s1, n_docs), "id1")
-        .join(maybe_broadcast(s2, n_docs), "id2")
+        _set_overlap(*_corpus_elements(spark, sf_dir))
         .filter(cont >= 0.9)
         .select("id1", "id2", ratio(cont).alias("containment"))
     )
@@ -793,32 +780,8 @@ def q_near_dup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram variant of near-dup (unigram Jaccard can't tell a shuffled
     copy from a true near-dup; shingles can). Same keyed-join shape as
     the token variant: shuffles on shingle, never all-pairs."""
-    from mapreduce_hw05_spark.operators.text import word_shingles
-
-    raw = load_table(spark, sf_dir, "documents")
-    n_docs = raw.count()
-    docs = spread_small(raw)
-    grams = word_shingles(docs, 2, "text", "doc_id").distinct()
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
-    g1 = grams.withColumnRenamed("doc_id", "id1")
-    g2 = grams.withColumnRenamed("doc_id", "id2")
-    inter = (
-        g1.join(g2, "shingle")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    # per-doc size tables are doc-count-sized: counted broadcast routing
-    s1 = sizes.withColumnsRenamed({"doc_id": "id1", "n": "n1"})
-    s2 = sizes.withColumnsRenamed({"doc_id": "id2", "n": "n2"})
-    jac = F.col("n_common").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("n_common")
-    )
-    return (
-        inter.join(maybe_broadcast(s1, n_docs), "id1")
-        .join(maybe_broadcast(s2, n_docs), "id2")
-        .filter(jac >= 0.5)
-        .select("id1", "id2", ratio(jac).alias("jaccard"))
+    return _jaccard_at(
+        _set_overlap(*_corpus_elements(spark, sf_dir, shingle=2)), 0.5
     )
 
 
@@ -850,56 +813,14 @@ def q_near_dup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_near_dup_shingle_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-bigram SHINGLE MinHash + LSH — the scale path for the
     order-sensitive near-dup measure (q_near_dup_ngram is the exact
-    inverted-index path; this routes the same semantics through
-    signatures → banding → candidates → exact verify, never all-pairs
-    and never a corpus-sized shingle shuffle). Shingle hashes are
-    composed inside the vectorized MinHash kernel — the shingle strings
-    are never materialized. Oracle = the exact pairwise bigram-Jaccard
-    query at ≥ 0.8; verified output ≡ exact output by construction
-    (coverage fixture-asserted like the unigram path).
+    inverted-index path): :func:`lsh_jaccard_pairs` with ``shingle=2``,
+    never all-pairs and never a corpus-sized shingle self-join. Oracle =
+    the exact pairwise bigram-Jaccard query at ≥ 0.8; verified output ≡
+    exact output by construction (coverage fixture-asserted like the
+    unigram path).
     """
-    docs = spread_small(load_table(spark, sf_dir, "documents"))
-    return shingle_lsh_jaccard_pairs(docs, 0.8)
-
-
-def shingle_lsh_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    broadcast_doc_limit: int | None = None,
-) -> DataFrame:
-    """Word-bigram shingle-Jaccard ≥ threshold pairs via MinHash + LSH:
-    shingle signatures → banding → candidate pairs → exact verify on
-    candidates only. Returns (id1, id2, jaccard). Same structure as the
-    unigram :func:`lsh_jaccard_pairs` and the same shared verify join
-    (:func:`_verify_jaccard_on_candidates`): the per-doc shingle-array
-    table is doc-count-sized and broadcasts under
-    ``broadcast_doc_limit``; past it the SAME joins run shuffled —
-    identical results, one extra exchange (VERDICT r5 item 2: this
-    path's verify join was the one ungated broadcast left)."""
-    from mapreduce_hw05_spark.operators.text import word_shingles
-
-    sigs = minhash_signatures(
-        docs, "doc_id", "text", num_hashes=128, shingle=2
-    )
-    cands = lsh_candidate_pairs(sigs, "doc_id", num_bands=32)
-    doc_elems = word_shingles(docs, 2, "text", "doc_id").distinct()
-    # r12: the cheap size aggregate (see lsh_jaccard_pairs) but NOT the
-    # int dictionary encoding — measured A/B (OPTIMIZATION_r12.md): this
-    # path's banded candidate set is small on realistic shingle corpora
-    # (bigram signatures collide far less than unigram ones), so the
-    # verify win cannot repay the encoder's two vocab jobs + per-arm
-    # mapping join (interleaved noop A/B at sf0.1: 4.36 s encoded vs
-    # 3.44 s strings; sf0.01: 4.24 vs 3.83). dict_encode_elements is a
-    # one-line flip here if a corpus's candidate regime ever inverts
-    # that trade (results are identical either way — the unigram route
-    # test proves the relabeling invariance).
-    sizes = doc_elems.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    doc_grams = doc_elems.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("g")
-    )
-    return _verify_jaccard_on_candidates(
-        cands, doc_grams, "g", threshold, docs.count(), broadcast_doc_limit,
-        sizes=sizes,
+    return lsh_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), 0.8, shingle=2
     )
 
 
@@ -1452,51 +1373,28 @@ def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     common token — orders of magnitude below the full inverted index on
     Zipfian vocabularies; the per-doc prefix is one row_number window.
     """
-    raw = load_table(spark, sf_dir, "documents")
-    n_docs = raw.count()
-    docs = spread_small(raw)
-    toks = tokenize(docs, "text", "doc_id").distinct()
+    toks, n_docs = _corpus_elements(spark, sf_dir)
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    dfreq = toks.groupBy("token").agg(F.count("*").alias("df"))
+    dfreq = toks.groupBy("elem").agg(F.count("*").alias("df"))
     pos = F.row_number().over(
-        W.partitionBy("doc_id").orderBy("df", "token")
+        W.partitionBy("doc_id").orderBy("df", "elem")
     )
     prefix_len = F.col("n") - F.floor(
         (4 * F.col("n") + 4).cast("double") / 5
     ).cast("long") + 1
     pref = (
         # vocab-sized: dfreq is one row per distinct token (model-sized)
-        toks.join(F.broadcast(dfreq), "token")
+        toks.join(F.broadcast(dfreq), "elem")
         .withColumn("pos", pos)
         .join(maybe_broadcast(sizes, n_docs), "doc_id")
         .filter(F.col("pos") <= prefix_len)
-        .select("doc_id", "token")
+        .select("doc_id", "elem")
     )
     cand = (
         pref.withColumnRenamed("doc_id", "id1")
-        .join(pref.withColumnRenamed("doc_id", "id2"), "token")
+        .join(pref.withColumnRenamed("doc_id", "id2"), "elem")
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .distinct()
     )
-    inter = (
-        cand.join(toks.withColumnRenamed("doc_id", "id1"), "id1")
-        .join(
-            toks.withColumnsRenamed({"doc_id": "id2"}),
-            ["id2", "token"],
-        )
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    # per-doc size tables are doc-count-sized: counted broadcast routing
-    s1 = sizes.withColumnsRenamed({"doc_id": "id1", "n": "n1"})
-    s2 = sizes.withColumnsRenamed({"doc_id": "id2", "n": "n2"})
-    jac = F.col("n_common").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("n_common")
-    )
-    return (
-        inter.join(maybe_broadcast(s1, n_docs), "id1")
-        .join(maybe_broadcast(s2, n_docs), "id2")
-        .filter(jac >= 0.8)
-        .select("id1", "id2", ratio(jac).alias("jaccard"))
-    )
+    return _jaccard_at(_set_overlap(toks, n_docs, cand), 0.8)

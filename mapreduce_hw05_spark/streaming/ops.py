@@ -579,20 +579,18 @@ def stream_near_dup_filter_foreachbatch(
     text_col: str,
     state_root: str,
     checkpoint_dir: str,
-    num_hashes: int = 128,
-    num_bands: int = 32,
-    threshold: float = 0.8,
     shingle: int = 1,
-    max_broadcast_index_docs: int | None = None,
 ):
     """Online near-dup ADMISSION filter: documents arrive in id order;
     a document is admitted iff NO earlier-id document seen so far
-    (admitted or not, this batch included) has token-set Jaccard ≥ the
-    threshold with it (``shingle >= 2`` switches both the signatures
-    AND the exact verify to word-shingle sets — the order-sensitive
-    measure) — the incremental form of the batch LSH dedup,
-    i.e. what an ingest pipeline runs so near-dups never enter the
-    corpus instead of being swept out afterwards.
+    (admitted or not, this batch included) has token-set Jaccard ≥ 0.8
+    with it (``shingle >= 2`` switches both the signatures AND the exact
+    verify to word-shingle sets — the order-sensitive measure) — the
+    incremental form of the batch LSH dedup
+    (``plans.similarity_queries.lsh_jaccard_pairs``: the same 128-hash /
+    32-band MinHash, ``doc_elements`` sets and ``set_jaccard``), i.e.
+    what an ingest pipeline runs so near-dups never enter the corpus
+    instead of being swept out afterwards.
 
     Per micro-batch: MinHash signatures → banded (id, band, bucket)
     rows appended to a PERSISTED LSH index (parquet, partitioned by
@@ -616,20 +614,18 @@ def stream_near_dup_filter_foreachbatch(
     so the broadcasts are bounded by candidate fan-out and batch size
     respectively, never the corpus. The routing past those bounds is
     IMPLEMENTED (r5): once the persisted index holds more than
-    ``max_broadcast_index_docs`` documents (counted from parquet
+    ``MAX_BROADCAST_TOKEN_DOCS`` documents (counted from parquet
     footers, no data scan — the conservative envelope for both pruned
     tables), the same verify joins run shuffled instead of broadcast —
     identical results, one extra exchange per side.
     """
     from mapreduce_hw05_spark.operators.similarity import (
-        MAX_BROADCAST_TOKEN_DOCS,
+        doc_elements,
         lsh_band_buckets,
+        maybe_broadcast,
         minhash_signatures,
+        set_jaccard,
     )
-
-    if max_broadcast_index_docs is None:
-        max_broadcast_index_docs = MAX_BROADCAST_TOKEN_DOCS
-    from mapreduce_hw05_spark.operators.text import tokenize
 
     bands_root = os.path.join(state_root, "bands")
     toks_root = os.path.join(state_root, "toks")
@@ -641,24 +637,12 @@ def stream_near_dup_filter_foreachbatch(
         spark = batch_df.sparkSession
         # pin the chunk: three jobs below must see one snapshot of it
         batch_df = batch_df.localCheckpoint()
-        sigs = minhash_signatures(
-            batch_df, id_col, text_col, num_hashes, shingle=shingle
-        )
-        bands = lsh_band_buckets(sigs, id_col, num_bands)
-        if shingle == 1:
-            units = tokenize(batch_df, text_col, id_col).select(
-                id_col, F.col("token").alias("unit")
-            )
-        else:
-            from mapreduce_hw05_spark.operators.text import word_shingles
-
-            units = word_shingles(batch_df, shingle, text_col, id_col).select(
-                id_col, F.col("shingle").alias("unit")
-            )
+        sigs = minhash_signatures(batch_df, id_col, text_col, shingle=shingle)
+        bands = lsh_band_buckets(sigs, id_col)
         toks = (
-            units.distinct()
+            doc_elements(batch_df, shingle, id_col, text_col)
             .groupBy(id_col)
-            .agg(F.sort_array(F.collect_list("unit")).alias("toks"))
+            .agg(F.sort_array(F.collect_list("elem")).alias("toks"))
         )
         bands.write.mode("overwrite").parquet(
             os.path.join(bands_root, f"b={batch_id}")
@@ -698,23 +682,20 @@ def stream_near_dup_filter_foreachbatch(
             spark.read.parquet(os.path.join(toks_root, f"b={batch_id}"))
             .withColumnsRenamed({id_col: "id2", "toks": "toks2"})
         )
-        n_common = F.size(F.array_intersect("toks1", "toks2"))
-        jac = n_common.cast("double") / (
-            F.size("toks1") + F.size("toks2") - n_common
+        jac = set_jaccard(
+            F.size(F.array_intersect("toks1", "toks2")),
+            F.size("toks1"),
+            F.size("toks2"),
         )
         # route the verify joins on the persisted index size (parquet
         # footers only): both pruned tables are subsets of the index,
         # so index-docs <= cap makes the broadcasts safe; past it the
         # same joins run shuffled with identical results
-        maybe_b = (
-            F.broadcast
-            if _footer_rows(toks_root) <= max_broadcast_index_docs
-            else (lambda df: df)
-        )
+        n_index = _footer_rows(toks_root)
         dropped = (
-            cands.join(maybe_b(d1), "id1")
-            .join(maybe_b(d2), "id2")
-            .filter(jac >= threshold)
+            cands.join(maybe_broadcast(d1, n_index), "id1")
+            .join(maybe_broadcast(d2, n_index), "id2")
+            .filter(jac >= 0.8)
             .select(F.col("id2").alias(id_col))
             .distinct()
         )

@@ -46,6 +46,20 @@ def oracle():
     con.close()
 
 
+def count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a fresh job tag."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"count-jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    return len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     """Canonical form: columns sorted by name, rows sorted by all columns,
     timestamps as int64 epochs, floats left as float64.

@@ -995,10 +995,10 @@ def test_compact_parquet_dir_recovers_crash_remnants(spark, tmp_path):
     load_table(spark, SF_DIR_MED, "orders").repartition(8).write.parquet(path)
     n_rows = spark.read.parquet(path).count()
     # crash: dir renamed aside, fully-written tmp not yet renamed in
-    os.rename(path, path + ".compact-tmp")
+    os.rename(path, path + ".next")
     compact_parquet_dir(spark, path, target_bytes=1 << 30)
     assert spark.read.parquet(path).count() == n_rows
-    assert not os.path.exists(path + ".compact-tmp")
+    assert not os.path.exists(path + ".next")
 
 
 def test_zorder_incremental_tightens_envelopes(spark, tmp_path):
@@ -2498,3 +2498,29 @@ def test_weighted_quantiles_two_pass_matches_bruteforce(spark):
                     want[(k, qname)] = (tw, v)
                     break
     assert got == want
+
+
+def test_weighted_two_pass_jobs_do_not_depend_on_history(spark):
+    """Each two-pass call costs the same Spark jobs the first and the
+    second time on the same input, whichever of the two ran before: the
+    operators leave nothing in the session's cache that a later call
+    could reuse."""
+    from mapreduce_hw05_spark.operators.quantiles import (
+        weighted_median_two_pass,
+        weighted_quantiles_two_pass,
+    )
+    from tests.conftest import count_jobs
+
+    rows = [(k, (37 * i) % 101, 1 + i % 4, i) for k in range(3) for i in range(50)]
+    df = spark.createDataFrame(rows, "k long, v long, w long, tb long")
+
+    def jobs(fn):
+        return count_jobs(
+            spark,
+            lambda: fn(df, key="k", val="v", weight="w", tiebreak="tb").collect(),
+        )
+
+    fns = (weighted_median_two_pass, weighted_quantiles_two_pass)
+    first = [jobs(fn) for fn in fns]
+    second = [jobs(fn) for fn in fns]
+    assert first == second

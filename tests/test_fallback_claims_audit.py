@@ -70,20 +70,17 @@ REGISTRY: dict[tuple[str, str], str | None] = {
     ("plans/similarity_queries.py", "lsh_jaccard_pairs"): (
         "_verify_jaccard_on_candidates"
     ),
-    ("plans/similarity_queries.py", "shingle_lsh_jaccard_pairs"): (
-        "_verify_jaccard_on_candidates"
-    ),
     # partition-count default, not a broadcast gate: chunks without a
     # total_rows attribute get a constant partition count
     ("streaming/replay.py", "FileReplay.__init__"): "total_rows",
     ("streaming/ops.py", "enrich_with_users"): "maybe_broadcast",
     ("streaming/ops.py", "stream_near_dup_filter_foreachbatch"): (
-        "max_broadcast_index_docs"
+        "MAX_BROADCAST_TOKEN_DOCS"
     ),
     (
         "streaming/ops.py",
         "stream_near_dup_filter_foreachbatch.apply_batch",
-    ): "max_broadcast_index_docs",
+    ): "maybe_broadcast",
     # sketch sink: past MAX_DRIVER_STATE_KEYS persisted keys the state
     # merge routes through Spark (counted from parquet footers)
     ("streaming/ops.py", "<module>"): "MAX_DRIVER_STATE_KEYS",

@@ -5,6 +5,7 @@ bands → s-curve threshold ≈ 0.4, well under the 0.8 target).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_hw05_spark.operators.similarity import (
@@ -285,10 +286,52 @@ def test_semantic_dedup_empty_input(spark):
     assert out == []
 
 
-def test_lsh_verify_shuffled_route_matches_broadcast(spark):
-    """r5: the verify-join broadcast gate is IMPLEMENTED routing, not
-    prose — forcing the shuffled path (broadcast_doc_limit=0) must give
-    the exact same pair set as the default broadcast path."""
+@pytest.mark.parametrize("shingle", [1, 2])
+def test_near_dup_route_jobs(spark, tmp_path, shingle):
+    """Spark jobs of the shared near-dup routes at sf0.001: one
+    ``lsh_jaccard_pairs`` call plus its collect, and each stream-filter
+    ``apply_batch`` (first batch, second batch, re-delivered id). The
+    unigram route pays the vocab gate's count and the encoder's
+    checkpoint; banding runs no job of its own."""
+    from mapreduce_hw05_spark.plans.similarity_queries import (
+        lsh_jaccard_pairs,
+    )
+    from mapreduce_hw05_spark.streaming import ops
+    from tests.conftest import count_jobs
+    from tests.test_streaming import _capture_foreach_batch
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    batch = count_jobs(
+        spark, lambda: lsh_jaccard_pairs(docs, 0.8, shingle=shingle).collect()
+    )
+    ordered = docs.orderBy("doc_id").localCheckpoint()
+    n = ordered.count()
+    # one partition per chunk keeps isEmpty at one job on any core count
+    chunks = [
+        c.coalesce(1)
+        for c in (ordered.limit(n // 2), ordered.subtract(ordered.limit(n // 2)))
+    ]
+    apply_batch = _capture_foreach_batch(
+        ops.stream_near_dup_filter_foreachbatch,
+        "doc_id", "text", str(tmp_path / "state"), str(tmp_path / "ckpt"),
+        shingle=shingle,
+    )
+    stream = tuple(
+        count_jobs(spark, lambda: apply_batch(chunks[b], b)) for b in (0, 1, 1)
+    )
+    assert (batch, stream) == ({1: 20, 2: 11}[shingle], (22, 26, 23))
+
+
+@pytest.mark.parametrize("shingle", [1, 2])
+def test_lsh_verify_shuffled_route_matches_broadcast(
+    spark, monkeypatch, shingle
+):
+    """r5/r6: the verify-join broadcast gate is IMPLEMENTED routing, not
+    prose — forcing the shuffled path (MAX_BROADCAST_TOKEN_DOCS = 0)
+    must give the exact same pair set as the default broadcast path, for
+    token sets and word-bigram sets alike (VERDICT r5 item 2: the
+    shingle verify once re-grew an ungated broadcast)."""
+    from mapreduce_hw05_spark.operators import similarity as sim
     from mapreduce_hw05_spark.plans.similarity_queries import (
         lsh_jaccard_pairs,
     )
@@ -296,21 +339,27 @@ def test_lsh_verify_shuffled_route_matches_broadcast(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     want = {
         (r["id1"], r["id2"], r["jaccard"])
-        for r in lsh_jaccard_pairs(docs, 0.8).collect()
+        for r in lsh_jaccard_pairs(docs, 0.8, shingle=shingle).collect()
     }
+    monkeypatch.setattr(sim, "MAX_BROADCAST_TOKEN_DOCS", 0)
     got = {
         (r["id1"], r["id2"], r["jaccard"])
-        for r in lsh_jaccard_pairs(docs, 0.8, broadcast_doc_limit=0).collect()
+        for r in lsh_jaccard_pairs(docs, 0.8, shingle=shingle).collect()
     }
-    assert got == want and want  # non-empty on this fixture
+    assert got == want
+    if shingle == 1:
+        assert want  # non-empty on this fixture
 
 
-def test_stream_near_dup_shuffled_route_matches_broadcast(spark, tmp_path):
+def test_stream_near_dup_shuffled_route_matches_broadcast(
+    spark, tmp_path, monkeypatch
+):
     """Same routing check for the streaming admission filter: with the
     index-size gate forced to 0 (every batch takes the shuffled verify
     path), the admitted set must equal the batch answer."""
     import os
 
+    from mapreduce_hw05_spark.operators import similarity as sim
     from mapreduce_hw05_spark.plans.similarity_queries import (
         lsh_jaccard_pairs,
     )
@@ -331,8 +380,8 @@ def test_stream_near_dup_shuffled_route_matches_broadcast(spark, tmp_path):
     apply_batch = _capture_foreach_batch(
         ops.stream_near_dup_filter_foreachbatch,
         "doc_id", "text", state_root, str(tmp_path / "ckpt"),
-        max_broadcast_index_docs=0,
     )
+    monkeypatch.setattr(sim, "MAX_BROADCAST_TOKEN_DOCS", 0)
     for batch_id, chunk in enumerate(chunks):
         apply_batch(chunk, batch_id)
     admitted = {
@@ -342,29 +391,6 @@ def test_stream_near_dup_shuffled_route_matches_broadcast(spark, tmp_path):
         ).collect()
     }
     assert admitted == expect
-
-
-def test_shingle_lsh_shuffled_route_matches_broadcast(spark):
-    """r6 (VERDICT r5 item 2): the shingle-LSH verify join was the one
-    ungated doc-count-sized broadcast left — it now routes through the
-    shared verify helper, and forcing the shuffled path must reproduce
-    the broadcast path's pair set exactly."""
-    from mapreduce_hw05_spark.plans.similarity_queries import (
-        shingle_lsh_jaccard_pairs,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    want = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in shingle_lsh_jaccard_pairs(docs, 0.8).collect()
-    }
-    got = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in shingle_lsh_jaccard_pairs(
-            docs, 0.8, broadcast_doc_limit=0
-        ).collect()
-    }
-    assert got == want
 
 
 def test_size_table_shuffled_route_matches_broadcast(spark, monkeypatch):
@@ -395,7 +421,7 @@ def test_dict_encoded_verify_matches_string_route(spark, monkeypatch):
     the gate forced to 0 (string arrays, the pre-r12 route) each
     encoder-routed contract's frame must be identical — Jaccard is
     invariant under the injective relabeling. (The shingle path keeps
-    the string route by measurement — see shingle_lsh_jaccard_pairs.)"""
+    the string route by measurement — see lsh_jaccard_pairs.)"""
     from mapreduce_hw05_spark.operators import similarity as sim
     from tests.conftest import compare_frames
 
@@ -453,9 +479,10 @@ def test_verify_size_prefilter_keeps_exact_tie_pair(spark):
         [(1, sorted(toks_small)), (2, sorted(toks_big))],
         "doc_id long, toks array<string>",
     )
+    sizes = spark.createDataFrame([(1, 7), (2, 51)], "doc_id long, sz long")
     cands = spark.createDataFrame([(1, 2)], "id1 long, id2 long")
     rows = _verify_jaccard_on_candidates(
-        cands, per_doc, "toks", threshold=7 / 51, n_docs=2
+        cands, per_doc, "toks", threshold=7 / 51, n_docs=2, sizes=sizes
     ).collect()
     assert [(r["id1"], r["id2"], r["jaccard"]) for r in rows] == [
         (1, 2, 0.137255)

@@ -51,7 +51,6 @@ BNLJ_ALLOWED = {
     "q_mutual_information",  # 1-row corpus-total build side
     "q_referential_integrity",  # 1-row total × 1-row orphan count (×4)
     "q_lift_deciles",      # 1-row grand-total build side
-    "q_weighted_percentiles_hist",  # ≤256-bucket profile × 3-row quantile spine
     "q_funnel_windowed",   # 1-row × 1-row × 1-row step counts
 }
 

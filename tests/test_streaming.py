@@ -732,21 +732,13 @@ def test_state_sink_jobs_per_batch(spark, tmp_path, sink):
     sinks run ``isEmpty`` plus the partial build and nothing else: their
     state IO is pyarrow, never a ``spark.read`` job. A replayed id costs
     only the ``isEmpty`` probe, the upsert's included."""
-    import uuid
+    from tests.conftest import count_jobs
 
-    sc = spark.sparkContext
-    tracker = sc._jsc.sc().statusTracker()
     b0, b1 = _kv_batches(spark)
     apply_batch = _kv_sink(sink, str(tmp_path / "state"), b0.schema)
 
     def jobs(batch, batch_id):
-        tag = f"jobs-{sink}-{uuid.uuid4().hex}"
-        sc.addJobTag(tag)
-        try:
-            apply_batch(batch, batch_id)
-        finally:
-            sc.removeJobTag(tag)
-        return len(tracker.getJobIdsForTag(tag))
+        return count_jobs(spark, lambda: apply_batch(batch, batch_id))
 
     got = (jobs(b0, 0), jobs(b1, 1), jobs(b1, 1), jobs(b0.limit(0), 2))
     if sink == "upsert":  # its merge plan's job count is Spark's own
